@@ -438,7 +438,7 @@ def _q_kg_mentions(spark, sf_dir):
     from cartography_spark.sources.docs_synth import exploded_spans, interleaved_documents
 
     return detect_mentions(
-        exploded_spans(interleaved_documents(spark, sf_dir)), impl="native"
+        exploded_spans(interleaved_documents(spark, sf_dir))
     ).select("doc_id", "span_idx", "mention", "mention_kind")
 
 
@@ -449,7 +449,7 @@ def _q_kg_entity_links(spark, sf_dir):
     from cartography_spark.sources.docs_synth import exploded_spans, interleaved_documents
 
     mentions = detect_mentions(
-        exploded_spans(interleaved_documents(spark, sf_dir)), impl="native"
+        exploded_spans(interleaved_documents(spark, sf_dir))
     )
     dims = identifier_dictionary(fixture_nodes(spark, sf_dir, T1))
     return link_mentions(mentions, dims).select(

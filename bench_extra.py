@@ -20,11 +20,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-
-def _steal() -> int:
-    with open("/proc/stat") as f:
-        vals = list(map(int, f.readline().split()[1:]))
-    return sum(vals[:8]), vals[7]
+from tools.steal import StealWindow  # noqa: E402
 
 
 def main():
@@ -56,13 +52,12 @@ def main():
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         for _ in range(repeats):
             spark.sparkContext.setJobDescription(f"bench_extra:{name}")
-            (c0, s0) = _steal()
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            t = round(time.time() - t0, 3)
-            (c1, s1) = _steal()
+            with StealWindow() as w:
+                t0 = time.time()
+                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                t = round(time.time() - t0, 3)
             samples.append(t)
-            steals.append(round(100.0 * (s1 - s0) / max(c1 - c0, 1), 2))
+            steals.append(round(100.0 * w.frac, 2))
             spark.sparkContext.setJobDescription(None)
         print(json.dumps({
             "query": name, "sf_dir": sf_dir, "samples": samples,

@@ -23,6 +23,10 @@ pipeline stage idempotently resumable: re-running a killed sync skips
 stages whose (stage, update_tag) checkpoint already committed
 (north_rule resumability).
 
+The two tables differ only in what a :class:`_Table` spec records (schema,
+partition column, MERGE key, fold's last-value columns); every write, merge,
+fold and read path below is written once over that spec.
+
 Parity notes vs the reference:
   * upsert == Neo4j MERGE by id with ``ON CREATE SET firstseen``
     (reference: cartography/graph/querybuilder.py:372-401); here a set-wise
@@ -45,15 +49,67 @@ import json
 import os
 import shutil
 import time
-from typing import Iterable, Mapping
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial, reduce
+from typing import Iterable, Mapping, NamedTuple
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from cartography_spark.core.loader import EDGES_SCHEMA, NODES_SCHEMA
 
 EDGE_KEY = ["src_id", "rel_label", "dst_id"]
+
+
+class _Table(NamedTuple):
+    """Everything the store does differently for the node and edge tables."""
+
+    name: str  # manifest key and data subdirectory
+    schema: StructType
+    part: str  # partition column: one label slice per value
+    key: list  # MERGE key
+    last: list  # non-key scalars a buffered fold takes from the last stage
+
+    @property
+    def cols(self) -> list[str]:
+        return [f.name for f in self.schema.fields]
+
+
+NODES = _Table("nodes", NODES_SCHEMA, "label", ["label", "id"], ["extra_labels"])
+EDGES = _Table("edges", EDGES_SCHEMA, "rel_label", EDGE_KEY, ["src_label", "dst_label"])
+TABLES = (NODES, EDGES)
+
+
+def _run_all(actions: list) -> list:
+    """Run independent Spark actions, concurrently when there are several:
+    overlapping them hides per-job driver latency, so the step costs its
+    slowest job rather than the sum."""
+    if len(actions) <= 1:
+        return [a() for a in actions]
+    with ThreadPoolExecutor(max_workers=min(16, len(actions))) as ex:
+        return list(ex.map(lambda a: a(), actions))
+
+
+def _per_table(fn, nodes, edges) -> list:
+    """``[fn(NODES, nodes), fn(EDGES, edges)]`` with None for a None frame;
+    when both frames are given their jobs overlap (see :func:`_run_all`)."""
+    frames = (nodes, edges)
+    done = iter(
+        _run_all([partial(fn, t, df) for t, df in zip(TABLES, frames) if df is not None])
+    )
+    return [None if df is None else next(done) for df in frames]
+
+
+def _union(dfs: list) -> DataFrame:
+    return reduce(lambda a, b: a.unionByName(b), dfs)
+
+
+def _checkpoint_all(groups: list) -> list:
+    """localCheckpoint the union of each group of plans; the groups are
+    independent jobs, so they run concurrently (see :func:`_run_all`)."""
+    return _run_all([lambda g=g: _union(g).localCheckpoint(eager=True) for g in groups])
 
 
 def _merge_props(old_col, new_col):
@@ -128,52 +184,47 @@ class GraphStore:
         with open(p) as f:
             return json.load(f)
 
-    def _read(
-        self,
-        sub: str,
-        schema,
-        version: int | None = None,
-        labels: Iterable[str] | None = None,
-    ) -> DataFrame:
-        man = self._manifest(self._current_version() if version is None else version)
-        entries = man.get(sub, {})
-        if labels is not None:
-            wanted = set(labels)
-            entries = {k: v for k, v in entries.items() if k in wanted}
-        paths = [os.path.join(self.root, e["path"]) for e in entries.values()]
+    def _scan(self, t: _Table, paths: list[str]) -> DataFrame:
         if not paths:
-            return self.spark.createDataFrame([], schema)
+            return self.spark.createDataFrame([], t.schema)
         # Explicit schema pins column order; the label column is stored in the
         # data files (the _label partition dir is a routing duplicate), so a
         # direct leaf-dir read needs no partition discovery.
-        df = self.spark.read.schema(schema).parquet(*paths)
-        return df.select(*[f.name for f in schema.fields])
+        return self.spark.read.schema(t.schema).parquet(*paths).select(*t.cols)
+
+    def _read(
+        self, t: _Table, version: int | None = None, labels: Iterable[str] | None = None
+    ) -> DataFrame:
+        man = self._manifest(self._current_version() if version is None else version)
+        entries = man.get(t.name, {})
+        if labels is not None:
+            wanted = set(labels)
+            entries = {k: v for k, v in entries.items() if k in wanted}
+        return self._scan(t, [os.path.join(self.root, e["path"]) for e in entries.values()])
 
     def nodes(self, version: int | None = None, labels: Iterable[str] | None = None) -> DataFrame:
         """Node table; pass ``labels`` to physically prune to those slices."""
-        return self._read("nodes", NODES_SCHEMA, version, labels)
+        return self._read(NODES, version, labels)
 
     def edges(
         self, version: int | None = None, rel_labels: Iterable[str] | None = None
     ) -> DataFrame:
         """Edge table; pass ``rel_labels`` to physically prune to those slices."""
-        return self._read("edges", EDGES_SCHEMA, version, rel_labels)
+        return self._read(EDGES, version, rel_labels)
 
     # ----- write path ---------------------------------------------------------
 
-    def _write_slices(self, df: DataFrame, sub: str, version: int, part_col: str) -> dict:
-        """Write df into data/g{version}/{sub}/_label=<v>/ slices.
+    def _write_slices(self, t: _Table, df: DataFrame, version: int) -> dict:
+        """Write df into data/g{version}/{table}/_label=<v>/ slices.
 
-        Returns {label: {"path": relpath, "rows": n}}.  Row counts come from
-        a partition-column-only scan of the fresh files (footer metadata —
-        no data pages read).
+        Returns {label: {"path": relpath, "rows": n}}.
         """
-        gen_rel = os.path.join("data", f"g{version}", sub)
+        gen_rel = os.path.join("data", f"g{version}", t.name)
         gen_abs = os.path.join(self.root, gen_rel)
         (
-            df.withColumn("_label", F.col(part_col))
-            .repartition(self.write_partitions, part_col, df.columns[0])
-            .sortWithinPartitions(part_col)
+            df.withColumn("_label", F.col(t.part))
+            .repartition(self.write_partitions, t.part, df.columns[0])
+            .sortWithinPartitions(t.part)
             .write.mode("overwrite")
             .partitionBy("_label")
             .parquet(gen_abs)
@@ -206,10 +257,8 @@ class GraphStore:
 
     def _publish(
         self,
-        node_slices: dict | None,
-        edge_slices: dict | None,
-        touched_node_labels: Iterable[str] | None,
-        touched_rel_labels: Iterable[str] | None,
+        slices: list,
+        touched: list,
         version: int,
         stage: str,
         update_tag: int,
@@ -217,27 +266,24 @@ class GraphStore:
     ) -> int:
         """Assemble + atomically publish manifest v{version}.
 
-        ``touched_*`` of None means full replace for that table (the new
-        slices are the whole table); otherwise parent pointers carry forward
-        for untouched labels and touched labels absent from the new slices
-        (fully deleted) drop out.
+        ``slices`` and ``touched`` hold one entry per table.  A touched set
+        of None means full replace for that table (the new slices are the
+        whole table); otherwise parent pointers carry forward for untouched
+        labels and touched labels absent from the new slices (fully deleted)
+        drop out.
         """
         prev = self._current_version()
         parent = self._manifest(prev)
-
-        def _assemble(new_slices, touched, table):
-            if touched is None:
-                return dict(new_slices or {})
-            out = {
-                k: v
-                for k, v in parent.get(table, {}).items()
-                if k not in set(touched)
-            }
-            out.update(new_slices or {})
-            return out
-
-        nodes_man = _assemble(node_slices, touched_node_labels, "nodes")
-        edges_man = _assemble(edge_slices, touched_rel_labels, "edges")
+        slices = [s or {} for s in slices]
+        man = {}
+        for t, new, labels in zip(TABLES, slices, touched):
+            if labels is None:
+                man[t.name] = dict(new)
+            else:
+                labels = set(labels)
+                man[t.name] = {k: v for k, v in parent.get(t.name, {}).items() if k not in labels}
+                man[t.name].update(new)
+        node_slices, edge_slices = slices
 
         stages = dict(parent.get("stages", {}))
         # ``stage`` may be a list: a grouped flush records EVERY member
@@ -246,8 +292,8 @@ class GraphStore:
             stages[s] = {
                 "update_tag": int(update_tag),
                 "version": version,
-                "labels": sorted((node_slices or {}).keys()),
-                "rels": sorted((edge_slices or {}).keys()),
+                "labels": sorted(node_slices),
+                "rels": sorted(edge_slices),
             }
         meta = {
             "version": version,
@@ -255,13 +301,12 @@ class GraphStore:
             "stage": stage if isinstance(stage, str) else ",".join(stage),
             "update_tag": int(update_tag),
             "committed_at": time.time(),
-            "nodes": nodes_man,
-            "edges": edges_man,
+            **man,
             "metrics": {
-                "node_rows": sum(e["rows"] for e in nodes_man.values()),
-                "edge_rows": sum(e["rows"] for e in edges_man.values()),
-                "labels_written": len(node_slices or {}),
-                "rels_written": len(edge_slices or {}),
+                "node_rows": sum(e["rows"] for e in man["nodes"].values()),
+                "edge_rows": sum(e["rows"] for e in man["edges"].values()),
+                "labels_written": len(node_slices),
+                "rels_written": len(edge_slices),
                 **(dict(metrics) if metrics else {}),
             },
             "stages": stages,
@@ -286,8 +331,8 @@ class GraphStore:
         referenced = set()
         for v in keep:
             man = self._manifest(v)
-            for table in ("nodes", "edges"):
-                for e in man.get(table, {}).values():
+            for t in TABLES:
+                for e in man.get(t.name, {}).values():
                     referenced.add(os.path.normpath(e["path"]))
         data = os.path.join(self.root, "data")
         if not os.path.isdir(data):
@@ -295,14 +340,14 @@ class GraphStore:
         for gen in os.listdir(data):
             gen_dir = os.path.join(data, gen)
             live = False
-            for sub in ("nodes", "edges"):
-                sub_dir = os.path.join(gen_dir, sub)
+            for t in TABLES:
+                sub_dir = os.path.join(gen_dir, t.name)
                 if not os.path.isdir(sub_dir):
                     continue
                 for leaf in os.listdir(sub_dir):
                     if not leaf.startswith("_label="):
                         continue
-                    rel = os.path.normpath(os.path.join("data", gen, sub, leaf))
+                    rel = os.path.normpath(os.path.join("data", gen, t.name, leaf))
                     if rel in referenced:
                         live = True
                     else:
@@ -331,59 +376,27 @@ class GraphStore:
         Used by the bulk builder and full-snapshot passes; incremental
         callers use :meth:`commit_partial` / :meth:`upsert` / :meth:`delete`.
         """
-        v = self._next_version()
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            fut_n = ex.submit(self._write_slices, nodes, "nodes", v, "label")
-            fut_e = ex.submit(self._write_slices, edges, "edges", v, "rel_label")
-            node_slices = fut_n.result()
-            edge_slices = fut_e.result()
-        return self._publish(
-            node_slices, edge_slices, None, None, v, stage, update_tag, metrics
-        )
+        return self.commit_partial(nodes, edges, None, None, stage, update_tag, metrics)
 
     def commit_partial(
         self,
         nodes: DataFrame | None,
         edges: DataFrame | None,
-        touched_node_labels: Iterable[str],
-        touched_rel_labels: Iterable[str],
+        touched_node_labels: Iterable[str] | None,
+        touched_rel_labels: Iterable[str] | None,
         stage: str,
         update_tag: int,
         metrics: Mapping[str, object] | None = None,
     ) -> int:
         """Replace only the given labels' slices; everything else carries
         forward by manifest pointer (the Iceberg-MERGE cost model: I/O is
-        O(touched partitions), not O(table))."""
+        O(touched partitions), not O(table)).  Touched labels of None make
+        that table a full replace.  The two slice writes overlap, so the
+        commit's critical path is the larger table's write, not the sum."""
         v = self._next_version()
-        if nodes is not None and edges is not None:
-            # independent jobs: overlap the two slice writes (cf. upsert's
-            # staging overlap) — the commit critical path becomes the larger
-            # table's write instead of their sum
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as ex:
-                fut_n = ex.submit(self._write_slices, nodes, "nodes", v, "label")
-                fut_e = ex.submit(self._write_slices, edges, "edges", v, "rel_label")
-                node_slices = fut_n.result()
-                edge_slices = fut_e.result()
-        else:
-            node_slices = (
-                self._write_slices(nodes, "nodes", v, "label") if nodes is not None else {}
-            )
-            edge_slices = (
-                self._write_slices(edges, "edges", v, "rel_label") if edges is not None else {}
-            )
+        slices = _per_table(lambda t, df: self._write_slices(t, df, v), nodes, edges)
         return self._publish(
-            node_slices,
-            edge_slices,
-            touched_node_labels,
-            touched_rel_labels,
-            v,
-            stage,
-            update_tag,
-            metrics,
+            slices, [touched_node_labels, touched_rel_labels], v, stage, update_tag, metrics
         )
 
     # ----- resumable stage checkpoints --------------------------------------
@@ -403,7 +416,7 @@ class GraphStore:
 
     # ----- MERGE semantics ---------------------------------------------------
 
-    def _stage_batch(self, df: DataFrame, sub: str, schema, part_col: str):
+    def _stage_batch(self, t: _Table, df: DataFrame):
         """Materialize the incoming batch to a staging dir, partitioned by
         label; returns (staged_df, touched_labels).
 
@@ -417,23 +430,17 @@ class GraphStore:
         listing — no distinct-collect job.  Staging files are reclaimed by
         _gc after publish.
         """
-        path = os.path.join(self.root, "data", "_staging", sub)
+        path = os.path.join(self.root, "data", "_staging", t.name)
         (
-            df.withColumn("_label", F.col(part_col))
+            df.withColumn("_label", F.col(t.part))
             .write.mode("overwrite")
             .partitionBy("_label")
             .parquet(path)
         )
         leaves = [d for d in os.listdir(path) if d.startswith("_label=")]
-        labels = [unquote(d[7:]) for d in leaves]
-        if not labels:
-            return self.spark.createDataFrame([], schema), []
-        # leaf-dir read (as _read): no partition discovery, explicit schema;
-        # the label column is stored in the data files themselves.
-        staged = self.spark.read.schema(schema).parquet(
-            *[os.path.join(path, d) for d in leaves]
-        )
-        return staged.select(*[f.name for f in schema.fields]), labels
+        return self._scan(t, [os.path.join(path, d) for d in leaves]), [
+            unquote(d[7:]) for d in leaves
+        ]
 
     def upsert(
         self,
@@ -460,85 +467,31 @@ class GraphStore:
             # written partition dirs).  Halves the write I/O of a cold bulk
             # load; identical rows to the merge path (firstseen resolves to
             # coalesce(NULL, tag) = tag for every row).
-            v = self._next_version()
-            node_slices = edge_slices = {}
             fs = F.coalesce(F.col("firstseen"), F.lit(int(update_tag)))
-            nn = ne = None
-            if new_nodes is not None:
-                nn = new_nodes.withColumn("firstseen", fs).select(
-                    *[f.name for f in NODES_SCHEMA.fields]
-                )
-            if new_edges is not None:
-                ne = new_edges.withColumn("firstseen", fs).select(
-                    *[f.name for f in EDGES_SCHEMA.fields]
-                )
-            if nn is not None and ne is not None:
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=2) as ex:
-                    fut_n = ex.submit(self._write_slices, nn, "nodes", v, "label")
-                    fut_e = ex.submit(self._write_slices, ne, "edges", v, "rel_label")
-                    node_slices = fut_n.result()
-                    edge_slices = fut_e.result()
-            elif nn is not None:
-                node_slices = self._write_slices(nn, "nodes", v, "label")
-            elif ne is not None:
-                edge_slices = self._write_slices(ne, "edges", v, "rel_label")
-            return self._publish(
-                node_slices,
-                edge_slices,
-                sorted(node_slices),
-                sorted(edge_slices),
-                v,
-                stage,
-                update_tag,
-                metrics,
-            )
-
-        touched_labels: list[str] = []
-        touched_rels: list[str] = []
-        nodes_out = edges_out = None
+            rows = [
+                None if df is None else df.withColumn("firstseen", fs).select(*t.cols)
+                for t, df in zip(TABLES, (new_nodes, new_edges))
+            ]
+            return self.commit_partial(*rows, None, None, stage, update_tag, metrics)
 
         # The two staging writes are independent Spark jobs: overlap them so
         # the commit pays max(nodes, edges) staging latency, not the sum
         # (the round-4 profile showed the serial write+read inside commit as
         # a top T2 cost).  Merge-plan construction is driver-only and cheap;
         # only the staging ACTIONS run in the pool.
-        if new_nodes is not None and new_edges is not None:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as ex:
-                fut_n = ex.submit(
-                    self._stage_batch, new_nodes, "nodes", NODES_SCHEMA, "label"
+        out, touched = [], []
+        for t, staged in zip(TABLES, _per_table(self._stage_batch, new_nodes, new_edges)):
+            new, labels = staged or (None, [])
+            touched.append(labels)
+            out.append(
+                None
+                if new is None
+                else self._merge(
+                    t, self._read(t, labels=labels), new, update_tag,
+                    old_rows=self.committed_rows(t.name, labels),
                 )
-                fut_e = ex.submit(
-                    self._stage_batch, new_edges, "edges", EDGES_SCHEMA, "rel_label"
-                )
-                new_nodes, touched_labels = fut_n.result()
-                new_edges, touched_rels = fut_e.result()
-        elif new_nodes is not None:
-            new_nodes, touched_labels = self._stage_batch(
-                new_nodes, "nodes", NODES_SCHEMA, "label"
             )
-        elif new_edges is not None:
-            new_edges, touched_rels = self._stage_batch(
-                new_edges, "edges", EDGES_SCHEMA, "rel_label"
-            )
-
-        if new_nodes is not None:
-            nodes_out = self.merge_nodes(
-                self.nodes(labels=touched_labels), new_nodes, update_tag,
-                old_rows=self.committed_rows("nodes", touched_labels),
-            )
-        if new_edges is not None:
-            edges_out = self.merge_edges(
-                self.edges(rel_labels=touched_rels), new_edges, update_tag,
-                old_rows=self.committed_rows("edges", touched_rels),
-            )
-
-        return self.commit_partial(
-            nodes_out, edges_out, touched_labels, touched_rels, stage, update_tag, metrics
-        )
+        return self.commit_partial(*out, *touched, stage, update_tag, metrics)
 
     # Committed-side row count (manifest stats, no Spark job) above which the
     # MERGE plans switch to the semi-join shape that never shuffles the
@@ -550,17 +503,18 @@ class GraphStore:
     # batch plan buys never sorting/shuffling a 10^12-row table.
     SEMI_MERGE_MIN_ROWS = 5_000_000
 
-    def merge_nodes(
+    def _merge(
         self,
+        t: _Table,
         old: DataFrame,
         new: DataFrame,
         update_tag: int,
         old_rows: int | None = None,
     ) -> DataFrame:
-        """Pure MERGE plan over two node frames: matched rows keep existing
-        firstseen and merge props per-key; unmatched old rows pass through.
-        Shared by the commit path (over staged files) and the buffered sync
-        store's read views (over unexecuted batch plans).
+        """Pure MERGE plan over two frames of table ``t``: matched rows keep
+        existing firstseen and merge props per-key; unmatched old rows pass
+        through.  Shared by the commit path (over staged files) and the
+        buffered sync store's read views (over unexecuted batch plans).
 
         Join shape is adaptive on ``old_rows`` (the committed side's manifest
         row count — exact, driver-side, no job):
@@ -581,64 +535,29 @@ class GraphStore:
           side and forces a full sort-merge shuffle per read view.
         """
         if old_rows is not None and old_rows >= self.SEMI_MERGE_MIN_ROWS:
-            new_keys = new.select("label", "id")
-            old_side = old.join(new_keys, ["label", "id"], "left_semi")
+            old_side = old.join(new.select(*t.key), t.key, "left_semi")
         else:
             old_side = old
         old_keys = old_side.select(
-            F.col("label").alias("_l"),
-            F.col("id").alias("_i"),
+            *[F.col(k).alias(f"_{k}") for k in t.key],
             F.col("firstseen").alias("_fs"),
             F.col("props").alias("_op"),
         )
+        cond = reduce(lambda a, b: a & b, [new[k] == old_keys[f"_{k}"] for k in t.key])
         merged_new = (
-            new.join(
-                old_keys,
-                (new["label"] == old_keys["_l"]) & (new["id"] == old_keys["_i"]),
-                "left",
-            )
+            new.join(old_keys, cond, "left")
             .withColumn("firstseen", F.coalesce(F.col("_fs"), F.lit(int(update_tag))))
             .withColumn("props", _merge_props(F.col("_op"), new["props"]))
-            .drop("_l", "_i", "_fs", "_op")
-            .select(*[f.name for f in NODES_SCHEMA.fields])
+            .select(*t.cols)
         )
-        untouched = old.join(new.select("label", "id"), ["label", "id"], "left_anti")
+        untouched = old.join(new.select(*t.key), t.key, "left_anti")
         return untouched.unionByName(merged_new)
 
-    def merge_edges(
-        self,
-        old: DataFrame,
-        new: DataFrame,
-        update_tag: int,
-        old_rows: int | None = None,
-    ) -> DataFrame:
-        """Pure MERGE plan over two edge frames (see :meth:`merge_nodes` for
-        the adaptive join shape: direct under small committed slices,
-        semi-restricted — committed side streamed, never shuffled — above
-        SEMI_MERGE_MIN_ROWS)."""
-        if old_rows is not None and old_rows >= self.SEMI_MERGE_MIN_ROWS:
-            old_side = old.join(new.select(*EDGE_KEY), EDGE_KEY, "left_semi")
-        else:
-            old_side = old
-        old_e = old_side.select(
-            *[F.col(k).alias(f"_{k}") for k in EDGE_KEY],
-            F.col("firstseen").alias("_fs"),
-            F.col("props").alias("_op"),
-        )
-        cond = (
-            (new["src_id"] == old_e["_src_id"])
-            & (new["rel_label"] == old_e["_rel_label"])
-            & (new["dst_id"] == old_e["_dst_id"])
-        )
-        merged_new = (
-            new.join(old_e, cond, "left")
-            .withColumn("firstseen", F.coalesce(F.col("_fs"), F.lit(int(update_tag))))
-            .withColumn("props", _merge_props(F.col("_op"), new["props"]))
-            .drop("_src_id", "_rel_label", "_dst_id", "_fs", "_op")
-            .select(*[f.name for f in EDGES_SCHEMA.fields])
-        )
-        untouched = old.join(new.select(*EDGE_KEY), EDGE_KEY, "left_anti")
-        return untouched.unionByName(merged_new)
+    def merge_nodes(self, old, new, update_tag: int, old_rows: int | None = None) -> DataFrame:
+        return self._merge(NODES, old, new, update_tag, old_rows)
+
+    def merge_edges(self, old, new, update_tag: int, old_rows: int | None = None) -> DataFrame:
+        return self._merge(EDGES, old, new, update_tag, old_rows)
 
     def delete(
         self,
@@ -751,48 +670,43 @@ _PROPS_FOLD = (
 _SEQ_CMP = "(l, r) -> CASE WHEN l._seq < r._seq THEN -1 WHEN l._seq > r._seq THEN 1 ELSE 0 END"
 
 
-def _fold_batches(dfs, key_cols: list[str], last_cols: list[str], out_cols: list[str]) -> DataFrame:
-    """Combine per-stage batches into one batch with sequential-upsert
-    semantics: for a key written by several stages, props fold per-key in
-    stage order and scalar columns take the LAST stage's value (the reference
-    applies MERGE statements sequentially; this reproduces that composition
-    in a single shuffle).  Each input batch is assumed key-unique, which the
-    compilers guarantee (compile_nodes dedupes; edge builders dropDuplicates).
+def _stamp(df: DataFrame, seq: int) -> DataFrame:
+    return df.selectExpr("*", f"CAST({seq} AS INT) AS _seq")
+
+
+def _fold(t: _Table, parts: list) -> DataFrame:
+    """Combine ``_seq``-stamped per-stage batches of table ``t`` into one
+    batch with sequential-upsert semantics: for a key written by several
+    stages, props fold per-key in stage order and scalar columns take the
+    LAST stage's value (the reference applies MERGE statements sequentially;
+    this reproduces that composition in a single shuffle).  Each input batch
+    is assumed key-unique, which the compilers guarantee (compile_nodes
+    dedupes; edge builders dropDuplicates).
     """
-    parts = [df.selectExpr("*", f"CAST({i} AS INT) AS _seq") for i, df in enumerate(dfs)]
-    return _fold_stamped(parts, key_cols, last_cols, out_cols)
-
-
-def _fold_stamped(parts, key_cols: list[str], last_cols: list[str], out_cols: list[str]) -> DataFrame:
-    """:func:`_fold_batches` body over frames that already carry their
-    sequential ``_seq`` stamp — lets the flush path group pre-stamped batch
-    plans into chunk checkpoints without losing stage ordering."""
-    u = parts[0]
-    for p in parts[1:]:
-        u = u.unionByName(p)
-    struct_cols = ", ".join(["_seq", "props"] + last_cols)
-    g = (
-        u.selectExpr(*key_cols, f"struct({struct_cols}) AS _row", "lastupdated")
-        .groupBy(*key_cols)
+    struct_cols = ", ".join(["_seq", "props", *t.last])
+    return (
+        _union(parts)
+        .selectExpr(*t.key, f"struct({struct_cols}) AS _row", "lastupdated")
+        .groupBy(*t.key)
         .agg(
             F.expr(f"array_sort(collect_list(_row), {_SEQ_CMP})").alias("_rs"),
             F.expr("max(lastupdated)").alias("lastupdated"),
         )
         .selectExpr(
-            *key_cols,
+            *t.key,
             f"{_PROPS_FOLD} AS _mp",
-            *[f"element_at(_rs, -1).{c} AS {c}" for c in last_cols],
+            *[f"element_at(_rs, -1).{c} AS {c}" for c in t.last],
             "lastupdated",
         )
         .selectExpr(
-            *key_cols,
-            f"IF(size(_mp) > 0, _mp, CAST(NULL AS MAP<STRING,STRING>)) AS props",
-            *last_cols,
+            *t.key,
+            "IF(size(_mp) > 0, _mp, CAST(NULL AS MAP<STRING,STRING>)) AS props",
+            *t.last,
             "CAST(NULL AS BIGINT) AS firstseen",
             "lastupdated",
         )
+        .select(*t.cols)
     )
-    return g.select(*out_cols)
 
 
 class BufferedSyncStore:
@@ -811,9 +725,9 @@ class BufferedSyncStore:
 
     Reads stay exact WITHOUT flushing: :meth:`nodes`/:meth:`edges` return a
     lazy MERGE view of (committed slices x folded buffered batches) built by
-    the same ``merge_nodes``/``merge_edges`` plans the commit path uses, so
-    a stage that joins against "existing" nodes (trust stubs, SAML, edge
-    target matching) sees byte-identical rows to the sequential-commit path.
+    the same ``GraphStore._merge`` plan the commit path uses, so a stage
+    that joins against "existing" nodes (trust stubs, SAML, edge target
+    matching) sees byte-identical rows to the sequential-commit path.
     Read views are LABEL-PRUNED (see :meth:`_pending_view`): a read for
     labels L folds only the buffered batches whose statically-declared label
     sets (:class:`~cartography_spark.core.loader.LabeledFrame`) intersect L,
@@ -821,7 +735,7 @@ class BufferedSyncStore:
 
     Semantics preserved exactly:
       * Intra-group batches touching the same key compose via
-        :func:`_fold_batches` — identical rows to sequential upserts.
+        :func:`_fold` — identical rows to sequential upserts.
       * Every member stage is checkpointed in the flush's manifest, so a
         resumed run skips each of them individually; a crash before the
         flush re-runs the whole group (upsert is a MERGE — idempotent).
@@ -840,6 +754,14 @@ class BufferedSyncStore:
         "committed_rows",
     }
 
+    # Never-read batches are materialized at flush in UNION CHUNKS of this
+    # many plans per checkpoint job: per-batch jobs pay ~0.3-0.7s of fixed
+    # scheduling latency each (~125 never-read batches in a full sync), while
+    # ONE giant fold action serializes through AQE stage-at-a-time (the
+    # measured round-3 failure mode).  Chunks bound both: ~16 moderate jobs,
+    # thread-pooled.
+    FLUSH_CHUNK = 8
+
     def __init__(self, store: GraphStore):
         self._store = store
         # per table: ordered buffered batches, each {df, labels, ckpt}.
@@ -848,7 +770,7 @@ class BufferedSyncStore:
         # batch must be assumed to contain any label).  ``ckpt`` is a lazy
         # localCheckpoint, executed at most once — at the first read view
         # that needs this batch — so a batch plan never re-executes per read.
-        self._pend: dict[str, list[dict]] = {"nodes": [], "edges": []}
+        self._pend: dict[str, list[dict]] = {t.name: [] for t in TABLES}
         self._stages: list[str] = []
         self._tag: int | None = None
         # merged-view memo keyed by (table, requested labels): repeated reads
@@ -863,16 +785,16 @@ class BufferedSyncStore:
         if self._tag is not None and int(update_tag) != self._tag:
             self.flush()
         self._tag = int(update_tag)
-        for sub, df in (("nodes", new_nodes), ("edges", new_edges)):
+        for t, df in zip(TABLES, (new_nodes, new_edges)):
             if df is not None:
                 labels = getattr(df, "cartography_labels", None)
-                self._pend[sub].append({"df": df, "labels": labels, "ckpt": None})
+                self._pend[t.name].append({"df": df, "labels": labels, "ckpt": None})
                 # drop only the cached views this batch can affect: full-table
                 # views always, label-scoped views when the label sets meet
                 # (an unlabeled batch can affect anything)
                 for key in list(self._view_cache):
                     k_sub, k_labels = key
-                    if k_sub == sub and (
+                    if k_sub == t.name and (
                         k_labels is None or labels is None or (labels & set(k_labels))
                     ):
                         del self._view_cache[key]
@@ -881,21 +803,7 @@ class BufferedSyncStore:
 
     # -- pending-buffer views -------------------------------------------------
 
-    @staticmethod
-    def _fold(sub: str, dfs: list):
-        if len(dfs) == 1:
-            return dfs[0]
-        if sub == "nodes":
-            return _fold_batches(
-                dfs, ["label", "id"], ["extra_labels"],
-                [f.name for f in NODES_SCHEMA.fields],
-            )
-        return _fold_batches(
-            dfs, EDGE_KEY, ["src_label", "dst_label"],
-            [f.name for f in EDGES_SCHEMA.fields],
-        )
-
-    def _pending_view(self, sub: str, labels):
+    def _pending_view(self, t: _Table, labels):
         """Fold of the buffered batches that can contain ``labels``.
 
         MERGE keys include the label ((label, id) for nodes, (src_id,
@@ -916,7 +824,7 @@ class BufferedSyncStore:
         want = None if labels is None else set(labels)
         entries = [
             e
-            for e in self._pend[sub]
+            for e in self._pend[t.name]
             if want is None or e["labels"] is None or (e["labels"] & want)
         ]
         if not entries:
@@ -924,138 +832,64 @@ class BufferedSyncStore:
         self._materialize(entries)
         dfs = [e["ckpt"] for e in entries]
         if want is not None:
-            col = "label" if sub == "nodes" else "rel_label"
-            dfs = [d.where(F.col(col).isin(list(want))) for d in dfs]
-        return self._fold(sub, dfs)
+            dfs = [d.where(F.col(t.part).isin(list(want))) for d in dfs]
+        if len(dfs) == 1:
+            return dfs[0]
+        return _fold(t, [_stamp(d, i) for i, d in enumerate(dfs)])
 
     @staticmethod
     def _materialize(entries: list) -> None:
         """localCheckpoint every still-raw entry, concurrently when there are
         several — each is an independent job (embedded read views reference
-        only already-checkpointed frames), so overlapping them hides per-job
-        driver latency."""
+        only already-checkpointed frames)."""
         raw = [e for e in entries if e["ckpt"] is None]
-        if not raw:
-            return
-        if len(raw) == 1:
-            raw[0]["ckpt"] = raw[0]["df"].localCheckpoint(eager=True)
-            return
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _ckpt(e):
-            e["ckpt"] = e["df"].localCheckpoint(eager=True)
-
-        with ThreadPoolExecutor(max_workers=min(16, len(raw))) as ex:
-            list(ex.map(_ckpt, raw))
-
-    # Never-read batches are materialized at flush in UNION CHUNKS of this
-    # many plans per checkpoint job: per-batch jobs pay ~0.3-0.7s of fixed
-    # scheduling latency each (~125 never-read batches in a full sync), while
-    # ONE giant fold action serializes through AQE stage-at-a-time (the
-    # measured round-3 failure mode).  Chunks bound both: ~16 moderate jobs,
-    # thread-pooled.
-    FLUSH_CHUNK = int(os.environ.get("SPARK_GRAFT_FLUSH_CHUNK", "8"))
+        for e, ckpt in zip(raw, _checkpoint_all([[e["df"]] for e in raw])):
+            e["ckpt"] = ckpt
 
     def flush(self) -> None:
         self._view_cache.clear()
         if not self._stages:
             return
-        tables = {}
-        folds: dict[str, object] = {}
-        for sub in ("nodes", "edges"):
-            entries = self._pend[sub]
-            if not entries:
-                tables[sub] = None
-                continue
-            if len(entries) == 1:
-                e = entries[0]
-                tables[sub] = e["ckpt"] if e["ckpt"] is not None else e["df"]
+        tables: dict[str, object] = {}
+        parts: dict[str, list] = {}
+        chunks: list[tuple[str, list]] = []
+        for t in TABLES:
+            entries = self._pend[t.name]
+            if len(entries) <= 1:
+                tables[t.name] = next(
+                    (e["df"] if e["ckpt"] is None else e["ckpt"] for e in entries), None
+                )
                 continue
             # stamp every batch with its stage sequence BEFORE grouping so
             # chunked unions keep sequential-upsert conflict order
-            stamped_ready, raw_run = [], []
-            for i, e in enumerate(entries):
-                df = e["ckpt"] if e["ckpt"] is not None else e["df"]
-                sdf = df.selectExpr("*", f"CAST({i} AS INT) AS _seq")
-                if e["ckpt"] is not None:
-                    stamped_ready.append(sdf)
-                else:
-                    raw_run.append(sdf)
-            chunks = [
-                raw_run[i : i + self.FLUSH_CHUNK]
-                for i in range(0, len(raw_run), self.FLUSH_CHUNK)
+            parts[t.name] = [
+                _stamp(e["ckpt"], i) for i, e in enumerate(entries) if e["ckpt"] is not None
             ]
-            folds[sub] = (stamped_ready, chunks)
-
+            raw = [_stamp(e["df"], i) for i, e in enumerate(entries) if e["ckpt"] is None]
+            chunks += [
+                (t.name, raw[i : i + self.FLUSH_CHUNK])
+                for i in range(0, len(raw), self.FLUSH_CHUNK)
+            ]
         # checkpoint all chunks of both tables concurrently (each chunk is a
-        # union of <=FLUSH_CHUNK already-independent batch plans — one job).
-        # Results are keyed by (sub, chunk index) so reassembly below cannot
-        # depend on any iteration-order coincidence between two passes.
-        keyed_chunks = [
-            ((sub, i), c)
-            for sub, (_, chunks) in folds.items()
-            for i, c in enumerate(chunks)
-        ]
-        ckpts: dict[tuple, object] = {}
-        if keyed_chunks:
-            def _union_ckpt(item):
-                key, chunk = item
-                u = chunk[0]
-                for p in chunk[1:]:
-                    u = u.unionByName(p)
-                return key, u.localCheckpoint(eager=True)
-
-            if len(keyed_chunks) == 1:
-                k, out = _union_ckpt(keyed_chunks[0])
-                ckpts[k] = out
-            else:
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=min(16, len(keyed_chunks))) as ex:
-                    for k, out in ex.map(_union_ckpt, keyed_chunks):
-                        ckpts[k] = out
-
-        for sub, (stamped_ready, chunks) in folds.items():
-            parts = list(stamped_ready)
-            for i in range(len(chunks)):
-                parts.append(ckpts[(sub, i)])
-            if sub == "nodes":
-                tables[sub] = _fold_stamped(
-                    parts, ["label", "id"], ["extra_labels"],
-                    [f.name for f in NODES_SCHEMA.fields],
-                )
-            else:
-                tables[sub] = _fold_stamped(
-                    parts, EDGE_KEY, ["src_label", "dst_label"],
-                    [f.name for f in EDGES_SCHEMA.fields],
-                )
+        # union of <=FLUSH_CHUNK already-independent batch plans — one job)
+        for (name, _), ckpt in zip(chunks, _checkpoint_all([c for _, c in chunks])):
+            parts[name].append(ckpt)
+        for t in TABLES:
+            if t.name in parts:
+                tables[t.name] = _fold(t, parts[t.name])
         stages, tag = self._stages, self._tag
-        self._pend = {"nodes": [], "edges": []}
+        self._pend = {t.name: [] for t in TABLES}
         self._stages, self._tag = [], None
         self._store.upsert(tables["nodes"], tables["edges"], stages, tag)
 
     # -- merged read views ----------------------------------------------------
 
-    def _no_committed_slices(self, sub: str, labels) -> bool:
-        """True when the committed store holds NO slice for the requested
-        labels (manifest lookup — no Spark work).  During a T1 sync every
-        module-phase read happens before the first flush, so this is the
-        COMMON case: the merge view over (empty committed x pending) can
-        skip both merge joins entirely."""
-        man = self._store._manifest(self._store._current_version())
-        committed = man.get(sub, {})
-        if not committed:
-            return True
-        if labels is None:
-            return False
-        return not any(lbl in committed for lbl in labels)
-
     @staticmethod
     def _resolve_pending(pending, tag):
-        """What merge_nodes/merge_edges produce when the committed side is
-        empty, without the joins: every pending row is a MERGE miss, so
-        firstseen resolves to the tag and props get the empty-map->NULL
-        normalization of _merge_props(NULL, props)."""
+        """What ``_merge`` produces when the committed side is empty, without
+        the joins: every pending row is a MERGE miss, so firstseen resolves
+        to the tag and props get the empty-map->NULL normalization of
+        _merge_props(NULL, props)."""
         return pending.withColumn(
             "firstseen", F.coalesce(F.col("firstseen"), F.lit(int(tag)))
         ).withColumn(
@@ -1063,43 +897,32 @@ class BufferedSyncStore:
             _merge_props(F.lit(None).cast("map<string,string>"), F.col("props")),
         )
 
-    def nodes(self, version=None, labels=None):
+    def _view(self, t: _Table, version, labels):
         if version is not None:
-            return self._store.nodes(version, labels)
-        key = ("nodes", None if labels is None else tuple(sorted(labels)))
+            return self._store._read(t, version, labels)
+        key = (t.name, None if labels is None else tuple(sorted(labels)))
         if key in self._view_cache:
             return self._view_cache[key]
-        pending = self._pending_view("nodes", labels)
+        pending = self._pending_view(t, labels)
         if pending is None:
-            view = self._store.nodes(labels=labels)
-        elif self._no_committed_slices("nodes", labels):
+            view = self._store._read(t, labels=labels)
+        elif (old_rows := self._store.committed_rows(t.name, labels)) == 0:
+            # No committed row for these labels (manifest lookup, no Spark
+            # work) — the COMMON case during a T1 sync, whose module-phase
+            # reads all precede the first flush: skip both merge joins.
             view = self._resolve_pending(pending, self._tag)
         else:
-            view = self._store.merge_nodes(
-                self._store.nodes(labels=labels), pending, self._tag,
-                old_rows=self._store.committed_rows("nodes", labels),
+            view = self._store._merge(
+                t, self._store._read(t, labels=labels), pending, self._tag, old_rows
             )
         self._view_cache[key] = view
         return view
 
+    def nodes(self, version=None, labels=None):
+        return self._view(NODES, version, labels)
+
     def edges(self, version=None, rel_labels=None):
-        if version is not None:
-            return self._store.edges(version, rel_labels)
-        key = ("edges", None if rel_labels is None else tuple(sorted(rel_labels)))
-        if key in self._view_cache:
-            return self._view_cache[key]
-        pending = self._pending_view("edges", rel_labels)
-        if pending is None:
-            view = self._store.edges(rel_labels=rel_labels)
-        elif self._no_committed_slices("edges", rel_labels):
-            view = self._resolve_pending(pending, self._tag)
-        else:
-            view = self._store.merge_edges(
-                self._store.edges(rel_labels=rel_labels), pending, self._tag,
-                old_rows=self._store.committed_rows("edges", rel_labels),
-            )
-        self._view_cache[key] = view
-        return view
+        return self._view(EDGES, version, rel_labels)
 
     # -- flush-through everything else ----------------------------------------
 

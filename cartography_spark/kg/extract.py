@@ -1,16 +1,13 @@
 """Mention detection over exploded document spans.
 
-Two interchangeable implementations with identical output:
-
-  * ``arrow``  — a vectorized pandas UDF doing batched regex extraction
-    (the north_star's "batched mention detection via Arrow UDFs"); regexes
-    are compiled once per Python worker, mirroring the reference's hoisted
-    regex compilation (permission_relationships.py:227-243).
-  * ``native`` — pure ``pyspark.sql.functions`` (regexp/split/explode),
-    fully inside whole-stage codegen.  This is the default: at 10^12 docs
-    the JVM path avoids Arrow transfer entirely.  The Arrow path exists to
-    host genuinely Python-only matchers (model-based NER, etc.) behind the
-    same contract, and tests assert both paths agree.
+``detect_mentions`` is pure ``pyspark.sql.functions`` (regexp/split/explode),
+fully inside whole-stage codegen: at 10^12 docs the JVM path avoids Arrow
+transfer entirely.  ``detect_mentions_arrow`` is a vectorized mapInArrow
+extractor with identical output (the north_star's "batched mention
+detection via Arrow UDFs"); it is kept only as the parity reference that
+tests compare against and that ``scaling_bench.py`` times, and as the shape
+a genuinely Python-only matcher (model-based NER, etc.) would take behind
+the same contract.
 
 Output columns: doc_id, span_idx, offset, mention (the token),
 mention_kind ('arn' | 'email').
@@ -37,7 +34,7 @@ def _classify(tok_col):
     )
 
 
-def detect_mentions_native(spans: DataFrame) -> DataFrame:
+def detect_mentions(spans: DataFrame) -> DataFrame:
     """JVM-side tokenizer: split -> explode -> classify."""
     text_spans = spans.where(F.col("kind") == "text").where(F.col("text").isNotNull())
     toks = text_spans.select(
@@ -121,9 +118,3 @@ def detect_mentions_arrow(spans: DataFrame) -> DataFrame:
         F.col("offset").cast("int").alias("offset"),
         "text",
     ).mapInArrow(kernel, out_schema)
-
-
-def detect_mentions(spans: DataFrame, impl: str = "native") -> DataFrame:
-    if impl == "arrow":
-        return detect_mentions_arrow(spans)
-    return detect_mentions_native(spans)

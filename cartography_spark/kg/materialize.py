@@ -37,7 +37,6 @@ def mention_edges(
     docs: DataFrame,
     nodes: DataFrame,
     update_tag: int,
-    impl: str = "native",
     assume_forest: bool = False,
 ) -> DataFrame:
     """(Document)-[:MENTIONS]->(canonical entity) with span provenance.
@@ -48,7 +47,7 @@ def mention_edges(
     Edge props keep mention count and first span index per (doc, entity).
     """
     spans = exploded_spans(docs)
-    mentions = detect_mentions(spans, impl=impl)
+    mentions = detect_mentions(spans)
     dims = identifier_dictionary(nodes)
     links = link_mentions(mentions, dims)
 
@@ -129,7 +128,7 @@ def fixture_nodes(spark, sf_dir: str, update_tag: int):
     return out.repartition(nparts, "label", "id")
 
 
-def mention_triples(spark, sf_dir: str, update_tag: int = 111111111, impl: str = "native"):
+def mention_triples(spark, sf_dir: str, update_tag: int = 111111111):
     """Flagship store-free path: synthesize docs -> extract -> link ->
     canonicalize -> MENTIONS triples.  Output is flat (src_id, rel_label,
     dst_id, dst_label, n_mentions, first_span_idx)."""
@@ -145,7 +144,7 @@ def mention_triples(spark, sf_dir: str, update_tag: int = 111111111, impl: str =
     # (okta-*) disjoint namespaces and one email/login key per node — the
     # forest property holds by construction, so the runtime check job is
     # skipped (see canonical_mapping's contract)
-    edges = mention_edges(docs, nodes, update_tag, impl=impl, assume_forest=True)
+    edges = mention_edges(docs, nodes, update_tag, assume_forest=True)
     return edges.select(
         F.col("src_id").alias("doc_id"),
         F.col("rel_label"),
@@ -156,9 +155,7 @@ def mention_triples(spark, sf_dir: str, update_tag: int = 111111111, impl: str =
     )
 
 
-def sync_documents(
-    store: GraphStore, docs: DataFrame, update_tag: int, impl: str = "native"
-) -> None:
+def sync_documents(store: GraphStore, docs: DataFrame, update_tag: int) -> None:
     stage = "documents:mentions"
     if store.stage_done(stage, update_tag):
         return
@@ -166,5 +163,5 @@ def sync_documents(
     # same provable forest contract as mention_triples: the store's
     # AWSUser/OktaUser slices are loaded from the fixtures' disjoint id
     # namespaces with at most one identity key per node
-    edges = mention_edges(docs, store.nodes(), update_tag, impl=impl, assume_forest=True)
+    edges = mention_edges(docs, store.nodes(), update_tag, assume_forest=True)
     store.upsert(nodes, edges, stage, update_tag)

@@ -71,8 +71,6 @@ def run_sync(
     variant: str = "t1",
     with_documents: bool = True,
     with_github: bool = True,
-    mention_impl: str = "native",
-    buffered: bool = True,
 ) -> SyncResult:
     """One full sync at the given update tag.
 
@@ -92,7 +90,7 @@ def run_sync(
     """
     from cartography_spark.core.store import BufferedSyncStore
 
-    if buffered and not isinstance(store, BufferedSyncStore):
+    if not isinstance(store, BufferedSyncStore):
         store = BufferedSyncStore(store)
     # --- extraction (the reference's `get`): fixture DataFrames -------------
     accounts = fx.aws_accounts(spark, sf_dir)
@@ -389,9 +387,9 @@ def run_sync(
         # flush so the mention pipeline (which walks the node table many
         # times: dictionary, canonicalization, label join) scans committed
         # parquet slices instead of re-deriving the buffered merge view
-        getattr(store, "flush", lambda: None)()
+        store.flush()
         docs = interleaved_documents(spark, sf_dir)
-        sync_documents(store, docs, update_tag, impl=mention_impl)
+        sync_documents(store, docs, update_tag)
 
     # --- cleanup (stale elements from prior tags) ------------------------------
     run_cleanup(spark, store, update_tag)

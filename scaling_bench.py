@@ -39,6 +39,7 @@ WORKER = r"""
 import json, os, sys, time
 from cartography_spark.session import get_spark
 from pyspark.sql import functions as F
+from tools.steal import best_of
 
 sf_dir, cpus, amp = sys.argv[1], int(sys.argv[2]), int(sys.argv[3])
 os.makedirs("/dev/shm/spark-local", exist_ok=True)
@@ -54,13 +55,6 @@ spark = get_spark(app_name=f"scaling_{cpus}", master=f"local[{cpus}]",
                       "spark.driver.extraJavaOptions":
                           "-Xms16g -XX:+AlwaysPreTouch -XX:+UseParallelGC",
                   })
-
-
-def _steal():
-    with open("/proc/stat") as f:
-        parts = f.readline().split()[1:]
-    vals = list(map(int, parts))
-    return vals[7], sum(vals)
 
 
 # ---- amplified corpus (deterministic; written once, read as parquet) -------
@@ -90,25 +84,12 @@ emb.count()
 queries = [r.embedding for r in emb_base.limit(60).collect()]
 
 timings, steal_frac, attempts = {}, {}, {}
-def timed(name, fn, max_attempts=3, threshold=0.02):
+def timed(name, fn):
     # steal-aware guard: a window with neighbor-tenant CPU steal above the
     # threshold is retried; the kept timing carries its window's steal so
     # the report can flag any stage that never saw a clean window
-    fn()  # JIT warm
-    best_t = best_s = None
-    for attempt in range(1, max_attempts + 1):
-        s0, c0 = _steal()
-        t0 = time.time(); fn(); t = round(time.time() - t0, 3)
-        s1, c1 = _steal()
-        s = round((s1 - s0) / max(c1 - c0, 1), 3)
-        if best_t is None or t < best_t:
-            best_t, best_s = t, s
-        attempts[name] = attempt
-        if s <= threshold:
-            best_t, best_s = t, s
-            break
-    timings[name] = best_t
-    steal_frac[name] = best_s
+    timings[name], s, attempts[name] = best_of(fn)
+    steal_frac[name] = round(s, 3)
 
 # ---------- HEADLINE: compute-dense docs-analysis slice ----------
 def extract():

@@ -5,7 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cartography_spark.kg.canonicalize import canonical_mapping, connected_components
-from cartography_spark.kg.extract import detect_mentions
+from cartography_spark.kg.extract import detect_mentions, detect_mentions_arrow
 from cartography_spark.sources.docs_synth import exploded_spans, interleaved_documents
 from tests.conftest import SF_DIR
 
@@ -66,8 +66,8 @@ def test_span_sequence_survives_explode_roundtrip(spark, docs):
 
 def test_mention_impls_agree(spark, docs):
     spans = exploded_spans(docs)
-    native = detect_mentions(spans, "native")
-    arrow = detect_mentions(spans, "arrow")
+    native = detect_mentions(spans)
+    arrow = detect_mentions_arrow(spans)
     assert native.exceptAll(arrow).count() == 0
     assert arrow.exceptAll(native).count() == 0
     kinds = {r.mention_kind for r in native.select("mention_kind").distinct().collect()}

@@ -137,6 +137,65 @@ def test_resume_skips_buffered_member_stages(spark, buffered):
     assert not buffered.stage_done("stage-c", TAG)
 
 
+# -- edge MERGE: per-key props, provenance, last-stage scalars ----------------
+
+EKEY = ("s-1", "REL", "d-1")
+
+
+def _edge(spark, props, tag, src_label="A", dst_label="B"):
+    return spark.createDataFrame(
+        [(EKEY[0], src_label, EKEY[1], EKEY[2], dst_label, props, None, tag)], EDGES_SCHEMA
+    )
+
+
+def _edge_state(df):
+    return {
+        (r["src_id"], r["rel_label"], r["dst_id"]): (
+            r["src_label"], r["dst_label"], r["props"], r["firstseen"], r["lastupdated"]
+        )
+        for r in df.collect()
+    }
+
+
+def test_edge_merge_keeps_unmentioned_props(spark, buffered, sequential):
+    """A later batch SETs only the props it mentions: {a, b} then {b} gives
+    the new b and the old a, firstseen from the first tag, lastupdated from
+    the second — committed directly, and through the buffered store's read
+    view before and after its flush."""
+    t2 = TAG + 1
+    want = {EKEY: ("A", "B", {"a": "1", "b": "3"}, TAG, t2)}
+    for st in (sequential, buffered):
+        st.upsert(None, _edge(spark, {"a": "1", "b": "2"}, TAG), "e1", TAG)
+        st.upsert(None, _edge(spark, {"b": "3"}, t2), "e2", t2)
+    assert _edge_state(sequential.edges()) == want
+    assert _edge_state(buffered.edges()) == want
+    assert _edge_state(buffered.edges(rel_labels=["REL"])) == want
+    buffered.flush()
+    assert _edge_state(buffered.edges()) == want
+
+
+@pytest.mark.parametrize("read_before_flush", [True, False])
+def test_buffered_edge_stages_fold_last_labels_win(spark, buffered, sequential, read_before_flush):
+    """Two buffered stages on one committed edge key fold as sequential
+    upserts: props merge per key in stage order and the LAST stage's
+    src_label/dst_label win, in the read view and in the flushed commit."""
+    t2 = TAG + 1
+    stages = [
+        ("e1", _edge(spark, {"a": "1", "b": "2"}, TAG), TAG),
+        ("e2", _edge(spark, {"b": "3"}, t2, "A1", "B1"), t2),
+        ("e3", _edge(spark, {"c": "5"}, t2, "A2", "B2"), t2),
+    ]
+    for st in (sequential, buffered):
+        for stage, batch, tag in stages:
+            st.upsert(None, batch, stage, tag)
+    want = {EKEY: ("A2", "B2", {"a": "1", "b": "3", "c": "5"}, TAG, t2)}
+    assert _edge_state(sequential.edges()) == want
+    if read_before_flush:
+        assert _edge_state(buffered.edges(rel_labels=["REL"])) == want
+    buffered.flush()
+    assert _edge_state(buffered.edges()) == want
+
+
 # -- LabeledFrame compatibility pin (VERDICT r3 item 10 / ADVICE) -------------
 
 

@@ -1,0 +1,41 @@
+"""Guards in the measurement tools under ``tools/``."""
+
+import sys
+
+import pytest
+
+from tools import amplify_sf
+
+
+class _SparkStarted(Exception):
+    pass
+
+
+def _run_amplify(monkeypatch, src, dst):
+    def no_spark(*args, **kwargs):
+        raise _SparkStarted
+
+    monkeypatch.setattr(amplify_sf, "get_spark", no_spark)
+    monkeypatch.setattr(sys, "argv", ["amplify_sf.py", str(src), str(dst), "2"])
+    amplify_sf.main()
+
+
+@pytest.mark.parametrize("dst", ["same", "nested", "symlink"])
+def test_amplify_refuses_dst_overlapping_src(tmp_path, monkeypatch, dst):
+    """Writing into the source tree would overwrite parquet directories Spark
+    is still scanning; the tool must refuse before it starts Spark."""
+    src = tmp_path / "src"
+    src.mkdir()
+    target = {"same": src, "nested": src / "amp" / "x10", "symlink": tmp_path / "link"}[dst]
+    if dst == "symlink":
+        target.symlink_to(src)
+    with pytest.raises(SystemExit, match="inside src"):
+        _run_amplify(monkeypatch, src, target)
+    assert not (src / "amp").exists()
+
+
+def test_amplify_accepts_sibling_dst(tmp_path, monkeypatch):
+    src = tmp_path / "src"
+    src.mkdir()
+    with pytest.raises(_SparkStarted):
+        _run_amplify(monkeypatch, src, tmp_path / "src_amp")

@@ -34,10 +34,19 @@ SHIFTS = {
 }
 
 
+def check_paths(src: str, dst: str) -> None:
+    """Refuse a dst that is src or lies inside it: the writes below overwrite
+    dst's parquet directories while Spark is still lazily scanning src's."""
+    s, d = os.path.realpath(src), os.path.realpath(dst)
+    if os.path.commonpath([s, d]) == s:
+        raise SystemExit(f"amplify_sf: dst {dst!r} is or lies inside src {src!r}; refusing")
+
+
 def main():
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     dst = sys.argv[2] if len(sys.argv) > 2 else "/root/amp10"
     amp = int(sys.argv[3]) if len(sys.argv) > 3 else 10
+    check_paths(src, dst)
     os.makedirs(dst, exist_ok=True)
     spark = get_spark(app_name="amplify_sf", master="local[32]")
 

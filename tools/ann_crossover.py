@@ -22,30 +22,13 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def _steal():
-    with open("/proc/stat") as f:
-        vals = list(map(int, f.readline().split()[1:]))
-    return sum(vals[:8]), vals[7]
+from tools.steal import best_of  # noqa: E402
 
 
-def timed(fn, max_attempts=3, threshold=0.02):
-    """Steal-guarded best-of timing (same contract as bench.py)."""
-    fn()  # warm
-    best_t = best_s = None
-    for _ in range(max_attempts):
-        c0, s0 = _steal()
-        t0 = time.time()
-        fn()
-        t = round(time.time() - t0, 3)
-        c1, s1 = _steal()
-        s = (s1 - s0) / max(c1 - c0, 1)
-        if best_t is None or t < best_t:
-            best_t, best_s = t, s
-        if s <= threshold:
-            best_t, best_s = t, s
-            break
-    return best_t, round(best_s * 100, 2)
+def timed(fn):
+    """Steal-guarded best-of timing: (seconds, steal % of the kept window)."""
+    t, s, _ = best_of(fn)
+    return t, round(s * 100, 2)
 
 
 def main():

@@ -26,25 +26,9 @@ def main():
     from cartography_spark.core.store import GraphStore
     from cartography_spark.kg.pipeline import run_sync
     from cartography_spark.session import get_spark
+    from tools.steal import StealWindow
 
-    def _steal():
-        with open("/proc/stat") as f:
-            v = list(map(int, f.readline().split()[1:]))
-        return sum(v[:8]), v[7]
-
-    steal = {}
-
-    def stealwin(name):
-        import contextlib
-
-        @contextlib.contextmanager
-        def cm():
-            c0, s0 = _steal()
-            yield
-            c1, s1 = _steal()
-            steal[name] = round((s1 - s0) / max(c1 - c0, 1) * 100, 2)
-
-        return cm()
+    windows = {name: StealWindow() for name in ("t1", "resume", "t2")}
 
     spark = get_spark(app_name="sync_bench", master=f"local[{cpus}]")
     for t in ["nation", "customer", "supplier", "part", "region", "documents"]:
@@ -55,20 +39,20 @@ def main():
     try:
         store = GraphStore(spark, root)
         t0 = time.time()
-        with stealwin("t1"):
+        with windows["t1"]:
             r1 = run_sync(spark, store, sf_dir, 111111111)
         out["t1_full_sync_sec"] = round(time.time() - t0, 2)
         out["t1_nodes"], out["t1_edges"] = r1.node_count, r1.edge_count
         out["t1_commits"] = r1.version
 
         t0 = time.time()
-        with stealwin("resume"):
+        with windows["resume"]:
             run_sync(spark, store, sf_dir, 111111111)  # resume: all stages skip
         out["resume_noop_sec"] = round(time.time() - t0, 2)
 
         v_before = store._current_version()
         t0 = time.time()
-        with stealwin("t2"):
+        with windows["t2"]:
             r2 = run_sync(spark, store, sf_dir, 222222222, variant="t2")
         out["t2_incremental_sec"] = round(time.time() - t0, 2)
         out["t2_commits"] = r2.version - v_before
@@ -92,6 +76,7 @@ def main():
         out["live_slices"] = total_slices
     finally:
         shutil.rmtree(root, ignore_errors=True)
+    steal = {name: round(w.frac * 100, 2) for name, w in windows.items()}
 
     out.update({"metric": "staged_sync", "unit": "sec", "sf": sf_dir, "cpus": int(cpus),
                 "steal_pct": steal})

@@ -54,7 +54,7 @@ def main():
     # store internals
     for cls, names in [
         (BufferedSyncStore, ["flush", "nodes", "edges", "_pending_view"]),
-        (GraphStore, ["upsert", "delete", "_write_slices", "_stage_batch", "merge_nodes", "merge_edges"]),
+        (GraphStore, ["upsert", "delete", "_write_slices", "_stage_batch", "_merge"]),
     ]:
         for n in names:
             setattr(cls, n, timed(f"store:{cls.__name__}.{n}", getattr(cls, n)))
