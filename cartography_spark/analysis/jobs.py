@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cartography_spark.core.loader import LabeledFrame
+from cartography_spark.core.loader import edge_rows
 from cartography_spark.core.store import GraphStore
 
 GLOBAL_ACL_URIS = (
@@ -176,16 +176,10 @@ def ec2_iam_instanceprofiles(
         F.element_at("props", "account_id").alias("account_id"),
         F.element_at("props", "name").alias("role_name"),
     )
-    edges = inst.join(F.broadcast(roles), ["account_id", "role_name"], "inner").select(
-        F.col("instance_id").alias("src_id"),
-        F.lit("EC2Instance").alias("src_label"),
-        F.lit("STS_ASSUMEROLE_ALLOW").alias("rel_label"),
-        F.col("role_arn").alias("dst_id"),
-        F.lit("AWSRole").alias("dst_label"),
-        F.lit(None).cast("map<string,string>").alias("props"),
-        F.lit(None).cast("long").alias("firstseen"),
-        F.lit(int(update_tag)).alias("lastupdated"),
-    ).dropDuplicates(["src_id", "rel_label", "dst_id"])
+    edges = edge_rows(
+        inst.join(F.broadcast(roles), ["account_id", "role_name"]),
+        "instance_id", "EC2Instance", "STS_ASSUMEROLE_ALLOW", "role_arn", "AWSRole", update_tag,
+    )
     if not store.stage_done(stage + ":edges", update_tag):
         store.upsert(None, edges, stage + ":edges", update_tag)
     _cleanup_rel(store, "STS_ASSUMEROLE_ALLOW", update_tag, stage)
@@ -202,35 +196,13 @@ def link_humans(
     okta = store.nodes(labels=["OktaUser"]).select(
         F.col("id").alias("okta_id"), F.element_at("props", "login").alias("email")
     )
-    edges = humans.join(okta, "email", "inner").select(
-        F.col("email").alias("src_id"),
-        F.lit("Human").alias("src_label"),
-        F.lit("IDENTITY_OKTA").alias("rel_label"),
-        F.col("okta_id").alias("dst_id"),
-        F.lit("OktaUser").alias("dst_label"),
-        F.lit(None).cast("map<string,string>").alias("props"),
-        F.lit(None).cast("long").alias("firstseen"),
-        F.lit(int(update_tag)).alias("lastupdated"),
-    ).dropDuplicates(["src_id", "rel_label", "dst_id"])
+    edges = edge_rows(
+        humans.join(okta, "email"),
+        "email", "Human", "IDENTITY_OKTA", "okta_id", "OktaUser", update_tag,
+    )
     if not store.stage_done(stage + ":edges", update_tag):
         store.upsert(None, edges, stage + ":edges", update_tag)
     _cleanup_rel(store, "IDENTITY_OKTA", update_tag, stage)
-
-
-def _edge_frame(df, src_label, rel_label, dst_label, update_tag):
-    """Edge rows in the store layout from (src_id, dst_id) pairs; firstseen
-    NULL so the upsert MERGE preserves existing edges' firstseen.  Labeled
-    with the rel so buffered-read views after this job stay pruned."""
-    return LabeledFrame(df.select(
-        F.col("src_id"),
-        F.lit(src_label).alias("src_label"),
-        F.lit(rel_label).alias("rel_label"),
-        F.col("dst_id"),
-        F.lit(dst_label).alias("dst_label"),
-        F.lit(None).cast("map<string,string>").alias("props"),
-        F.lit(None).cast("long").alias("firstseen"),
-        F.lit(int(update_tag)).alias("lastupdated"),
-    ).dropDuplicates(["src_id", "rel_label", "dst_id"]), [rel_label])
 
 
 def keypair_analysis(
@@ -277,8 +249,10 @@ def keypair_analysis(
     )
     a = kps.select(F.col("id").alias("src_id"), fp.alias("fp"))
     b = kps.select(F.col("id").alias("dst_id"), fp.alias("fp"))
-    pairs = a.join(b, "fp").where(F.col("src_id") < F.col("dst_id")).drop("fp")
-    edges = _edge_frame(pairs, "EC2KeyPair", "MATCHING_FINGERPRINT", "EC2KeyPair", update_tag)
+    pairs = a.join(b, "fp").where(F.col("src_id") < F.col("dst_id"))
+    edges = edge_rows(
+        pairs, "src_id", "EC2KeyPair", "MATCHING_FINGERPRINT", "dst_id", "EC2KeyPair", update_tag
+    )
     if not store.stage_done(stage + ":marks", update_tag):
         store.commit_partial(
             marked, None, ["EC2KeyPair"], [], stage + ":marks", update_tag
@@ -305,10 +279,8 @@ def link_lambda_ecr_images(
         )
     )
     img = store.nodes(labels=["ECRImage"]).select(F.col("id").alias("digest"))
-    pairs = lam.join(F.broadcast(img), "digest").select(
-        "src_id", F.col("digest").alias("dst_id")
-    )
-    edges = _edge_frame(pairs, "AWSLambda", "HAS", "ECRImage", update_tag)
+    pairs = lam.join(F.broadcast(img), "digest")
+    edges = edge_rows(pairs, "src_id", "AWSLambda", "HAS", "digest", "ECRImage", update_tag)
     if not store.stage_done(stage + ":edges", update_tag):
         store.upsert(None, edges, stage + ":edges", update_tag)
     _cleanup_rel(store, "HAS", update_tag, stage)
@@ -463,12 +435,8 @@ def gcp_inet_exposure(
     )
     attach = tag_path.unionByName(open_path).distinct()
 
-    edges = _edge_frame(
-        attach.select(F.col("fw_id").alias("src_id"), F.col("inst_id").alias("dst_id")),
-        "GCPFirewall",
-        "FIREWALL_INGRESS",
-        "GCPInstance",
-        update_tag,
+    edges = edge_rows(
+        attach, "fw_id", "GCPFirewall", "FIREWALL_INGRESS", "inst_id", "GCPInstance", update_tag
     )
     if not store.stage_done(stage + ":edges", update_tag):
         store.upsert(None, edges, stage + ":edges", update_tag)
@@ -612,10 +580,10 @@ def link_container_images(
                 F.element_at("props", prop).alias("digest"),
             )
         )
-        pairs = src.join(F.broadcast(img), "digest").select(
-            "src_id", F.col("digest").alias("dst_id")
+        pairs = src.join(F.broadcast(img), "digest")
+        pieces.append(
+            edge_rows(pairs, "src_id", label, "HAS_IMAGE", "digest", "ECRImage", update_tag)
         )
-        pieces.append(_edge_frame(pairs, label, "HAS_IMAGE", "ECRImage", update_tag))
     edges = pieces[0].unionByName(pieces[1])
     if not store.stage_done(stage + ":edges", update_tag):
         store.upsert(None, edges, stage + ":edges", update_tag)
@@ -649,8 +617,10 @@ def gcp_aws_dns_links(
         F.col("id").alias("dst_id"),
         F.element_at("props", "name").alias("target_name"),
     )
-    pairs = gcp.join(aws, "target_name").select("src_id", "dst_id")
-    edges = _edge_frame(pairs, "GCPRecordSet", "DNS_POINTS_TO", "AWSDNSRecord", update_tag)
+    pairs = gcp.join(aws, "target_name")
+    edges = edge_rows(
+        pairs, "src_id", "GCPRecordSet", "DNS_POINTS_TO", "dst_id", "AWSDNSRecord", update_tag
+    )
     if not store.stage_done(stage + ":edges", update_tag):
         store.upsert(None, edges, stage + ":edges", update_tag)
     _cleanup_rel(store, "DNS_POINTS_TO", update_tag, stage)

@@ -7,7 +7,10 @@ executes it in 10k-row batches).  Here there is no query text and no row
 batching: a NodeSchema compiles to a *projection* producing canonical node
 rows and one *equi-join per declared relationship* producing canonical edge
 rows; Catalyst plans the physical execution, and the snapshot store applies
-MERGE semantics set-wise.
+MERGE semantics set-wise.  These are the engine's only row templates: every
+node row comes from :func:`compile_nodes`, every edge row from
+:func:`compile_edges` or :func:`edge_rows`, and each stamps the label set the
+write-behind buffer prunes by.
 
 Canonical long-table layouts (one unioned table each, partitioned by label —
 the Spark analog of Neo4j labels + per-key indexes):
@@ -45,6 +48,9 @@ EDGE_COLUMNS = [
     "lastupdated",
 ]
 
+# The edge MERGE key (the store keys edges the same way).
+EDGE_KEY = ["src_id", "rel_label", "dst_id"]
+
 NODES_SCHEMA = T.StructType(
     [
         T.StructField("id", T.StringType(), False),
@@ -80,7 +86,8 @@ from pyspark.sql.classic.dataframe import DataFrame as _ClassicDataFrame
 class LabeledFrame(_ClassicDataFrame):
     """DataFrame that carries the (statically known) set of node labels or
     rel labels its rows can contain — the compiler knows them because every
-    compiled family stamps a literal label column.
+    compiled family stamps a literal label column (node ``label`` from
+    :func:`compile_nodes`, ``rel_label`` from :func:`edge_rows`).
 
     The write-behind :class:`~cartography_spark.core.store.BufferedSyncStore`
     uses this to prune its read views: a read for labels L only has to fold
@@ -356,25 +363,57 @@ def compile_edges(
         rel_props = _props_expr(batch, rel.properties, kwargs, prefix="__b")
 
         pieces.append(
-            joined.selectExpr(
-                f"{src_id} AS src_id",
-                f"{_sql_lit(src_label)} AS src_label",
-                f"{_sql_lit(rel.rel_label)} AS rel_label",
-                f"{dst_id} AS dst_id",
-                f"{_sql_lit(dst_label)} AS dst_label",
-                f"{rel_props} AS props",
-                "CAST(NULL AS BIGINT) AS firstseen",
-                f"CAST({int(update_tag)} AS BIGINT) AS lastupdated",
+            edge_rows(
+                joined, src_id, src_label, rel.rel_label, dst_id, dst_label, update_tag,
+                props=rel_props, dedupe=False,
             )
         )
 
     out = pieces[0]
     for p in pieces[1:]:
         out = out.unionByName(p)
-    return LabeledFrame(
-        out.dropDuplicates(["src_id", "rel_label", "dst_id"]),
-        [r.rel_label for r in rels],
+    return LabeledFrame(out.dropDuplicates(EDGE_KEY), out.cartography_labels)
+
+
+def edge_rows(
+    df: DataFrame,
+    src_id: str,
+    src_label: str | None,
+    rel_label: str,
+    dst_id: str,
+    dst_label: str | None,
+    tag: int,
+    props: str | None = None,
+    dedupe: bool = True,
+) -> DataFrame:
+    """Project ``df`` into canonical edge rows of one rel family — the only
+    edge row template besides :func:`compile_edges`, which builds on it.
+
+    ``src_id``/``dst_id`` are SQL expressions over ``df`` (usually column
+    names).  A label is a literal name; ``None`` keeps ``df``'s own
+    ``src_label``/``dst_label`` column, for endpoints whose label depends on
+    the data (a policy's principal, a trust target, a tagged resource, a
+    mention's canonical entity).  ``props`` is a ``map<string,string>`` SQL
+    expression (NULL when omitted).  ``lastupdated`` is stamped with the tag
+    and ``firstseen`` left NULL for the store's MERGE, as in
+    :func:`compile_nodes`.
+
+    ``dedupe`` collapses rows sharing the edge MERGE key; pass False when the
+    pairs are distinct by construction or a later step dedupes the union.
+    The result carries ``{rel_label}`` as its label set, which the
+    write-behind buffer prunes its read views by.
+    """
+    out = df.selectExpr(
+        f"{src_id} AS src_id",
+        "src_label" if src_label is None else f"{_sql_lit(src_label)} AS src_label",
+        f"{_sql_lit(rel_label)} AS rel_label",
+        f"{dst_id} AS dst_id",
+        "dst_label" if dst_label is None else f"{_sql_lit(dst_label)} AS dst_label",
+        f"{props or 'CAST(NULL AS MAP<STRING,STRING>)'} AS props",
+        "CAST(NULL AS BIGINT) AS firstseen",
+        f"CAST({int(tag)} AS BIGINT) AS lastupdated",
     )
+    return LabeledFrame(out.dropDuplicates(EDGE_KEY) if dedupe else out, [rel_label])
 
 
 def empty_nodes(spark) -> DataFrame:

@@ -58,9 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from cartography_spark.core.loader import EDGES_SCHEMA, NODES_SCHEMA
-
-EDGE_KEY = ["src_id", "rel_label", "dst_id"]
+from cartography_spark.core.loader import EDGE_KEY, EDGES_SCHEMA, NODES_SCHEMA
 
 
 class _Table(NamedTuple):

@@ -9,9 +9,15 @@ path exists for (a) benchmarks measuring compute rather than commit count
 and (b) cold-start initial loads, where one commit is the right shape
 anyway.  Scope: the bulk builder covers the core AWS IAM/EMR/S3 + Okta +
 documents family set (the benchmark slice); the staged ``run_sync`` is the
-full provider surface.  For the shared families both paths produce
-identical triples (same compile_* programs; POLICY/permission edges reuse
-the staged path's principal resolution).
+full provider surface.  The shared families use the same schemas and row
+templates (``compile_nodes``/``compile_edges``/``edge_rows``), and POLICY
+edges resolve their principal the way ``sync_policies`` does, but the two
+paths are not the same program: bulk ``S3Bucket`` rows carry 2 of
+``sync_s3``'s 5 props (``S3_SCHEMA``), and bulk trust edges skip the staged
+path's principal resolution (every trusted ARN becomes an ``AWSPrincipal``
+stub).  They give the same triples on the fixtures only because every
+fixture trust principal is a ``:root`` or service ARN, which the staged path
+leaves as a stub too.
 """
 
 from __future__ import annotations
@@ -19,14 +25,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cartography_spark.core.loader import compile_edges, compile_nodes
+from cartography_spark.core.loader import EDGE_KEY, compile_edges, compile_nodes, edge_rows
 from cartography_spark.core.model import NodeSchema, PropertyRef
 from cartography_spark.modules.aws_base import ACCOUNT_SCHEMA, account_resource_rel
 from cartography_spark.modules.aws_emr import EMR_CLUSTER_SCHEMA
 from cartography_spark.modules.aws_iam import (
+    ACCOUNT_STUB_SCHEMA,
     GROUP_SCHEMA,
     MEMBERSHIP_SCHEMA,
     POLICY_SCHEMA,
+    PRINCIPAL_STUB_SCHEMA,
     ROLE_SCHEMA,
     STATEMENT_SCHEMA,
     USER_SCHEMA,
@@ -39,6 +47,7 @@ from cartography_spark.modules.okta import (
     SAML_RE,
     USER_SCHEMA as OKTA_USER_SCHEMA,
 )
+from cartography_spark.modules.aws_tags import TAG_SCHEMA
 from cartography_spark.sources import fixtures as fx
 
 S3_SCHEMA = NodeSchema(
@@ -47,22 +56,6 @@ S3_SCHEMA = NodeSchema(
     properties={"name": PropertyRef("name"), "account_id": PropertyRef("account_id")},
     sub_resource_rel=account_resource_rel(),
 )
-
-
-def _edge(src_id: str, src_label: str, rel: str, dst_id: str, dst_label: str, tag: int):
-    """Edge projection as selectExpr strings — one py4j call per edge family
-    instead of eight Column round trips (driver plan-latency matters: the
-    bulk builder assembles ~16 families per run)."""
-    return [
-        f"{src_id} AS src_id",
-        f"'{src_label}' AS src_label",
-        f"'{rel}' AS rel_label",
-        f"{dst_id} AS dst_id",
-        f"'{dst_label}' AS dst_label",
-        "CAST(NULL AS MAP<STRING,STRING>) AS props",
-        "CAST(NULL AS BIGINT) AS firstseen",
-        f"CAST({int(tag)} AS BIGINT) AS lastupdated",
-    ]
 
 
 def build_graph(
@@ -85,13 +78,14 @@ def build_graph(
     tag = update_tag
     # compiled once, reused by both the node union and the edge-phase target
     # lookups below — each compile_nodes costs ~20 ms of driver py4j latency.
-    # dedupe=False throughout: every bulk family id is an injective formula
-    # over a distinct source key (custkey/suppkey/nationkey/regionkey PKs, or
-    # an explicit .distinct() for groups/buckets), so the MERGE-collapse
-    # window is a no-op — skipping it removes one exchange+sort per family
-    # (11 total) from the node-union materialization (same contract as
+    # dedupe=False wherever a family id is an injective formula over a
+    # distinct source key (custkey/suppkey/nationkey/regionkey PKs, or an
+    # explicit .distinct() for groups/buckets/foreign accounts), so the
+    # MERGE-collapse window is a no-op — skipping it removes one exchange+sort
+    # per family from the node-union materialization (same contract as
     # fixture_nodes in kg/materialize.py; uniqueness asserted per family by
-    # tests/test_bulk.py::test_bulk_family_ids_unique)
+    # tests/test_bulk.py::test_bulk_family_ids_unique).  Principal and tag
+    # stubs repeat once per trusting role / tagged resource and keep it.
     acct_node_df = compile_nodes(accounts, ACCOUNT_SCHEMA, tag, {"inscope": "true"}, dedupe=False)
     group_node_df = compile_nodes(groups, GROUP_SCHEMA, tag, dedupe=False)
     okta_org_node_df = compile_nodes(o_orgs, OKTA_ORG_SCHEMA, tag, dedupe=False)
@@ -103,30 +97,8 @@ def build_graph(
         compile_nodes(roles.drop("trust_principals"), ROLE_SCHEMA, tag, dedupe=False),
         compile_nodes(clusters, EMR_CLUSTER_SCHEMA, tag, dedupe=False),
         compile_nodes(buckets, S3_SCHEMA, tag, dedupe=False),
-        compile_nodes(
-            policies.withColumnRenamed("policy_id", "pid"),
-            NodeSchema(
-                label="AWSPolicy",
-                id=PropertyRef("pid"),
-                properties={"name": PropertyRef("name"), "principal_arn": PropertyRef("principal_arn")},
-            ),
-            tag,
-            dedupe=False,
-        ),
-        compile_nodes(
-            statements,
-            NodeSchema(
-                label="AWSPolicyStatement",
-                id=PropertyRef("statement_id"),
-                properties={
-                    "effect": PropertyRef("effect"),
-                    "action": PropertyRef("action"),
-                    "resource": PropertyRef("resource"),
-                },
-            ),
-            tag,
-            dedupe=False,
-        ),
+        compile_nodes(policies, POLICY_SCHEMA, tag, dedupe=False),
+        compile_nodes(statements, STATEMENT_SCHEMA, tag, dedupe=False),
         okta_org_node_df,
         okta_group_node_df,
         compile_nodes(o_users, OKTA_USER_SCHEMA, tag, dedupe=False),
@@ -136,28 +108,14 @@ def build_graph(
     trusts = roles.select(
         F.col("arn").alias("role_arn"), F.explode("trust_principals").alias("p")
     ).select("role_arn", F.col("p.type").alias("ptype"), F.col("p.value").alias("principal"))
-    spn_nodes = trusts.select(
-        F.col("principal").alias("id"),
-        F.lit("AWSPrincipal").alias("label"),
-        F.map_from_arrays(F.array(F.lit("type")), F.array(F.col("ptype"))).alias("props"),
-        F.lit(None).cast("array<string>").alias("extra_labels"),
-        F.lit(None).cast("long").alias("firstseen"),
-        F.lit(tag).alias("lastupdated"),
-    ).dropDuplicates(["id"])
+    spn_nodes = compile_nodes(trusts, PRINCIPAL_STUB_SCHEMA, tag)
     foreign = trusts.withColumn("acct", arn_account(F.col("principal"))).where(F.col("acct") != "")
-    known = accounts.select("id")
-    acct_nodes = (
-        foreign.select(F.col("acct").alias("id"))
-        .distinct()
-        .join(known, ["id"], "left_anti")
-        .select(
-            "id",
-            F.lit("AWSAccount").alias("label"),
-            F.lit(None).cast("map<string,string>").alias("props"),
-            F.lit(None).cast("array<string>").alias("extra_labels"),
-            F.lit(None).cast("long").alias("firstseen"),
-            F.lit(tag).alias("lastupdated"),
-        )
+    known = accounts.select(F.col("id").alias("acct"))
+    acct_nodes = compile_nodes(
+        foreign.select("acct").distinct().join(known, ["acct"], "left_anti"),
+        ACCOUNT_STUB_SCHEMA,
+        tag,
+        dedupe=False,
     )
     # tag nodes
     tag_ex = tags.select("ResourceARN", F.explode("Tags").alias("t")).select(
@@ -166,16 +124,7 @@ def build_graph(
         F.col("t.Key").alias("key"),
         F.col("t.Value").alias("value"),
     )
-    tag_nodes = tag_ex.select(
-        F.col("tag_id").alias("id"),
-        F.lit("AWSTag").alias("label"),
-        F.map_from_arrays(
-            F.array(F.lit("key"), F.lit("value")), F.array("key", "value")
-        ).alias("props"),
-        F.lit(None).cast("array<string>").alias("extra_labels"),
-        F.lit(None).cast("long").alias("firstseen"),
-        F.lit(tag).alias("lastupdated"),
-    ).dropDuplicates(["id"])
+    tag_nodes = compile_nodes(tag_ex, TAG_SCHEMA, tag)
 
     nodes = node_parts[0]
     for p in node_parts[1:] + [spn_nodes, acct_nodes, tag_nodes]:
@@ -201,48 +150,45 @@ def build_graph(
         compile_edges(o_groups, OKTA_GROUP_SCHEMA, okta_org_node_df, tag),
         compile_edges(o_users, OKTA_USER_SCHEMA, okta_org_node_df, tag),
         compile_edges(o_members, OKTA_MEMBER_SCHEMA, okta_group_node_df, tag),
-        trusts.selectExpr(
-            *_edge("role_arn", "AWSRole", "TRUSTS_AWS_PRINCIPAL", "principal", "AWSPrincipal", tag)
+        edge_rows(
+            trusts, "role_arn", "AWSRole", "TRUSTS_AWS_PRINCIPAL", "principal", "AWSPrincipal",
+            tag, dedupe=False,
         ),
-        foreign.selectExpr(
-            *_edge("acct", "AWSAccount", "RESOURCE", "principal", "AWSPrincipal", tag)
+        edge_rows(
+            foreign, "acct", "AWSAccount", "RESOURCE", "principal", "AWSPrincipal", tag,
+            dedupe=False,
         ),
         # POLICY edges resolve src_label from the matched principal (parity
         # with sync_policies' principal join) — a policy attached to a user
         # or group binds to that node, and unmatched principal_arns prune out.
-        policies.join(
-            F.broadcast(
-                users.select(F.col("arn").alias("p_id"), F.lit("AWSUser").alias("p_label"))
-                .unionByName(
-                    groups.select(F.col("arn").alias("p_id"), F.lit("AWSGroup").alias("p_label"))
-                )
-                .unionByName(
-                    roles.select(F.col("arn").alias("p_id"), F.lit("AWSRole").alias("p_label"))
-                )
+        edge_rows(
+            policies.join(
+                F.broadcast(
+                    users.select(F.col("arn").alias("p_id"), F.lit("AWSUser").alias("src_label"))
+                    .unionByName(
+                        groups.select(
+                            F.col("arn").alias("p_id"), F.lit("AWSGroup").alias("src_label")
+                        )
+                    )
+                    .unionByName(
+                        roles.select(F.col("arn").alias("p_id"), F.lit("AWSRole").alias("src_label"))
+                    )
+                ),
+                policies["principal_arn"] == F.col("p_id"),
             ),
-            policies["principal_arn"] == F.col("p_id"),
-            "inner",
-        ).select(
-            F.col("p_id").alias("src_id"),
-            F.col("p_label").alias("src_label"),
-            F.lit("POLICY").alias("rel_label"),
-            F.col("policy_id").alias("dst_id"),
-            F.lit("AWSPolicy").alias("dst_label"),
-            F.lit(None).cast("map<string,string>").alias("props"),
-            F.lit(None).cast("long").alias("firstseen"),
-            F.lit(tag).alias("lastupdated"),
+            "p_id", None, "POLICY", "policy_id", "AWSPolicy", tag, dedupe=False,
         ),
-        statements.selectExpr(
-            *_edge("policy_id", "AWSPolicy", "STATEMENT", "statement_id", "AWSPolicyStatement", tag)
+        edge_rows(
+            statements, "policy_id", "AWSPolicy", "STATEMENT", "statement_id",
+            "AWSPolicyStatement", tag, dedupe=False,
         ),
     ]
 
     # TAGGED (resources are clusters by construction)
     edge_parts.append(
-        tag_ex.join(
-            clusters.select(F.col("ClusterArn").alias("ResourceARN")), "ResourceARN", "inner"
-        ).selectExpr(
-            *_edge("ResourceARN", "EMRCluster", "TAGGED", "tag_id", "AWSTag", tag)
+        edge_rows(
+            tag_ex.join(clusters.select(F.col("ClusterArn").alias("ResourceARN")), "ResourceARN"),
+            "ResourceARN", "EMRCluster", "TAGGED", "tag_id", "AWSTag", tag, dedupe=False,
         )
     )
 
@@ -257,13 +203,15 @@ def build_graph(
     role_ids = roles.select(F.col("arn").alias("role_arn"))
     allowed = mapped.join(F.broadcast(role_ids), "role_arn", "inner")
     edge_parts.append(
-        allowed.selectExpr(
-            *_edge("role_arn", "AWSRole", "ALLOWED_BY", "group_id", "OktaGroup", tag)
+        edge_rows(
+            allowed, "role_arn", "AWSRole", "ALLOWED_BY", "group_id", "OktaGroup", tag,
+            dedupe=False,
         )
     )
     edge_parts.append(
-        o_members.join(F.broadcast(allowed), "group_id", "inner").selectExpr(
-            *_edge("user_id", "OktaUser", "CAN_ASSUME_ROLE", "role_arn", "AWSRole", tag)
+        edge_rows(
+            o_members.join(F.broadcast(allowed), "group_id"),
+            "user_id", "OktaUser", "CAN_ASSUME_ROLE", "role_arn", "AWSRole", tag, dedupe=False,
         )
     )
 
@@ -272,8 +220,9 @@ def build_graph(
 
     can_read = evaluate_permissions(policies, statements, buckets, "s3:GetObject")
     edge_parts.append(
-        can_read.selectExpr(
-            *_edge("principal_arn", "AWSPrincipal", "CAN_READ", "resource_arn", "S3Bucket", tag)
+        edge_rows(
+            can_read, "principal_arn", "AWSPrincipal", "CAN_READ", "resource_arn", "S3Bucket",
+            tag, dedupe=False,
         )
     )
     sts = sts_assumerole_pairs(
@@ -283,8 +232,9 @@ def build_graph(
         statements,
     )
     edge_parts.append(
-        sts.selectExpr(
-            *_edge("principal_arn", "AWSPrincipal", "STS_ASSUMEROLE_ALLOW", "role_arn", "AWSRole", tag)
+        edge_rows(
+            sts, "principal_arn", "AWSPrincipal", "STS_ASSUMEROLE_ALLOW", "role_arn", "AWSRole",
+            tag, dedupe=False,
         )
     )
 
@@ -314,4 +264,4 @@ def build_graph(
         # the runtime bridge-check job (canonical_mapping's contract)
         edges = edges.unionByName(mention_edges(docs, nodes, tag, assume_forest=True))
 
-    return nodes, edges.dropDuplicates(["src_id", "rel_label", "dst_id"])
+    return nodes, edges.dropDuplicates(EDGE_KEY)

@@ -120,9 +120,9 @@ def canonical_mapping(nodes: DataFrame, assume_forest: bool = False) -> DataFram
     multi-key bridge (a node holding two identity keys) falls back to the
     general large-star/small-star loop.
 
-    ``assume_forest=True`` skips the runtime forest check — an entire Spark
-    job (the check is a driver-side branch, so it cannot fuse with the
-    mapping computation).  Callers may pass it ONLY when the at-most-one-hub
+    ``assume_forest=True`` skips the runtime forest check — two Spark jobs
+    (the check is a driver-side branch, so it cannot fuse with the mapping
+    computation).  Callers may pass it ONLY when the at-most-one-hub
     property is provable from the data's construction: each identity-bearing
     node contributes at most one key (a map prop holds a single email/login
     value) and the two labels' id namespaces are disjoint (IAM ARNs vs
@@ -131,17 +131,15 @@ def canonical_mapping(nodes: DataFrame, assume_forest: bool = False) -> DataFram
     when in doubt keep the default runtime check.
     """
     edges = identity_edges(nodes)
-    if assume_forest:
-        max_hubs = 1
-    else:
-        bridge = (
-            edges.groupBy("src")
-            .agg(F.count_distinct("dst").alias("k"))
-            .agg(F.max("k").alias("mx"))
-            .collect()
-        )
-        max_hubs = bridge[0]["mx"] if bridge and bridge[0]["mx"] is not None else 0
-    if max_hubs <= 1:
+    # a src whose min and max hub differ touches two hubs: a bridge.  One
+    # shuffle and an emptiness probe, so two jobs under AQE
+    forest = assume_forest or (
+        edges.groupBy("src")
+        .agg(F.min("dst").alias("lo"), F.max("dst").alias("hi"))
+        .where("lo <> hi")
+        .isEmpty()
+    )
+    if forest:
         rep = edges.groupBy("dst").agg(F.min("src").alias("canonical_id"))
         return edges.join(rep, "dst").select(
             F.col("src").alias("node_id"), "canonical_id"

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cartography_spark.core.loader import compile_nodes, edge_rows
+from cartography_spark.core.model import NodeSchema, PropertyRef
 from cartography_spark.core.store import GraphStore
 from cartography_spark.kg.canonicalize import canonical_mapping
 from cartography_spark.kg.extract import detect_mentions
@@ -19,17 +21,15 @@ from cartography_spark.kg.link import identifier_dictionary, link_mentions
 from cartography_spark.sources.docs_synth import exploded_spans
 
 
+DOCUMENT_SCHEMA = NodeSchema(
+    label="Document", id=PropertyRef("doc_id"), properties={"n_spans": PropertyRef("n_spans")}
+)
+
+
 def document_nodes(docs: DataFrame, update_tag: int) -> DataFrame:
-    return docs.select(
-        F.col("doc_id").alias("id"),
-        F.lit("Document").alias("label"),
-        F.map_from_arrays(
-            F.array(F.lit("n_spans")),
-            F.array(F.size("spans").cast("string")),
-        ).alias("props"),
-        F.lit(None).cast("array<string>").alias("extra_labels"),
-        F.lit(None).cast("long").alias("firstseen"),
-        F.lit(int(update_tag)).alias("lastupdated"),
+    # doc ids are unique by construction (one row per source document)
+    return compile_nodes(
+        docs.withColumn("n_spans", F.size("spans")), DOCUMENT_SCHEMA, update_tag, dedupe=False
     )
 
 
@@ -73,37 +73,28 @@ def mention_edges(
         ),
     )
 
-    return (
+    per_entity = (
         links.groupBy("doc_id", "canonical", "canon_label")
         .agg(
             F.count(F.lit(1)).alias("n_mentions"),
             F.min("span_idx").alias("first_span_idx"),
             F.max("score").alias("score"),
         )
-        .select(
-            F.col("doc_id").alias("src_id"),
-            F.lit("Document").alias("src_label"),
-            F.lit("MENTIONS").alias("rel_label"),
-            F.col("canonical").alias("dst_id"),
-            F.coalesce("canon_label", F.lit("Entity")).alias("dst_label"),
-            F.map_from_arrays(
-                F.array(F.lit("n_mentions"), F.lit("first_span_idx"), F.lit("score")),
-                F.array(
-                    F.col("n_mentions").cast("string"),
-                    F.col("first_span_idx").cast("string"),
-                    F.col("score").cast("string"),
-                ),
-            ).alias("props"),
-            F.lit(None).cast("long").alias("firstseen"),
-            F.lit(int(update_tag)).alias("lastupdated"),
-        )
+        .withColumn("dst_label", F.coalesce("canon_label", F.lit("Entity")))
+    )
+    # already one row per (doc, canonical, label) group: no MERGE-key dedupe
+    return edge_rows(
+        per_entity, "doc_id", "Document", "MENTIONS", "canonical", None, update_tag,
+        props="map_from_arrays(array('n_mentions', 'first_span_idx', 'score'),"
+        " array(CAST(n_mentions AS STRING), CAST(first_span_idx AS STRING),"
+        " CAST(score AS STRING)))",
+        dedupe=False,
     )
 
 
 def fixture_nodes(spark, sf_dir: str, update_tag: int):
     """Minimal linkable node set built straight from fixtures (store-free) —
     used by pure queries and the flagship entry."""
-    from cartography_spark.core.loader import compile_nodes
     from cartography_spark.modules.aws_emr import EMR_CLUSTER_SCHEMA
     from cartography_spark.modules.aws_iam import ROLE_SCHEMA, USER_SCHEMA
     from cartography_spark.modules.okta import USER_SCHEMA as OKTA_USER_SCHEMA
@@ -160,8 +151,7 @@ def sync_documents(store: GraphStore, docs: DataFrame, update_tag: int) -> None:
     if store.stage_done(stage, update_tag):
         return
     nodes = document_nodes(docs, update_tag)
-    # same provable forest contract as mention_triples: the store's
-    # AWSUser/OktaUser slices are loaded from the fixtures' disjoint id
-    # namespaces with at most one identity key per node
-    edges = mention_edges(docs, store.nodes(), update_tag, assume_forest=True)
+    # the store may hold anything (a node reaching two identity hubs), so
+    # canonicalization keeps its runtime forest check here
+    edges = mention_edges(docs, store.nodes(), update_tag)
     store.upsert(nodes, edges, stage, update_tag)

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cartography_spark.core.loader import LabeledFrame, compile_edges, compile_nodes
+from cartography_spark.core.loader import compile_edges, compile_nodes, edge_rows
 from cartography_spark.core.model import (
     LinkDirection,
     NodeSchema,
@@ -98,6 +98,17 @@ STATEMENT_SCHEMA = NodeSchema(
     },
 )
 
+# Bare stubs the trust explode synthesizes (reference iam.py:318-400): trusted
+# principal ARNs no module loads, and the accounts those ARNs name.  Bound to
+# the exploded trust frame's ``principal``/``ptype``/``acct`` columns.
+PRINCIPAL_STUB_SCHEMA = NodeSchema(
+    label="AWSPrincipal",
+    id=PropertyRef("principal"),
+    properties={"type": PropertyRef("ptype")},
+)
+
+ACCOUNT_STUB_SCHEMA = NodeSchema(label="AWSAccount", id=PropertyRef("acct"))
+
 ARN_ACCOUNT_RE = r"^arn:aws:[^:]*::?(\d{12}):"
 
 
@@ -168,38 +179,17 @@ def sync_role_trusts(store: GraphStore, roles: DataFrame, update_tag: int) -> No
     # (iam.py:358-367), which is what keeps live stubs clear of cleanup.
     # Matched real principals (AWSUser/AWSRole/...) are stamped by their own
     # module's sync and are NOT re-emitted here.
-    spn_nodes = (
-        t.where(F.col("p_label").isNull() | (F.col("p_label") == "AWSPrincipal"))
-        .select(
-            F.col("principal").alias("id"),
-            F.lit("AWSPrincipal").alias("label"),
-            F.map_from_arrays(
-                F.array(F.lit("type")), F.array(F.col("ptype"))
-            ).alias("props"),
-            F.lit(None).cast("array<string>").alias("extra_labels"),
-            F.lit(None).cast("long").alias("firstseen"),
-            F.lit(int(update_tag)).alias("lastupdated"),
-        )
-        .dropDuplicates(["id"])
-    )
+    stubs = t.where(F.col("p_label").isNull() | (F.col("p_label") == "AWSPrincipal"))
+    spn_nodes = compile_nodes(stubs, PRINCIPAL_STUB_SCHEMA, update_tag)
 
     # Foreign-account backfill applies to stub principals only: a matched
     # real principal already carries its own RESOURCE edge from its module
     # (re-emitting here with dst_label='AWSPrincipal' would clobber it,
     # since EDGE_KEY does not include labels).
-    foreign = (
-        t.where(F.col("p_label").isNull() | (F.col("p_label") == "AWSPrincipal"))
-        .withColumn("acct", arn_account(F.col("principal")))
-        .where(F.col("acct") != "")
+    foreign = stubs.withColumn("acct", arn_account(F.col("principal"))).where(
+        F.col("acct") != ""
     )
-    acct_nodes = foreign.select(
-        F.col("acct").alias("id"),
-        F.lit("AWSAccount").alias("label"),
-        F.lit(None).cast("map<string,string>").alias("props"),
-        F.lit(None).cast("array<string>").alias("extra_labels"),
-        F.lit(None).cast("long").alias("firstseen"),
-        F.lit(int(update_tag)).alias("lastupdated"),
-    ).dropDuplicates(["id"])
+    acct_nodes = compile_nodes(foreign, ACCOUNT_STUB_SCHEMA, update_tag)
 
     # Synthesized accounts re-MERGE every run (the reference only sets
     # lastupdated on them, iam.py:358-367): upsert's per-key props merge
@@ -207,34 +197,15 @@ def sync_role_trusts(store: GraphStore, roles: DataFrame, update_tag: int) -> No
     # keys), so no anti-join is needed — and the fresh lastupdated is what
     # keeps still-referenced foreign accounts clear of scoped cleanup.
 
-    trust_edges = t.select(
-        F.col("role_arn").alias("src_id"),
-        F.lit("AWSRole").alias("src_label"),
-        F.lit("TRUSTS_AWS_PRINCIPAL").alias("rel_label"),
-        F.col("principal").alias("dst_id"),
-        F.col("dst_label"),
-        F.lit(None).cast("map<string,string>").alias("props"),
-        F.lit(None).cast("long").alias("firstseen"),
-        F.lit(int(update_tag)).alias("lastupdated"),
-    ).dropDuplicates(["src_id", "rel_label", "dst_id"])
-
-    resource_edges = foreign.select(
-        F.col("acct").alias("src_id"),
-        F.lit("AWSAccount").alias("src_label"),
-        F.lit("RESOURCE").alias("rel_label"),
-        F.col("principal").alias("dst_id"),
-        F.lit("AWSPrincipal").alias("dst_label"),
-        F.lit(None).cast("map<string,string>").alias("props"),
-        F.lit(None).cast("long").alias("firstseen"),
-        F.lit(int(update_tag)).alias("lastupdated"),
-    ).dropDuplicates(["src_id", "rel_label", "dst_id"])
-
+    trust_edges = edge_rows(
+        t, "role_arn", "AWSRole", "TRUSTS_AWS_PRINCIPAL", "principal", None, update_tag
+    )
+    resource_edges = edge_rows(
+        foreign, "acct", "AWSAccount", "RESOURCE", "principal", "AWSPrincipal", update_tag
+    )
     store.upsert(
-        LabeledFrame(spn_nodes.unionByName(acct_nodes), ["AWSPrincipal", "AWSAccount"]),
-        LabeledFrame(
-            trust_edges.unionByName(resource_edges),
-            ["TRUSTS_AWS_PRINCIPAL", "RESOURCE"],
-        ),
+        spn_nodes.unionByName(acct_nodes),
+        trust_edges.unionByName(resource_edges),
         stage,
         update_tag,
     )
@@ -255,25 +226,11 @@ def sync_memberships(store: GraphStore, memberships: DataFrame, update_tag: int)
     group_policy = store.edges(rel_labels=["POLICY"]).where(
         F.col("src_label") == "AWSGroup"
     )
-    passthrough = memberships.join(
-        group_policy, memberships["group_arn"] == group_policy["src_id"], "inner"
-    ).select(
-        F.col("user_arn").alias("src_id"),
-        F.lit("AWSUser").alias("src_label"),
-        F.lit("POLICY").alias("rel_label"),
-        F.col("dst_id"),
-        F.col("dst_label"),
-        F.lit(None).cast("map<string,string>").alias("props"),
-        F.lit(None).cast("long").alias("firstseen"),
-        F.lit(int(update_tag)).alias("lastupdated"),
-    ).dropDuplicates(["src_id", "rel_label", "dst_id"])
-
-    store.upsert(
-        None,
-        edges.unionByName(LabeledFrame(passthrough, ["POLICY"])),
-        stage,
-        update_tag,
+    passthrough = edge_rows(
+        memberships.join(group_policy, memberships["group_arn"] == group_policy["src_id"]),
+        "user_arn", "AWSUser", "POLICY", "dst_id", None, update_tag,
     )
+    store.upsert(None, edges.unionByName(passthrough), stage, update_tag)
 
 
 def sync_policies(
@@ -290,35 +247,19 @@ def sync_policies(
     principals = store.nodes(labels=PRINCIPAL_LABELS).where(
         F.array_contains(F.coalesce("extra_labels", F.array()), "AWSPrincipal")
         | (F.col("label") == "AWSPrincipal")
-    ).select(F.col("id").alias("p_id"), F.col("label").alias("p_label"))
+    ).select(F.col("id").alias("p_id"), F.col("label").alias("src_label"))
 
-    pol_edges = policies.join(
-        F.broadcast(principals), policies["principal_arn"] == F.col("p_id"), "inner"
-    ).select(
-        F.col("p_id").alias("src_id"),
-        F.col("p_label").alias("src_label"),
-        F.lit("POLICY").alias("rel_label"),
-        F.col("policy_id").alias("dst_id"),
-        F.lit("AWSPolicy").alias("dst_label"),
-        F.lit(None).cast("map<string,string>").alias("props"),
-        F.lit(None).cast("long").alias("firstseen"),
-        F.lit(int(update_tag)).alias("lastupdated"),
-    ).dropDuplicates(["src_id", "rel_label", "dst_id"])
-
-    stmt_edges = statements.select(
-        F.col("policy_id").alias("src_id"),
-        F.lit("AWSPolicy").alias("src_label"),
-        F.lit("STATEMENT").alias("rel_label"),
-        F.col("statement_id").alias("dst_id"),
-        F.lit("AWSPolicyStatement").alias("dst_label"),
-        F.lit(None).cast("map<string,string>").alias("props"),
-        F.lit(None).cast("long").alias("firstseen"),
-        F.lit(int(update_tag)).alias("lastupdated"),
-    ).dropDuplicates(["src_id", "rel_label", "dst_id"])
-
+    pol_edges = edge_rows(
+        policies.join(F.broadcast(principals), policies["principal_arn"] == F.col("p_id")),
+        "p_id", None, "POLICY", "policy_id", "AWSPolicy", update_tag,
+    )
+    stmt_edges = edge_rows(
+        statements, "policy_id", "AWSPolicy", "STATEMENT", "statement_id",
+        "AWSPolicyStatement", update_tag,
+    )
     store.upsert(
         pol_nodes.unionByName(stmt_nodes),
-        LabeledFrame(pol_edges.unionByName(stmt_edges), ["POLICY", "STATEMENT"]),
+        pol_edges.unionByName(stmt_edges),
         stage,
         update_tag,
     )

@@ -33,12 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cartography_spark.core.loader import (
-    LabeledFrame,
-    compile_edges,
-    compile_nodes,
-    live_view,
-)
+from cartography_spark.core.loader import compile_edges, compile_nodes, edge_rows, live_view
 from cartography_spark.core.model import (
     LinkDirection,
     NodeSchema,
@@ -160,18 +155,10 @@ def subzone_edges(nodes: DataFrame, edges: DataFrame, update_tag: int) -> DataFr
     )
     # dedupe on the key pair BEFORE attaching the MAP props column (Spark
     # cannot run set ops over MAP-typed columns)
-    return LabeledFrame(
-        chain.select("zone_id", "z2_id").distinct().selectExpr(
-            "zone_id AS src_id",
-            "'AWSDNSZone' AS src_label",
-            "'SUBZONE' AS rel_label",
-            "z2_id AS dst_id",
-            "'AWSDNSZone' AS dst_label",
-            "CAST(NULL AS MAP<STRING,STRING>) AS props",
-            "CAST(NULL AS BIGINT) AS firstseen",
-            f"CAST({int(update_tag)} AS BIGINT) AS lastupdated",
-        ),
-        ["SUBZONE"],
+    return edge_rows(
+        chain.select("zone_id", "z2_id").distinct(),
+        "zone_id", "AWSDNSZone", "SUBZONE", "z2_id", "AWSDNSZone", update_tag,
+        dedupe=False,
     )
 
 

@@ -14,8 +14,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cartography_spark.core.loader import LabeledFrame
+from cartography_spark.core.loader import compile_nodes, edge_rows
+from cartography_spark.core.model import NodeSchema, PropertyRef
 from cartography_spark.core.store import GraphStore
+
+# Bound to an exploded tag frame's ``tag_id``/``key``/``value`` columns.
+TAG_SCHEMA = NodeSchema(
+    label="AWSTag",
+    id=PropertyRef("tag_id"),
+    properties={"key": PropertyRef("key"), "value": PropertyRef("value")},
+)
 
 TYPE_TO_LABEL = {
     "emr": "EMRCluster",
@@ -38,16 +46,7 @@ def sync_tags(store: GraphStore, tag_mappings: DataFrame, update_tag: int) -> No
         F.concat(F.col("t.Key"), F.lit(":"), F.col("t.Value")).alias("tag_id"),
     )
 
-    tag_nodes = exploded.select(
-        F.col("tag_id").alias("id"),
-        F.lit("AWSTag").alias("label"),
-        F.map_from_arrays(
-            F.array(F.lit("key"), F.lit("value")), F.array(F.col("key"), F.col("value"))
-        ).alias("props"),
-        F.lit(None).cast("array<string>").alias("extra_labels"),
-        F.lit(None).cast("long").alias("firstseen"),
-        F.lit(int(update_tag)).alias("lastupdated"),
-    ).dropDuplicates(["id"])
+    tag_nodes = compile_nodes(exploded, TAG_SCHEMA, update_tag)
 
     label_map = F.create_map(
         *[F.lit(x) for kv in TYPE_TO_LABEL.items() for x in kv]
@@ -59,27 +58,12 @@ def sync_tags(store: GraphStore, tag_mappings: DataFrame, update_tag: int) -> No
     # equality on res_label means only the mapped labels can ever match, so
     # the read prunes to exactly those slices.
     resources = store.nodes(labels=sorted(set(TYPE_TO_LABEL.values()))).select(
-        F.col("id").alias("res_id"), F.col("label").alias("node_label")
+        F.col("id").alias("res_id"), F.col("label").alias("src_label")
     )
-    edges = typed.join(
+    tagged = typed.join(
         resources,
         (typed["ResourceARN"] == resources["res_id"])
-        & (typed["res_label"] == resources["node_label"]),
-        "inner",
-    ).select(
-        F.col("res_id").alias("src_id"),
-        F.col("node_label").alias("src_label"),
-        F.lit("TAGGED").alias("rel_label"),
-        F.col("tag_id").alias("dst_id"),
-        F.lit("AWSTag").alias("dst_label"),
-        F.lit(None).cast("map<string,string>").alias("props"),
-        F.lit(None).cast("long").alias("firstseen"),
-        F.lit(int(update_tag)).alias("lastupdated"),
-    ).dropDuplicates(["src_id", "rel_label", "dst_id"])
-
-    store.upsert(
-        LabeledFrame(tag_nodes, ["AWSTag"]),
-        LabeledFrame(edges, ["TAGGED"]),
-        stage,
-        update_tag,
+        & (typed["res_label"] == resources["src_label"]),
     )
+    edges = edge_rows(tagged, "res_id", None, "TAGGED", "tag_id", "AWSTag", update_tag)
+    store.upsert(tag_nodes, edges, stage, update_tag)

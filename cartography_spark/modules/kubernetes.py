@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cartography_spark.core.loader import compile_edges, compile_nodes, live_view
+from cartography_spark.core.loader import compile_edges, compile_nodes, edge_rows, live_view
 from cartography_spark.core.model import (
     LinkDirection,
     NodeSchema,
@@ -144,15 +144,9 @@ def serves_pod_edges(services: DataFrame, pods: DataFrame, update_tag: int) -> D
         F.broadcast(svc),
         (pod["namespace"] == svc["namespace"]) & (pod["pod_mod"] == svc["selector_mod"]),
     )
-    return joined.selectExpr(
-        "svc_uid AS src_id",
-        "'KubernetesService' AS src_label",
-        "'SERVES_POD' AS rel_label",
-        "pod_uid AS dst_id",
-        "'KubernetesPod' AS dst_label",
-        "CAST(NULL AS MAP<STRING,STRING>) AS props",
-        "CAST(NULL AS BIGINT) AS firstseen",
-        f"CAST({int(update_tag)} AS BIGINT) AS lastupdated",
+    return edge_rows(
+        joined, "svc_uid", "KubernetesService", "SERVES_POD", "pod_uid", "KubernetesPod",
+        update_tag, dedupe=False,
     )
 
 

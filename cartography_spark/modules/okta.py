@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cartography_spark.core.loader import LabeledFrame, compile_edges, compile_nodes
+from cartography_spark.core.loader import compile_edges, compile_nodes, edge_rows
 from cartography_spark.core.model import (
     LinkDirection,
     NodeSchema,
@@ -128,40 +128,19 @@ def sync_saml(store: GraphStore, update_tag: int) -> None:
     roles = nodes.where(F.col("label") == "AWSRole").select(F.col("id").alias("role_arn"))
     allowed = mapped.join(F.broadcast(roles), "role_arn", "inner")
 
-    allowed_edges = allowed.select(
-        F.col("role_arn").alias("src_id"),
-        F.lit("AWSRole").alias("src_label"),
-        F.lit("ALLOWED_BY").alias("rel_label"),
-        F.col("group_id").alias("dst_id"),
-        F.lit("OktaGroup").alias("dst_label"),
-        F.lit(None).cast("map<string,string>").alias("props"),
-        F.lit(None).cast("long").alias("firstseen"),
-        F.lit(int(update_tag)).alias("lastupdated"),
-    ).dropDuplicates(["src_id", "rel_label", "dst_id"])
+    allowed_edges = edge_rows(
+        allowed, "role_arn", "AWSRole", "ALLOWED_BY", "group_id", "OktaGroup", update_tag
+    )
 
     # Multi-hop: user -MEMBER_OF_OKTA_GROUP-> group -ALLOWED_BY- role
     memb = store.edges(rel_labels=["MEMBER_OF_OKTA_GROUP"]).select(
         F.col("src_id").alias("user_id"), F.col("dst_id").alias("group_id")
     )
-    can_assume = memb.join(F.broadcast(allowed), "group_id", "inner").select(
-        F.col("user_id").alias("src_id"),
-        F.lit("OktaUser").alias("src_label"),
-        F.lit("CAN_ASSUME_ROLE").alias("rel_label"),
-        F.col("role_arn").alias("dst_id"),
-        F.lit("AWSRole").alias("dst_label"),
-        F.lit(None).cast("map<string,string>").alias("props"),
-        F.lit(None).cast("long").alias("firstseen"),
-        F.lit(int(update_tag)).alias("lastupdated"),
-    ).dropDuplicates(["src_id", "rel_label", "dst_id"])
-
-    store.upsert(
-        None,
-        LabeledFrame(
-            allowed_edges.unionByName(can_assume), ["ALLOWED_BY", "CAN_ASSUME_ROLE"]
-        ),
-        stage,
-        update_tag,
+    can_assume = edge_rows(
+        memb.join(F.broadcast(allowed), "group_id"),
+        "user_id", "OktaUser", "CAN_ASSUME_ROLE", "role_arn", "AWSRole", update_tag,
     )
+    store.upsert(None, allowed_edges.unionByName(can_assume), stage, update_tag)
 
 
 # --- round-3 breadth: applications, factors, admin roles, trusted origins ---

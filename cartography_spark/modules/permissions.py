@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from cartography_spark.core.loader import LabeledFrame
+from cartography_spark.core.loader import edge_rows
 from cartography_spark.core.store import GraphStore
 from cartography_spark.modules.aws_iam import arn_account
 
@@ -283,17 +283,11 @@ def sync_permission_edges(
         permission,
         n_resources_hint=store.label_rowcount(target_label),
     )
-    edges = granted.select(
-        F.col("principal_arn").alias("src_id"),
-        F.lit("AWSPrincipal").alias("src_label"),
-        F.lit(rel_label).alias("rel_label"),
-        F.col("resource_arn").alias("dst_id"),
-        F.lit(target_label).alias("dst_label"),
-        F.lit(None).cast("map<string,string>").alias("props"),
-        F.lit(None).cast("long").alias("firstseen"),
-        F.lit(int(update_tag)).alias("lastupdated"),
-    ).dropDuplicates(["src_id", "rel_label", "dst_id"])
-    store.upsert(None, LabeledFrame(edges, [rel_label]), stage, update_tag)
+    edges = edge_rows(
+        granted, "principal_arn", "AWSPrincipal", rel_label, "resource_arn", target_label,
+        update_tag,
+    )
+    store.upsert(None, edges, stage, update_tag)
 
 
 def sts_assumerole_pairs(
@@ -372,14 +366,8 @@ def sync_sts_assumerole(
 
     granted = sts_assumerole_pairs(trusts, principals, policies, statements)
 
-    out = granted.select(
-        F.col("principal_arn").alias("src_id"),
-        F.lit("AWSPrincipal").alias("src_label"),
-        F.lit("STS_ASSUMEROLE_ALLOW").alias("rel_label"),
-        F.col("role_arn").alias("dst_id"),
-        F.lit("AWSRole").alias("dst_label"),
-        F.lit(None).cast("map<string,string>").alias("props"),
-        F.lit(None).cast("long").alias("firstseen"),
-        F.lit(int(update_tag)).alias("lastupdated"),
-    ).dropDuplicates(["src_id", "rel_label", "dst_id"])
-    store.upsert(None, LabeledFrame(out, ["STS_ASSUMEROLE_ALLOW"]), stage, update_tag)
+    out = edge_rows(
+        granted, "principal_arn", "AWSPrincipal", "STS_ASSUMEROLE_ALLOW", "role_arn",
+        "AWSRole", update_tag,
+    )
+    store.upsert(None, out, stage, update_tag)

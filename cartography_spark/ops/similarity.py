@@ -232,97 +232,3 @@ def ann_topk_indexed(
     probes = _probe_buckets(query_vec, num_planes, probe_radius)
     cand = _index_df(spark, index_path).where(F.col("bucket").isin(probes))
     return cosine_topk(cand, query_vec, k, "vec_id", "embedding")
-
-
-def ann_topk_batch(
-    spark,
-    index_path: str,
-    query_vecs: list[list[float]],
-    k: int = 20,
-    num_planes: int = 6,
-    probe_radius: int = 2,
-) -> DataFrame:
-    """Multi-query ANN over the materialized index (the queries x table
-    production form, cf. cosine_topk_arrow).
-
-    One scan over the UNION of all queries' probe partitions; inside each
-    Arrow batch a BLAS GEMM scores every query, a per-query probe-bucket
-    mask zeroes non-candidates, and top-k reduces in-kernel so the return
-    path carries candidates only.
-    Output: query_idx, vec_id, cosine — k rows per query.
-    """
-    import numpy as np
-    import pyarrow as pa
-
-    probe_sets = [
-        set(_probe_buckets(qv, num_planes, probe_radius)) for qv in query_vecs
-    ]
-    all_probes = sorted(set().union(*probe_sets))
-    q = np.asarray(query_vecs, dtype=np.float64)
-    qn = q / np.linalg.norm(q, axis=1, keepdims=True)
-
-    out_schema = "query_idx int, vec_id long, cosine double"
-
-    def kernel(it):
-        for batch in it:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            flat = batch.column(1).flatten().to_numpy(zero_copy_only=False)
-            m = flat.reshape(n, -1).astype(np.float64)
-            buckets = batch.column(2).to_numpy(zero_copy_only=False)
-            norms = np.linalg.norm(m, axis=1)
-            norms[norms == 0] = 1.0
-            scores = (m / norms[:, None]) @ qn.T  # (b, nq)
-            for qi, ps in enumerate(probe_sets):
-                mask = np.isin(buckets, list(ps))
-                if not mask.any():
-                    continue
-                s = scores[mask, qi]
-                mids = ids[mask]
-                kk = min(k, len(s))
-                top = np.argpartition(-s, kk - 1)[:kk]
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(np.full(kk, qi, dtype=np.int32), pa.int32()),
-                        pa.array(mids[top], pa.int64()),
-                        pa.array(s[top], pa.float64()),
-                    ],
-                    names=["query_idx", "vec_id", "cosine"],
-                )
-
-    cand = (
-        _index_df(spark, index_path)
-        .where(F.col("bucket").isin(all_probes))
-        .select(F.col("vec_id").cast("long"), "embedding", F.col("bucket").cast("long"))
-    )
-    scored = cand.mapInArrow(kernel, out_schema)
-    w = Window.partitionBy("query_idx").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .drop("_rn")
-    )
-
-
-def ann_topk(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 20,
-    num_planes: int = 6,
-    probe_radius: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Index-free ANN (single shot): buckets computed on the fly, candidates
-    filtered post-scan — this is O(corpus) per query (every vector is
-    re-bucketed and scanned; only the cosine set shrinks).  Use
-    :func:`build_ann_index` + the ``_indexed`` probes when the table is
-    reused — only the materialized form turns the bucket filter into
-    physical partition pruning and makes probe cost O(probed buckets)."""
-    dim = len(query_vec)
-    bucketed = lsh_bucket(embeddings, dim, num_planes, id_col, vec_col)
-    probes = _probe_buckets(query_vec, num_planes, probe_radius)
-    cand = bucketed.where(F.col("bucket").isin(probes))
-    return cosine_topk(cand, query_vec, k, "vec_id", "embedding")

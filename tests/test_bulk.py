@@ -6,34 +6,37 @@ If a fixture change ever breaks that, these tests fail before the store's
 MERGE semantics silently change.
 """
 
+from pyspark.sql import functions as F
+
 from tests.conftest import SF_DIR
 
 
-def _families(spark):
-    from cartography_spark.sources import fixtures as fx
+def test_bulk_family_ids_unique(spark, monkeypatch):
+    """Every node family build_graph compiles with dedupe=False — the
+    fixture families, the foreign-account stubs and Document — holds unique
+    values in the column its schema's id PropertyRef names."""
+    from cartography_spark.core import loader
+    from cartography_spark.kg import bulk, materialize
 
-    return [
-        ("aws_accounts", fx.aws_accounts(spark, SF_DIR), "id"),
-        ("iam_users", fx.iam_users(spark, SF_DIR), "arn"),
-        ("iam_groups", fx.iam_groups(spark, SF_DIR), "arn"),
-        ("iam_roles", fx.iam_roles(spark, SF_DIR), "arn"),
-        ("emr_clusters", fx.emr_clusters(spark, SF_DIR), "ClusterArn"),
-        ("s3_buckets", fx.s3_buckets(spark, SF_DIR), "arn"),
-        ("iam_policies", fx.iam_policies(spark, SF_DIR), "policy_id"),
-        ("iam_policy_statements", fx.iam_policy_statements(spark, SF_DIR), "statement_id"),
-        ("okta_orgs", fx.okta_orgs(spark, SF_DIR), "id"),
-        ("okta_groups", fx.okta_groups(spark, SF_DIR), "id"),
-        ("okta_users", fx.okta_users(spark, SF_DIR), "id"),
-    ]
+    families = []
 
+    def recording(batch, schema, update_tag, kwargs=None, dedupe=True):
+        if not dedupe:
+            families.append((batch, schema))
+        return loader.compile_nodes(batch, schema, update_tag, kwargs, dedupe)
 
-def test_bulk_family_ids_unique(spark):
+    monkeypatch.setattr(bulk, "compile_nodes", recording)
+    monkeypatch.setattr(materialize, "compile_nodes", recording)
+    bulk.build_graph(spark, SF_DIR, 123456789)
+
+    labels = [schema.label for _, schema in families]
+    assert "Document" in labels and labels.count("AWSAccount") == 2  # fixture + stubs
     bad = []
-    for name, df, idc in _families(spark):
-        n = df.count()
-        d = df.select(idc).distinct().count()
+    for batch, schema in families:
+        idc = schema.id.source
+        n, d = batch.agg(F.count(idc), F.count_distinct(idc)).first()
         if n != d:
-            bad.append((name, n, d))
+            bad.append((schema.label, idc, n, d))
     assert not bad, f"bulk families with duplicate ids (dedupe=False unsafe): {bad}"
 
 

@@ -116,12 +116,57 @@ def test_canonicalization_merges_iam_and_okta(spark, store):
     assert m_fast == m
 
 
+def test_sync_documents_canonicalizes_bridged_identities(spark, store):
+    """A store node that is both an AWSUser and an OktaUser reaches two
+    email hubs; sync_documents must not assume the identity forest, so every
+    MENTIONS edge into that component targets its one canonical id."""
+    from cartography_spark.kg.materialize import sync_documents
+    from cartography_spark.sources.docs_synth import SPAN_TYPE
+
+    a, m = "arn:aws:iam::1:user/a", "arn:aws:iam::1:user/m"
+    rows = [
+        (a, "AWSUser", {"email": "a@x.com"}),
+        (m, "AWSUser", {"email": "a@x.com"}),
+        (m, "OktaUser", {"login": "b@x.com"}),
+        ("okta-z", "OktaUser", {"login": "b@x.com"}),
+    ]
+    nodes = spark.createDataFrame(
+        [(i, l, p, None, None, T1) for i, l, p in rows],
+        "id string, label string, props map<string,string>, extra_labels array<string>, firstseen long, lastupdated long",
+    )
+    store.upsert(nodes, None, "identities", T1)
+    docs = spark.createDataFrame(
+        [("doc-1", [("text", "ping b@x.com", None, 0)]), ("doc-2", [("text", "ping a@x.com", None, 0)])],
+        f"doc_id string, spans array<{SPAN_TYPE}>",
+    )
+    sync_documents(store, docs, T1)
+    got = {
+        (r.src_id, r.dst_id)
+        for r in store.edges().where(F.col("rel_label") == "MENTIONS").collect()
+    }
+    assert got == {("doc-1", a), ("doc-2", a)}
+
+
 def test_end_to_end_sync_triples(spark, store):
-    """Flagship path at sf0.001: sync everything, check graph invariants."""
+    """Flagship path at sf0.001: sync everything, check graph invariants,
+    and that every batch the modules buffer carries its label set (the
+    write-behind buffer prunes its read views by it)."""
+    from cartography_spark.core.store import BufferedSyncStore
     from cartography_spark.kg.pipeline import run_sync
 
-    res = run_sync(spark, store, SF_DIR, T1)
+    batches = []
+
+    class Recording(BufferedSyncStore):
+        def upsert(self, new_nodes, new_edges, stage, update_tag, metrics=None):
+            for df in (new_nodes, new_edges):
+                if df is not None:
+                    batches.append((stage, getattr(df, "cartography_labels", None)))
+            return super().upsert(new_nodes, new_edges, stage, update_tag, metrics)
+
+    res = run_sync(spark, Recording(store), SF_DIR, T1)
     assert res.node_count > 0 and res.edge_count > 0
+    assert batches
+    assert [s for s, labels in batches if labels is None] == []
 
     edges = store.edges()
     nodes = store.nodes()

@@ -62,22 +62,6 @@ def test_simhash_similar_docs_close(spark, docs):
             assert ham <= 10, f"near-dup pair {r.doc_a},{r.doc_b} hamming {ham}"
 
 
-def test_ann_recall_vs_brute_force(spark, emb):
-    from cartography_spark.ops.similarity import ann_topk, cosine_topk
-
-    row = emb.where(F.col("vec_id") == 0).collect()[0]
-    q = [float(x) for x in row.embedding]
-    exact = [r.vec_id for r in cosine_topk(emb, q, k=10).collect()]
-    approx = {r.vec_id for r in ann_topk(emb, q, k=10).collect()}
-    recall = len(set(exact) & approx) / len(exact)
-    # weakly-clustered synthetic data: radius-2 multi-probe recall is bounded
-    # by per-plane collision probability; assert it beats the prune ratio
-    # (i.e. LSH is doing better than random sampling of the same size).
-    assert recall >= 0.3, f"ANN recall {recall}"
-    # the query vector itself must be its own nearest neighbor
-    assert exact[0] == 0 and 0 in approx
-
-
 def test_cosine_topk_arrow_matches_jvm(spark, emb):
     """The numpy/BLAS kernel and the JVM aggregate path agree on top-k."""
     from cartography_spark.ops.similarity import cosine_topk, cosine_topk_arrow
@@ -141,33 +125,25 @@ def test_langid_and_quality_bounds(spark, docs):
     assert {r.pred_lang for r in li.select("pred_lang").distinct().collect()} <= {"en", "unk"}
 
 
-def test_ann_indexed_and_batch_recall(spark, tmp_path):
-    """Materialized-index probes (physical partition pruning) and the
-    multi-query batch form must reach the same recall as the on-the-fly ANN."""
-    import __spark_entry__ as e
-    from cartography_spark.ops.similarity import (
-        ann_topk_batch,
-        ann_topk_indexed,
-        build_ann_index,
-        cosine_topk,
-    )
-    from cartography_spark.sources.fixtures import read_table
+def test_ann_indexed_and_batch_recall(spark, emb, tmp_path):
+    """Materialized-index probes (physical partition pruning) reach usable
+    recall against brute force, and each query is its own nearest
+    neighbour in both."""
+    from cartography_spark.ops.similarity import ann_topk_indexed, build_ann_index, cosine_topk
 
-    sf = "/root/testdata/sf0.001"
-    emb = read_table(spark, sf, "embeddings")
     dim = len(emb.select("embedding").head()[0])
     path = str(tmp_path / "ann_idx")
     build_ann_index(emb, dim, path, num_planes=6)
 
-    queries = [r[0] for r in emb.where(F.col("vec_id") < 3).select("embedding").collect()]
     k = 10
-    batch = ann_topk_batch(spark, path, [list(q) for q in queries], k=k).collect()
-    for qi, qv in enumerate(queries):
-        exact = {r.vec_id for r in cosine_topk(emb, list(qv), k=k).collect()}
-        single = {r.vec_id for r in ann_topk_indexed(spark, path, list(qv), k=k).collect()}
-        got = {r.vec_id for r in batch if r.query_idx == qi}
-        assert got == single  # batch == single-query indexed probes
-        assert len(exact & got) / k >= 0.5  # usable recall vs brute force
+    for row in emb.where(F.col("vec_id") < 3).select("vec_id", "embedding").collect():
+        q = [float(x) for x in row.embedding]
+        exact = [r.vec_id for r in cosine_topk(emb, q, k=k).collect()]
+        approx = {r.vec_id for r in ann_topk_indexed(spark, path, q, k=k).collect()}
+        # weakly-clustered synthetic data: radius-2 multi-probe recall is
+        # bounded by per-plane collision probability
+        assert len(set(exact) & approx) / k >= 0.5, f"ANN recall for {row.vec_id}"
+        assert exact[0] == row.vec_id and row.vec_id in approx
 
 
 def test_embedding_near_dup_pairs_verified(spark, emb):
