@@ -461,9 +461,7 @@ def _q_kg_canonical_map(spark, sf_dir):
     from cartography_spark.kg.canonicalize import canonical_mapping
     from cartography_spark.kg.materialize import fixture_nodes
 
-    # assume_forest is provable for fixture nodes (disjoint AWSUser/OktaUser
-    # id namespaces, one identity key per node) — skips the bridge-check job
-    return canonical_mapping(fixture_nodes(spark, sf_dir, T1), assume_forest=True).select(
+    return canonical_mapping(fixture_nodes(spark, sf_dir, T1)).select(
         "node_id", "canonical_id"
     )
 

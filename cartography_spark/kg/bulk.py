@@ -259,9 +259,6 @@ def build_graph(
         # every consumer re-analyzes a leaf RDD scan instead of the 13-branch
         # union plan (driver plan latency)
         nodes = nodes.unionByName(document_nodes(docs, tag)).localCheckpoint()
-        # assume_forest: provable from fixture construction (disjoint
-        # AWSUser/OktaUser id namespaces, one identity key per node) — skips
-        # the runtime bridge-check job (canonical_mapping's contract)
-        edges = edges.unionByName(mention_edges(docs, nodes, tag, assume_forest=True))
+        edges = edges.unionByName(mention_edges(docs, nodes, tag))
 
     return nodes, edges.dropDuplicates(EDGE_KEY)

@@ -5,149 +5,164 @@ collapse to one canonical entity before edge materialization — the engine's
 analog of MERGE-by-id dedupe (SURVEY.md §2.4 A5) generalized to multi-key
 identity resolution.
 
-Algorithm: alternating **large-star / small-star** (Kiveris et al.,
-"Connected Components in MapReduce and Beyond", SOCC'14) — O(log n) rounds,
-each round two shuffles on the node key.  Skew posture: star operations
-group by node id; a mega-component's hub key is salted implicitly by the
-algorithm itself (large-star hangs high neighbors under the minimum, so hub
-degree shrinks every round), and AQE skew-join splitting covers the joins.
-Each round is ``localCheckpoint``-ed to truncate the lineage (an iterative
-driver loop must not build an unbounded plan).
+Algorithm: one connected-components pass for every caller, sized to its
+input (after BTS, load-balanced distributed union-find, ICDE 2024):
+
+1. **Local union-find.**  One shuffle on ``dst``, then a ``mapInArrow``
+   kernel runs union-find over each partition's edges and roots every local
+   component at its minimum id.  Edges stream through in Arrow batches; the
+   state is one parent dict per partition, so a hot hub (every holder of a
+   key points at it) costs one dict entry per member, never a materialized
+   group.  A component finishes here when every partition it touches
+   roots it at the same id: a hub star (identity edges run node -> hub, so
+   a hub's edges share one partition) or a near-dup clique (its min member
+   is on every pair).
+2. **Residual star rounds.**  A node that received two different local
+   roots (partition-spanning component) contracts to root -> min-root edges;
+   the alternating large-star / small-star loop (Kiveris et al., "Connected
+   Components in MapReduce and Beyond", SOCC'14) runs on those edges only,
+   O(log n) rounds, and composes back through one join.  Each round is
+   ``localCheckpoint``-ed to truncate the lineage.
+
+One test ends both steps: a node with two different roots.  After the local
+pass it marks a partition-spanning component; on the star edges it marks a
+graph that is not yet one star per component.  Identity stars and near-dup
+cliques pass it after the local pass, so the loop runs zero rounds.
+
+Component id = lexicographic min member id.  The kernel compares Python
+``str`` (code-point order), which equals Spark's UTF-8 byte order.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def connected_components(edges: DataFrame, max_rounds: int = 25) -> DataFrame:
+def _large_star(e: DataFrame) -> DataFrame:
+    und = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    m = und.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
+    # v > u >= m, so no self-loop can come out
+    hung = und.join(m, "u").where("v > u")
+    return hung.select(F.col("v").alias("u"), F.col("m").alias("v")).distinct()
+
+
+def _small_star(e: DataFrame) -> DataFrame:
+    und = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    le = und.where(F.col("v") <= F.col("u"))
+    m = le.groupBy("u").agg(F.min("v").alias("m"))
+    pairs = le.join(m, "u").select(
+        F.col("v").alias("u"), F.col("m").alias("v")
+    ).unionByName(m.select(F.col("u"), F.col("m").alias("v")))
+    return pairs.where(F.col("u") != F.col("v")).distinct()
+
+
+def _spread(pairs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(node, root) rows -> per node its min root ``lo`` and distinct
+    ``roots`` (checkpointed), and the nodes whose roots differ.  When there
+    are none the rows are a star forest and node -> lo is the answer."""
+    t = (
+        pairs.groupBy("node")
+        .agg(F.min("root").alias("lo"), F.collect_set("root").alias("roots"))
+        .localCheckpoint(eager=False)
+    )
+    return t, t.where(F.size("roots") > 1)
+
+
+def connected_components(edges: DataFrame) -> DataFrame:
     """edges(src,dst) -> (node, component) with component = min member id.
 
-    Ids compare lexicographically (string min).  Works on any undirected
-    edge list; self-loops and duplicates tolerated.
+    Works on any undirected edge list; self-loops, duplicates and NULL
+    endpoints are tolerated and produce no rows of their own.
     """
-    e = (
+
+    def local_roots(batches):
+        # mapInArrow kernel: (u, v) edge batches -> (node, root) for every node
+        # of the partition, root = min id of its local component.  Nested, so
+        # it pickles by value: executors need not import this package
+        parent: dict[str, str] = {}
+
+        def find(x: str) -> str:
+            root = parent.setdefault(x, x)
+            while parent[root] != root:
+                root = parent[root]
+            while parent[x] != root:  # path compression
+                parent[x], x = root, parent[x]
+            return root
+
+        for batch in batches:
+            for u, v in zip(batch.column(0).to_pylist(), batch.column(1).to_pylist()):
+                ru, rv = find(u), find(v)
+                if ru != rv:
+                    parent[max(ru, rv)] = min(ru, rv)
+        if parent:
+            nodes = list(parent)
+            yield pa.RecordBatch.from_pydict({"node": nodes, "root": [find(x) for x in nodes]})
+
+    n = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    local = (
         edges.select(F.col("src").cast("string").alias("u"), F.col("dst").cast("string").alias("v"))
-        .where(F.col("u").isNotNull() & F.col("v").isNotNull())
+        .where(F.col("u").isNotNull() & F.col("v").isNotNull() & (F.col("u") != F.col("v")))
+        .repartition(n, "v")
+        .mapInArrow(local_roots, "node string, root string")
+    )
+    t, split = _spread(local)
+    if split.isEmpty():
+        return t.select("node", F.col("lo").alias("component"))
+
+    # contract: every local root of a split node hangs under its min root
+    e = (
+        split.select(F.explode("roots").alias("u"), F.col("lo").alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint()
     )
-    if e.isEmpty():
-        return e.select(F.col("u").alias("node"), F.col("v").alias("component"))
-
-    def large_star(df: DataFrame) -> DataFrame:
-        und = df.unionByName(df.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        m = und.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        return (
-            und.join(m, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
+    while True:
+        # edges point to smaller ids, so once (member -> parent) plus
+        # (parent -> parent) give every node one root, each star is a
+        # whole component centred on its min
+        star, split = _spread(
+            e.select(F.col("u").alias("node"), F.col("v").alias("root")).unionByName(
+                e.select(F.col("v").alias("node"), F.col("v").alias("root"))
+            )
         )
-
-    def small_star(df: DataFrame) -> DataFrame:
-        und = df.unionByName(df.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        le = und.where(F.col("v") <= F.col("u"))
-        m = le.groupBy("u").agg(F.min("v").alias("m"))
-        pairs = le.join(m, "u").select(
-            F.col("v").alias("u"), F.col("m").alias("v")
-        ).unionByName(m.select(F.col("u"), F.col("m").alias("v")))
-        return pairs.where(F.col("u") != F.col("v")).distinct()
-
-    prev_sig = None
-    for _ in range(max_rounds):
-        # lazy checkpoint: the signature action below materializes it, so
-        # each round is ONE job (checkpoint+agg) instead of two — the loop
-        # on small edge lists is pure job latency (r6)
-        e = small_star(large_star(e)).localCheckpoint(eager=False)
-        sig = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        ).collect()[0]
-        cur = (sig["n"], sig["h"])
-        if cur == prev_sig:
+        if split.isEmpty():
             break
-        prev_sig = cur
+        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
 
-    # e is now (member -> root) star edges; add roots mapping to themselves.
-    roots = e.select(F.col("v").alias("u")).distinct().withColumn("v", F.col("u"))
-    return (
-        e.unionByName(roots)
-        .distinct()
-        .select(F.col("u").alias("node"), F.col("v").alias("component"))
+    comp = star.select(F.col("node").alias("lo"), F.col("lo").alias("component"))
+    return t.join(comp, "lo", "left").select(
+        "node", F.coalesce("component", "lo").alias("component")
     )
 
 
 def identity_edges(nodes: DataFrame) -> DataFrame:
-    """Equivalence edges for identity resolution: node <-> shared-key hub.
+    """Equivalence edges for identity resolution: node -> shared-key hub.
 
     Hub nodes (``email:<addr>``) keep the join star-shaped: every holder of
     a key links to the key hub, never pairwise — O(n) edges instead of
     O(n^2) for hot keys (the salting-free way to survive a mega-identity).
+    Oriented node -> hub, so the local union-find pass groups each hub's
+    holders in one partition.
     """
-    emails = (
-        nodes.where(F.col("label") == "AWSUser")
-        .where(F.element_at("props", "email").isNotNull())
-        .select(
+    keyed = [
+        nodes.where((F.col("label") == label) & F.element_at("props", key).isNotNull()).select(
             F.col("id").alias("src"),
-            F.concat(F.lit("email:"), F.element_at("props", "email")).alias("dst"),
+            F.concat(F.lit("email:"), F.element_at("props", key)).alias("dst"),
         )
-    )
-    logins = (
-        nodes.where(F.col("label") == "OktaUser")
-        .where(F.element_at("props", "login").isNotNull())
-        .select(
-            F.col("id").alias("src"),
-            F.concat(F.lit("email:"), F.element_at("props", "login")).alias("dst"),
-        )
-    )
-    return emails.unionByName(logins)
+        for label, key in (("AWSUser", "email"), ("OktaUser", "login"))
+    ]
+    return keyed[0].unionByName(keyed[1])
 
 
-def canonical_mapping(nodes: DataFrame, assume_forest: bool = False) -> DataFrame:
+def canonical_mapping(nodes: DataFrame) -> DataFrame:
     """(node_id, canonical_id): every identity-bearing node -> its canonical
     representative (lexicographic min *real* node id of its component; key
     hubs are excluded from candidacy).
 
-    Fast path: identity edges are (real node)->(key hub) stars.  When every
-    real node touches at most ONE hub, hubs cannot bridge, so each component
-    is exactly one hub + its members — canonicalization is a single
-    groupBy(hub) min, no iterative CC at all (one shuffle instead of
-    O(log n) rounds x 2 shuffles).  The forest check is one cheap agg; any
-    multi-key bridge (a node holding two identity keys) falls back to the
-    general large-star/small-star loop.
-
-    ``assume_forest=True`` skips the runtime forest check — two Spark jobs
-    (the check is a driver-side branch, so it cannot fuse with the mapping
-    computation).  Callers may pass it ONLY when the at-most-one-hub
-    property is provable from the data's construction: each identity-bearing
-    node contributes at most one key (a map prop holds a single email/login
-    value) and the two labels' id namespaces are disjoint (IAM ARNs vs
-    ``okta-*``), so no src can reach two hubs.  Violating the contract
-    silently degrades to per-hub (not per-component) canonicalization;
-    when in doubt keep the default runtime check.
+    A node holding two identity keys bridges their hubs into one component;
+    no caller has to prove that none does.
     """
-    edges = identity_edges(nodes)
-    # a src whose min and max hub differ touches two hubs: a bridge.  One
-    # shuffle and an emptiness probe, so two jobs under AQE
-    forest = assume_forest or (
-        edges.groupBy("src")
-        .agg(F.min("dst").alias("lo"), F.max("dst").alias("hi"))
-        .where("lo <> hi")
-        .isEmpty()
-    )
-    if forest:
-        rep = edges.groupBy("dst").agg(F.min("src").alias("canonical_id"))
-        return edges.join(rep, "dst").select(
-            F.col("src").alias("node_id"), "canonical_id"
-        )
-
-    comps = connected_components(edges.select("src", "dst"))
-    members = comps.where(~F.col("node").startswith("email:"))
+    members = connected_components(identity_edges(nodes)).where(~F.col("node").startswith("email:"))
     rep = members.groupBy("component").agg(F.min("node").alias("canonical_id"))
-    return members.join(rep, "component").select(
-        F.col("node").alias("node_id"), "canonical_id"
-    )
+    return members.join(rep, "component").select(F.col("node").alias("node_id"), "canonical_id")

@@ -3,11 +3,7 @@
 The identifier dictionary is built from the live node table — every node
 contributes its id (ARNs, okta ids, ...) plus any identifier-bearing props
 (email/login).  It is dimension-sized relative to the mention stream
-(identifiers ~ assets, mentions ~ documents), so the join broadcasts; at
-10^12 docs with an oversized dictionary the same code degrades gracefully to
-a shuffled hash join (drop the broadcast hint via ``broadcast_dims=False``)
-and AQE handles mention-side skew (a hot identifier mentioned in millions of
-docs is exactly the north_rule's hot-tenant case).
+(identifiers ~ assets, mentions ~ documents), so the join broadcasts it.
 
 Scoring: exact identifier match -> 1.0; case-insensitive match -> 0.9.
 Ties keep the highest score per (mention occurrence, entity).
@@ -52,9 +48,7 @@ def identifier_dictionary(nodes: DataFrame) -> DataFrame:
     return ids.unionByName(emails).unionByName(logins)
 
 
-def link_mentions(
-    mentions: DataFrame, dims: DataFrame, broadcast_dims: bool = True
-) -> DataFrame:
+def link_mentions(mentions: DataFrame, dims: DataFrame) -> DataFrame:
     """Join mentions to the identifier dictionary with tiered scoring.
 
     Output: doc_id, span_idx, offset, mention, mention_kind,
@@ -66,9 +60,7 @@ def link_mentions(
     # mention stream (the mention side is the 10^12-row side — never walk it
     # twice).  max() per (occurrence, entity) keeps exact's 1.0 over 0.9 when
     # several dictionary keys case-fold together.
-    d = dims.withColumn("key_folded", F.lower(F.col("key")))
-    if broadcast_dims:
-        d = F.broadcast(d)
+    d = F.broadcast(dims.withColumn("key_folded", F.lower(F.col("key"))))
 
     joined = mentions.join(
         d,

@@ -33,12 +33,7 @@ def document_nodes(docs: DataFrame, update_tag: int) -> DataFrame:
     )
 
 
-def mention_edges(
-    docs: DataFrame,
-    nodes: DataFrame,
-    update_tag: int,
-    assume_forest: bool = False,
-) -> DataFrame:
+def mention_edges(docs: DataFrame, nodes: DataFrame, update_tag: int) -> DataFrame:
     """(Document)-[:MENTIONS]->(canonical entity) with span provenance.
 
     Canonicalization rewrites each linked entity to its component
@@ -51,7 +46,7 @@ def mention_edges(
     dims = identifier_dictionary(nodes)
     links = link_mentions(mentions, dims)
 
-    canon = canonical_mapping(nodes, assume_forest=assume_forest)
+    canon = canonical_mapping(nodes)
     links = (
         links.join(canon, links["entity_id"] == canon["node_id"], "left")
         .withColumn("canonical", F.coalesce("canonical_id", "entity_id"))
@@ -61,16 +56,17 @@ def mention_edges(
     # A canonical id that differs from the matched entity is by construction
     # an identity-bearing node (identity_edges only links AWSUser/OktaUser),
     # so the lookup frame is restricted to those labels — a fraction of the
-    # full node broadcast — and the unchanged-canonical case reuses the
-    # already-joined entity_label (identical value, no lookup needed).
-    labels = nodes.where(F.col("label").isin("AWSUser", "OktaUser")).select(
-        F.col("id").alias("canonical"), F.col("label").alias("_ident_label")
+    # full node broadcast.  One id may carry both labels (the node key is
+    # (label, id)), so the lookup keeps ONE label per id, the min: the label
+    # must depend on the canonical id alone, or one MERGE key splits into
+    # per-label rows.  Other canonicals keep the matched entity_label.
+    labels = (
+        nodes.where(F.col("label").isin("AWSUser", "OktaUser"))
+        .groupBy(F.col("id").alias("canonical"))
+        .agg(F.min("label").alias("_ident_label"))
     )
     links = links.join(labels, "canonical", "left").withColumn(
-        "canon_label",
-        F.when(F.col("canonical") == F.col("entity_id"), F.col("entity_label")).otherwise(
-            F.col("_ident_label")
-        ),
+        "canon_label", F.coalesce("_ident_label", "entity_label")
     )
 
     per_entity = (
@@ -82,7 +78,8 @@ def mention_edges(
         )
         .withColumn("dst_label", F.coalesce("canon_label", F.lit("Entity")))
     )
-    # already one row per (doc, canonical, label) group: no MERGE-key dedupe
+    # canon_label is a function of canonical, so one row per (doc,
+    # canonical) group is one row per MERGE key: no MERGE-key dedupe
     return edge_rows(
         per_entity, "doc_id", "Document", "MENTIONS", "canonical", None, update_tag,
         props="map_from_arrays(array('n_mentions', 'first_span_idx', 'score'),"
@@ -131,11 +128,7 @@ def mention_triples(spark, sf_dir: str, update_tag: int = 111111111):
     # (localCheckpoint, not cache: blocks are GC-freed via ContextCleaner,
     # and consumers re-analyze a leaf scan, not the 4-family union plan)
     nodes = fixture_nodes(spark, sf_dir, update_tag).localCheckpoint()
-    # assume_forest: fixture ids give AWSUser (IAM ARN) and OktaUser
-    # (okta-*) disjoint namespaces and one email/login key per node — the
-    # forest property holds by construction, so the runtime check job is
-    # skipped (see canonical_mapping's contract)
-    edges = mention_edges(docs, nodes, update_tag, assume_forest=True)
+    edges = mention_edges(docs, nodes, update_tag)
     return edges.select(
         F.col("src_id").alias("doc_id"),
         F.col("rel_label"),
@@ -151,7 +144,5 @@ def sync_documents(store: GraphStore, docs: DataFrame, update_tag: int) -> None:
     if store.stage_done(stage, update_tag):
         return
     nodes = document_nodes(docs, update_tag)
-    # the store may hold anything (a node reaching two identity hubs), so
-    # canonicalization keeps its runtime forest check here
     edges = mention_edges(docs, store.nodes(), update_tag)
     store.upsert(nodes, edges, stage, update_tag)

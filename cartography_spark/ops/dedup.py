@@ -583,13 +583,14 @@ def duplicate_clusters(
     keeps ``is_canonical`` rows.
 
     Scale: candidate pairs are bucket-generated (never all-pairs) and the
-    component step is the O(log n)-round large/small-star loop
-    (kg/canonicalize.py) over the near-dup EDGE LIST only — a tiny fraction
-    of corpus size.  Ids travel zero-padded so lexicographic min == numeric
-    min.  The join back to the corpus is left to AQE: components exist only
-    for docs with >=1 near-dup pair, which can be anywhere from ~0 (clean
-    corpus -> broadcast) to ~30% of 10^12 rows (raw web crawl -> sort-merge
-    on doc_id) — a hardcoded hint would be wrong at one end.
+    component step (kg/canonicalize.py: one shuffle plus a per-partition
+    union-find, star rounds only on the partition-spanning residue) runs
+    over the near-dup EDGE LIST only — a tiny fraction of corpus size.
+    Ids travel zero-padded so lexicographic min == numeric min.  The join
+    back to the corpus is left to AQE: components exist only for docs with
+    >=1 near-dup pair, which can be anywhere from ~0 (clean corpus ->
+    broadcast) to ~30% of 10^12 rows (raw web crawl -> sort-merge on
+    doc_id) — a hardcoded hint would be wrong at one end.
     """
     from cartography_spark.kg.canonicalize import connected_components
 

@@ -1,6 +1,8 @@
 """Documents path: span invariant, extraction parity, linking,
 canonicalization, end-to-end triples."""
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -74,22 +76,57 @@ def test_mention_impls_agree(spark, docs):
     assert kinds == {"arn", "email"}
 
 
-def test_connected_components_basic(spark):
-    e = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("x", "y"), ("m", "m")], ["src", "dst"]
-    )
-    got = {(r.node, r.component) for r in connected_components(e).collect()}
-    assert got == {("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")}
+def _union_find(edges):
+    """Reference components: node -> min member id (NULLs/self-loops skipped)."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in edges:
+        if u is not None and v is not None and u != v:
+            ru, rv = find(u), find(v)
+            parent[max(ru, rv)] = min(ru, rv)
+    return {(x, find(x)) for x in parent}
 
 
-def test_connected_components_long_chain(spark):
-    """A 64-node path graph — exercises the O(log n) star rounds."""
-    edges = [(f"n{i:03d}", f"n{i+1:03d}") for i in range(63)]
-    e = spark.createDataFrame(edges, ["src", "dst"])
-    cc = connected_components(e)
-    comps = cc.select("component").distinct().collect()
-    assert len(comps) == 1 and comps[0].component == "n000"
-    assert cc.count() == 64
+def _shuffled_path(n, seed):
+    ids = [f"p{i:03d}" for i in range(n)]
+    random.Random(seed).shuffle(ids)
+    return list(zip(ids, ids[1:]))
+
+
+CC_CASES = {
+    "basic": [("a", "b"), ("b", "c"), ("x", "y"), ("m", "m")],
+    "long_chain": [(f"n{i:03d}", f"n{i+1:03d}") for i in range(63)],
+    # ids out of path order: components span partitions, so the local
+    # union-find pass leaves residual edges for the star rounds
+    "shuffled_path_200": _shuffled_path(200, 7),
+    "hub_3000": [(f"m{i:04d}", "hub") for i in range(3000)],
+    "bridged_hubs": [(f"a{i}", "hub1") for i in range(20)]
+    + [(f"b{i}", "hub2") for i in range(20)]
+    + [("bridge", "hub1"), ("bridge", "hub2")],
+    "non_ascii": [("é", "z"), ("z", "日本"), ("ä", "a"), ("\U0001f600", "ÿ"), ("Z", "ü")],
+    "null_self_dup": [
+        ("a", None), (None, "b"), (None, None), ("c", "c"), ("a", "d"), ("a", "d"), ("d", "a"),
+    ],
+    "empty": [],
+}
+
+
+@pytest.mark.parametrize("case", list(CC_CASES))
+def test_connected_components(spark, case):
+    """Every caller's CC against a pure-Python union-find: component = min
+    member id (Spark's UTF-8 byte order), no rows for isolated ends."""
+    edges = CC_CASES[case]
+    e = spark.createDataFrame(edges, "src string, dst string")
+    got = [(r.node, r.component) for r in connected_components(e).collect()]
+    assert len(got) == len(set(got))
+    assert set(got) == _union_find(edges)
 
 
 def test_canonicalization_merges_iam_and_okta(spark, store):
@@ -107,25 +144,21 @@ def test_canonicalization_merges_iam_and_okta(spark, store):
     assert m["okta-9"] == "arn:aws:iam::1:user/u1"
     assert m["arn:aws:iam::1:user/u1"] == "arn:aws:iam::1:user/u1"
     assert m["arn:aws:iam::1:user/u2"] == "arn:aws:iam::1:user/u2"
-    # assume_forest skips the runtime bridge-check job; on forest-shaped
-    # identity data (the provable call-site contract) it must be identical
-    m_fast = {
-        r.node_id: r.canonical_id
-        for r in canonical_mapping(nodes, assume_forest=True).collect()
-    }
-    assert m_fast == m
 
 
-def test_sync_documents_canonicalizes_bridged_identities(spark, store):
+@pytest.mark.parametrize("first", ["a", "z"])
+def test_sync_documents_canonicalizes_bridged_identities(spark, store, first):
     """A store node that is both an AWSUser and an OktaUser reaches two
     email hubs; sync_documents must not assume the identity forest, so every
-    MENTIONS edge into that component targets its one canonical id."""
+    MENTIONS edge into that component targets its one canonical id — with
+    one label and one row per MERGE key even when the canonical is the
+    two-label node itself (``first="z"`` makes ``user/m`` the minimum)."""
     from cartography_spark.kg.materialize import sync_documents
     from cartography_spark.sources.docs_synth import SPAN_TYPE
 
-    a, m = "arn:aws:iam::1:user/a", "arn:aws:iam::1:user/m"
+    f, m = f"arn:aws:iam::1:user/{first}", "arn:aws:iam::1:user/m"
     rows = [
-        (a, "AWSUser", {"email": "a@x.com"}),
+        (f, "AWSUser", {"email": "a@x.com"}),
         (m, "AWSUser", {"email": "a@x.com"}),
         (m, "OktaUser", {"login": "b@x.com"}),
         ("okta-z", "OktaUser", {"login": "b@x.com"}),
@@ -136,15 +169,24 @@ def test_sync_documents_canonicalizes_bridged_identities(spark, store):
     )
     store.upsert(nodes, None, "identities", T1)
     docs = spark.createDataFrame(
-        [("doc-1", [("text", "ping b@x.com", None, 0)]), ("doc-2", [("text", "ping a@x.com", None, 0)])],
+        [
+            ("doc-1", [("text", "ping b@x.com", None, 0)]),
+            ("doc-2", [("text", "ping a@x.com", None, 0)]),
+            ("doc-3", [("text", f"ping {m}", None, 0)]),
+        ],
         f"doc_id string, spans array<{SPAN_TYPE}>",
     )
     sync_documents(store, docs, T1)
-    got = {
-        (r.src_id, r.dst_id)
+    got = [
+        (r.src_id, r.dst_id, r.dst_label, int(r.props["n_mentions"]))
         for r in store.edges().where(F.col("rel_label") == "MENTIONS").collect()
-    }
-    assert got == {("doc-1", a), ("doc-2", a)}
+    ]
+    canon = min(f, m)
+    assert sorted(got) == [
+        ("doc-1", canon, "AWSUser", 2),
+        ("doc-2", canon, "AWSUser", 2),
+        ("doc-3", canon, "AWSUser", 1),
+    ]
 
 
 def test_end_to_end_sync_triples(spark, store):

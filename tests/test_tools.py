@@ -1,10 +1,15 @@
 """Guards in the measurement tools under ``tools/``."""
 
+import os
+import shutil
+import subprocess
 import sys
 
 import pytest
 
 from tools import amplify_sf
+
+TOOLS = os.path.dirname(os.path.abspath(amplify_sf.__file__))
 
 
 class _SparkStarted(Exception):
@@ -39,3 +44,22 @@ def test_amplify_accepts_sibling_dst(tmp_path, monkeypatch):
     src.mkdir()
     with pytest.raises(_SparkStarted):
         _run_amplify(monkeypatch, src, tmp_path / "src_amp")
+
+
+def test_oracle_check_imports_its_own_checkout(tmp_path):
+    """Run from a copy, the oracle gate must check the copy's engine, not
+    whichever checkout happens to be installed elsewhere."""
+    root = tmp_path / "checkout"
+    (root / "tools").mkdir(parents=True)
+    shutil.copy(os.path.join(TOOLS, "oracle_check.py"), root / "tools")
+    stub = root / "__spark_entry__.py"
+    stub.write_text("STUB = True\n")
+    probe = (
+        "import runpy, sys; runpy.run_path(sys.argv[1]); "
+        "import __spark_entry__; print(__spark_entry__.__file__)"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe, str(root / "tools" / "oracle_check.py")],
+        cwd=tmp_path, capture_output=True, text=True, check=True,
+    ).stdout.strip()
+    assert out == str(stub)
