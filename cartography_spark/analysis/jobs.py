@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cartography_spark.core.cleanup import delete_stale
 from cartography_spark.core.loader import edge_rows
 from cartography_spark.core.store import GraphStore
 
@@ -135,16 +136,19 @@ def _cleanup_rel(store: GraphStore, rel_label: str, update_tag: int, stage: str)
         .where(F.col("lastupdated") != int(update_tag))
         .select("src_id", "rel_label", "dst_id")
     )
-    # Empty-probe before deleting: a first sync has no stale edges, and a
-    # delete is expensive there — it forces the write-behind buffer to
-    # flush (a full group commit) before running its own commit.  The probe
-    # reads one rel-pruned slice through the lazy merge view, no flush; a
-    # checkpoint-only upsert still records the stage (buffered into the
-    # next group commit) so resume skip-lists stay complete.
-    if stale.isEmpty():
-        store.upsert(None, None, stage, update_tag)
-        return
-    store.delete(None, stale, stage, update_tag)
+    delete_stale(store, None, stale, stage, update_tag)
+
+
+def _link(
+    store: GraphStore, stage: str, rel_label: str, edges: DataFrame, update_tag: int
+) -> None:
+    """Upsert a job's ``rel_label`` edges under ``stage:edges``, then drop
+    that rel's stale edges under ``stage`` itself.  The job's own stage
+    commits LAST, so a crash between the two legs resumes into the cleanup,
+    not past it."""
+    if not store.stage_done(stage + ":edges", update_tag):
+        store.upsert(None, edges, stage + ":edges", update_tag)
+    _cleanup_rel(store, rel_label, update_tag, stage)
 
 
 def ec2_iam_instanceprofiles(
@@ -156,9 +160,6 @@ def ec2_iam_instanceprofiles(
     The reference suffix-match (``r.arn ENDS WITH role_name``) scoped to the
     instance's account restates as an equi-join on (account_id, role_name) —
     the shuffle-key form that scales (no theta-join)."""
-    # stage layout: the edge upsert checkpoints under ":edges"; the job's own
-    # stage name commits LAST (with the stale-edge cleanup) so a crash
-    # between the two legs resumes into the cleanup, not past it.
     stage = "analysis:aws_ec2_iaminstanceprofile"
     inst = (
         store.nodes(labels=["EC2Instance"])
@@ -180,9 +181,7 @@ def ec2_iam_instanceprofiles(
         inst.join(F.broadcast(roles), ["account_id", "role_name"]),
         "instance_id", "EC2Instance", "STS_ASSUMEROLE_ALLOW", "role_arn", "AWSRole", update_tag,
     )
-    if not store.stage_done(stage + ":edges", update_tag):
-        store.upsert(None, edges, stage + ":edges", update_tag)
-    _cleanup_rel(store, "STS_ASSUMEROLE_ALLOW", update_tag, stage)
+    _link(store, stage, "STS_ASSUMEROLE_ALLOW", edges, update_tag)
 
 
 def link_humans(
@@ -200,9 +199,7 @@ def link_humans(
         humans.join(okta, "email"),
         "email", "Human", "IDENTITY_OKTA", "okta_id", "OktaUser", update_tag,
     )
-    if not store.stage_done(stage + ":edges", update_tag):
-        store.upsert(None, edges, stage + ":edges", update_tag)
-    _cleanup_rel(store, "IDENTITY_OKTA", update_tag, stage)
+    _link(store, stage, "IDENTITY_OKTA", edges, update_tag)
 
 
 def keypair_analysis(
@@ -257,9 +254,7 @@ def keypair_analysis(
         store.commit_partial(
             marked, None, ["EC2KeyPair"], [], stage + ":marks", update_tag
         )
-    if not store.stage_done(stage + ":edges", update_tag):
-        store.upsert(None, edges, stage + ":edges", update_tag)
-    _cleanup_rel(store, "MATCHING_FINGERPRINT", update_tag, stage)
+    _link(store, stage, "MATCHING_FINGERPRINT", edges, update_tag)
 
 
 def link_lambda_ecr_images(
@@ -281,9 +276,7 @@ def link_lambda_ecr_images(
     img = store.nodes(labels=["ECRImage"]).select(F.col("id").alias("digest"))
     pairs = lam.join(F.broadcast(img), "digest")
     edges = edge_rows(pairs, "src_id", "AWSLambda", "HAS", "digest", "ECRImage", update_tag)
-    if not store.stage_done(stage + ":edges", update_tag):
-        store.upsert(None, edges, stage + ":edges", update_tag)
-    _cleanup_rel(store, "HAS", update_tag, stage)
+    _link(store, stage, "HAS", edges, update_tag)
 
 
 def _mark_label(
@@ -585,9 +578,7 @@ def link_container_images(
             edge_rows(pairs, "src_id", label, "HAS_IMAGE", "digest", "ECRImage", update_tag)
         )
     edges = pieces[0].unionByName(pieces[1])
-    if not store.stage_done(stage + ":edges", update_tag):
-        store.upsert(None, edges, stage + ":edges", update_tag)
-    _cleanup_rel(store, "HAS_IMAGE", update_tag, stage)
+    _link(store, stage, "HAS_IMAGE", edges, update_tag)
 
 
 def gcp_aws_dns_links(
@@ -621,6 +612,4 @@ def gcp_aws_dns_links(
     edges = edge_rows(
         pairs, "src_id", "GCPRecordSet", "DNS_POINTS_TO", "dst_id", "AWSDNSRecord", update_tag
     )
-    if not store.stage_done(stage + ":edges", update_tag):
-        store.upsert(None, edges, stage + ":edges", update_tag)
-    _cleanup_rel(store, "DNS_POINTS_TO", update_tag, stage)
+    _link(store, stage, "DNS_POINTS_TO", edges, update_tag)

@@ -132,3 +132,26 @@ def cleanup_orphans(store: GraphStore, label: str, anchor_label: str, update_tag
         .select("label", "id")
     )
     store.delete(orphans, None, f"cleanup_orphans:{label}", update_tag)
+
+
+def delete_stale(
+    store: GraphStore,
+    stale_nodes: DataFrame | None,
+    stale_edges: DataFrame | None,
+    stage: str,
+    update_tag: int,
+) -> None:
+    """Delete the given stale rows under ``stage``, or only record the stage
+    when there are none.
+
+    A first sync has nothing stale, and a delete is expensive there: it
+    forces the write-behind buffer to flush (a full group commit) before
+    running its own commit.  The empty probes read pruned slices through the
+    lazy merge view, no flush; the checkpoint-only upsert still records the
+    stage (buffered into the next group commit) so resume skip-lists stay
+    complete.
+    """
+    if all(df is None or df.isEmpty() for df in (stale_nodes, stale_edges)):
+        store.upsert(None, None, stage, update_tag)
+        return
+    store.delete(stale_nodes, stale_edges, stage, update_tag)

@@ -28,6 +28,7 @@ table schema-stable while remaining filterable via ``element_at``.
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Iterable, Mapping
 
 from pyspark.sql import DataFrame
@@ -416,9 +417,33 @@ def edge_rows(
     return LabeledFrame(out.dropDuplicates(EDGE_KEY) if dedupe else out, [rel_label])
 
 
-def empty_nodes(spark) -> DataFrame:
-    return spark.createDataFrame([], NODES_SCHEMA)
-
-
 def empty_edges(spark) -> DataFrame:
     return spark.createDataFrame([], EDGES_SCHEMA)
+
+
+def load(store, stage: str, update_tag: int, *pairs) -> None:
+    """Load one module stage: every ``(batch, schema)`` pair's nodes, then
+    every rel each schema declares, MERGEd in one upsert under ``stage``.
+
+    The reference loads each schema the same way (client/core/tx.py:237-254:
+    MERGE the batch's nodes, then each declared rel).  Rels match against
+    the store plus this stage's own nodes (:func:`live_view`), so a pair may
+    target another pair's label.  A stage already checkpointed under
+    ``update_tag`` returns before compiling anything.
+    """
+    if store.stage_done(stage, update_tag):
+        return
+    nodes = [compile_nodes(batch, schema, update_tag) for batch, schema in pairs]
+    view = live_view(store, *nodes)
+    edges = [
+        e
+        for batch, schema in pairs
+        if (e := compile_edges(batch, schema, view, update_tag)) is not None
+    ]
+    store.upsert(_union(nodes), _union(edges), stage, update_tag)
+
+
+def _union(dfs: list) -> DataFrame | None:
+    """``unionByName`` of the frames (keeping a LabeledFrame's label set);
+    None for no frames."""
+    return reduce(lambda a, b: a.unionByName(b), dfs) if dfs else None

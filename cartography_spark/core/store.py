@@ -58,7 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from cartography_spark.core.loader import EDGE_KEY, EDGES_SCHEMA, NODES_SCHEMA
+from cartography_spark.core.loader import EDGE_KEY, EDGES_SCHEMA, NODES_SCHEMA, _union
 
 
 class _Table(NamedTuple):
@@ -100,10 +100,6 @@ def _per_table(fn, nodes, edges) -> list:
     return [None if df is None else next(done) for df in frames]
 
 
-def _union(dfs: list) -> DataFrame:
-    return reduce(lambda a, b: a.unionByName(b), dfs)
-
-
 def _checkpoint_all(groups: list) -> list:
     """localCheckpoint the union of each group of plans; the groups are
     independent jobs, so they run concurrently (see :func:`_run_all`)."""
@@ -119,6 +115,18 @@ def _merge_props(old_col, new_col):
     kept = F.map_filter(old, lambda k, _: ~F.array_contains(F.map_keys(new), k))
     merged = F.map_concat(kept, new)
     return F.when(F.size(merged) > 0, merged).otherwise(F.lit(None))
+
+
+def _inserts(t: _Table, df: DataFrame, update_tag: int) -> DataFrame:
+    """What :meth:`GraphStore._merge` yields when no committed row matches,
+    without the joins: every row is a MERGE miss, so firstseen resolves to
+    the tag and props get ``_merge_props(NULL, props)``'s empty-map -> NULL
+    normalization."""
+    return (
+        df.withColumn("firstseen", F.coalesce(F.col("firstseen"), F.lit(int(update_tag))))
+        .withColumn("props", _merge_props(F.lit(None).cast("map<string,string>"), F.col("props")))
+        .select(*t.cols)
+    )
 
 
 class GraphStore:
@@ -463,11 +471,9 @@ class GraphStore:
             # merge joins entirely — one pass: execute the batch plan straight
             # into the generation slices (touched labels fall out of the
             # written partition dirs).  Halves the write I/O of a cold bulk
-            # load; identical rows to the merge path (firstseen resolves to
-            # coalesce(NULL, tag) = tag for every row).
-            fs = F.coalesce(F.col("firstseen"), F.lit(int(update_tag)))
+            # load; identical rows to the merge path (see _inserts).
             rows = [
-                None if df is None else df.withColumn("firstseen", fs).select(*t.cols)
+                None if df is None else _inserts(t, df, update_tag)
                 for t, df in zip(TABLES, (new_nodes, new_edges))
             ]
             return self.commit_partial(*rows, None, None, stage, update_tag, metrics)
@@ -550,12 +556,6 @@ class GraphStore:
         )
         untouched = old.join(new.select(*t.key), t.key, "left_anti")
         return untouched.unionByName(merged_new)
-
-    def merge_nodes(self, old, new, update_tag: int, old_rows: int | None = None) -> DataFrame:
-        return self._merge(NODES, old, new, update_tag, old_rows)
-
-    def merge_edges(self, old, new, update_tag: int, old_rows: int | None = None) -> DataFrame:
-        return self._merge(EDGES, old, new, update_tag, old_rows)
 
     def delete(
         self,
@@ -882,19 +882,6 @@ class BufferedSyncStore:
 
     # -- merged read views ----------------------------------------------------
 
-    @staticmethod
-    def _resolve_pending(pending, tag):
-        """What ``_merge`` produces when the committed side is empty, without
-        the joins: every pending row is a MERGE miss, so firstseen resolves
-        to the tag and props get the empty-map->NULL normalization of
-        _merge_props(NULL, props)."""
-        return pending.withColumn(
-            "firstseen", F.coalesce(F.col("firstseen"), F.lit(int(tag)))
-        ).withColumn(
-            "props",
-            _merge_props(F.lit(None).cast("map<string,string>"), F.col("props")),
-        )
-
     def _view(self, t: _Table, version, labels):
         if version is not None:
             return self._store._read(t, version, labels)
@@ -908,7 +895,7 @@ class BufferedSyncStore:
             # No committed row for these labels (manifest lookup, no Spark
             # work) — the COMMON case during a T1 sync, whose module-phase
             # reads all precede the first flush: skip both merge joins.
-            view = self._resolve_pending(pending, self._tag)
+            view = _inserts(t, pending, self._tag)
         else:
             view = self._store._merge(
                 t, self._store._read(t, labels=labels), pending, self._tag, old_rows

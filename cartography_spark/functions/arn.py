@@ -23,10 +23,6 @@ from pyspark.sql import functions as F
 # reorder the extraction before a label filter, so non-ARN ids (okta ids,
 # doc ids) must degrade to NULL, never throw.
 
-def arn_partition(col) -> Column:
-    return F.get(F.split(col, ":"), 1)
-
-
 def arn_service(col) -> Column:
     return F.get(F.split(col, ":"), 2)
 

@@ -1,10 +1,11 @@
 """Scalar coercion helpers (SURVEY §2.2 P3).
 
-Parity: reference cartography/util.py:291-332 — ``dict_value_to_str``,
-``dict_date_to_epoch``, ``camel_to_snake`` — and ``ensure_list``
-(intel/aws/iam.py:531-534).  All are per-row Python there; here the
-data-plane ones are native columns and ``camel_to_snake`` is driver-side
-metadata (a rename needs no data pass).
+Parity: reference cartography/util.py:303-332 — ``dict_date_to_epoch``,
+``camel_to_snake`` — and ``ensure_list`` (intel/aws/iam.py:531-534).  All
+are per-row Python there; here the data-plane ones are native columns and
+``camel_to_snake`` is driver-side metadata (a rename needs no data pass).
+The reference's ``dict_value_to_str`` (util.py:291-302) is the schema
+compiler's property stringification (core/loader.py ``_stringify``).
 """
 
 from __future__ import annotations
@@ -14,11 +15,6 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-
-def to_str(col) -> Column:
-    """Lossless stringification; complex types JSON-encoded (util.py:291-302)."""
-    return F.col(col).cast("string") if isinstance(col, str) else col.cast("string")
 
 
 def date_to_epoch(col) -> Column:

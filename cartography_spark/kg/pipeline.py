@@ -13,6 +13,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
+from cartography_spark.core.cleanup import delete_stale
 from cartography_spark.core.store import GraphStore
 from cartography_spark.kg.materialize import sync_documents
 from cartography_spark.modules import aws_iam, aws_tags, okta, permissions
@@ -442,11 +443,4 @@ def run_cleanup(spark: SparkSession, store: GraphStore, update_tag: int) -> None
         .where(F.col("lastupdated") != int(update_tag))
         .select("src_id", "rel_label", "dst_id")
     )
-    # First syncs have nothing stale — probe before paying the delete path
-    # (which flushes the write-behind buffer and commits).  The probes read
-    # through the lazy merge view; a checkpoint-only upsert records the
-    # stage so resume still skips it.
-    if stale_nodes.isEmpty() and stale_edges.isEmpty():
-        store.upsert(None, None, stage, update_tag)
-        return
-    store.delete(stale_nodes, stale_edges, stage, update_tag)
+    delete_stale(store, stale_nodes, stale_edges, stage, update_tag)

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cartography_spark.core.loader import compile_edges, compile_nodes
+from cartography_spark.core.loader import load
 from cartography_spark.core.model import NodeSchema, PropertyRef
 from cartography_spark.core.store import GraphStore
 from cartography_spark.modules.aws_base import account_resource_rel
@@ -51,20 +51,11 @@ def sync_config_securityhub(
     config_rows: DataFrame,
     update_tag: int,
 ) -> None:
-    if not store.stage_done("aws:securityhub", update_tag):
-        store.upsert(
-            compile_nodes(hubs, SECURITYHUB_SCHEMA, update_tag),
-            compile_edges(hubs, SECURITYHUB_SCHEMA, store.nodes, update_tag),
-            "aws:securityhub",
-            update_tag,
-        )
-    if not store.stage_done("aws:config", update_tag):
-        recorders = config_rows.where(F.col("kind") == "recorder")
-        rules = config_rows.where(F.col("kind") == "rule")
-        nodes = compile_nodes(recorders, CONFIG_RECORDER_SCHEMA, update_tag).unionByName(
-            compile_nodes(rules, CONFIG_RULE_SCHEMA, update_tag)
-        )
-        edges = compile_edges(
-            recorders, CONFIG_RECORDER_SCHEMA, store.nodes, update_tag
-        ).unionByName(compile_edges(rules, CONFIG_RULE_SCHEMA, store.nodes, update_tag))
-        store.upsert(nodes, edges, "aws:config", update_tag)
+    load(store, "aws:securityhub", update_tag, (hubs, SECURITYHUB_SCHEMA))
+    load(
+        store,
+        "aws:config",
+        update_tag,
+        (config_rows.where(F.col("kind") == "recorder"), CONFIG_RECORDER_SCHEMA),
+        (config_rows.where(F.col("kind") == "rule"), CONFIG_RULE_SCHEMA),
+    )

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from cartography_spark.core.loader import compile_edges, compile_nodes
+from cartography_spark.core.loader import compile_edges, compile_nodes, load
 from cartography_spark.core.model import (
     LinkDirection,
     NodeSchema,
@@ -112,14 +112,7 @@ EC2_KEYPAIR_SCHEMA = NodeSchema(
 
 
 def sync_keypairs(store: GraphStore, keypairs: DataFrame, update_tag: int) -> None:
-    if store.stage_done("aws:ec2:keypairs", update_tag):
-        return
-    store.upsert(
-        compile_nodes(keypairs, EC2_KEYPAIR_SCHEMA, update_tag),
-        compile_edges(keypairs, EC2_KEYPAIR_SCHEMA, store.nodes, update_tag),
-        "aws:ec2:keypairs",
-        update_tag,
-    )
+    load(store, "aws:ec2:keypairs", update_tag, (keypairs, EC2_KEYPAIR_SCHEMA))
 
 
 def sync_ec2(
@@ -132,20 +125,8 @@ def sync_ec2(
     """SGs first (instances and rules attach to them), then instances, then
     rule nodes + IpRange links — the reference's intra-module dependency
     order (intel/aws/ec2/__init__.py)."""
-    if not store.stage_done("aws:ec2:sgs", update_tag):
-        store.upsert(
-            compile_nodes(security_groups, EC2_SG_SCHEMA, update_tag),
-            compile_edges(security_groups, EC2_SG_SCHEMA, store.nodes, update_tag),
-            "aws:ec2:sgs",
-            update_tag,
-        )
-    if not store.stage_done("aws:ec2:instances", update_tag):
-        store.upsert(
-            compile_nodes(instances, EC2_INSTANCE_SCHEMA, update_tag),
-            compile_edges(instances, EC2_INSTANCE_SCHEMA, store.nodes, update_tag),
-            "aws:ec2:instances",
-            update_tag,
-        )
+    load(store, "aws:ec2:sgs", update_tag, (security_groups, EC2_SG_SCHEMA))
+    load(store, "aws:ec2:instances", update_tag, (instances, EC2_INSTANCE_SCHEMA))
     if not store.stage_done("aws:ec2:rules", update_tag):
         rule_nodes = compile_nodes(rules, IP_RULE_SCHEMA, update_tag)
         rule_edges = compile_edges(rules, IP_RULE_SCHEMA, store.nodes, update_tag)

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from cartography_spark.core.loader import compile_edges, compile_nodes, live_view
+from cartography_spark.core.loader import compile_edges, compile_nodes, live_view, load
 from cartography_spark.core.model import (
     LinkDirection,
     NodeSchema,
@@ -101,27 +101,9 @@ def sync_ec2_network(
     instances + SGs + subnets) — the reference's RESOURCE_FUNCTIONS order in
     intel/aws/resources.py puts vpc before subnets before network
     interfaces for the same dependency reason."""
-    if not store.stage_done("aws:ec2:vpcs", update_tag):
-        store.upsert(
-            compile_nodes(vpcs, VPC_SCHEMA, update_tag),
-            compile_edges(vpcs, VPC_SCHEMA, store.nodes, update_tag),
-            "aws:ec2:vpcs",
-            update_tag,
-        )
-    if not store.stage_done("aws:ec2:subnets", update_tag):
-        store.upsert(
-            compile_nodes(subnets, SUBNET_SCHEMA, update_tag),
-            compile_edges(subnets, SUBNET_SCHEMA, store.nodes, update_tag),
-            "aws:ec2:subnets",
-            update_tag,
-        )
-    if not store.stage_done("aws:ec2:enis", update_tag):
-        store.upsert(
-            compile_nodes(enis, ENI_SCHEMA, update_tag),
-            compile_edges(enis, ENI_SCHEMA, store.nodes, update_tag),
-            "aws:ec2:enis",
-            update_tag,
-        )
+    load(store, "aws:ec2:vpcs", update_tag, (vpcs, VPC_SCHEMA))
+    load(store, "aws:ec2:subnets", update_tag, (subnets, SUBNET_SCHEMA))
+    load(store, "aws:ec2:enis", update_tag, (enis, ENI_SCHEMA))
 
 
 # --- AutoScalingGroups + launch configurations ------------------------------

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from cartography_spark.core.loader import compile_edges, compile_nodes
+from cartography_spark.core.loader import load
 from cartography_spark.core.model import (
     LinkDirection,
     NodeSchema,
@@ -92,24 +92,6 @@ def sync_ec2_storage(
 ) -> None:
     """Volumes first (snapshots attach to them), then snapshots, then EIPs
     (attach to instances + ENIs)."""
-    if not store.stage_done("aws:ec2:volumes", update_tag):
-        store.upsert(
-            compile_nodes(volumes, VOLUME_SCHEMA, update_tag),
-            compile_edges(volumes, VOLUME_SCHEMA, store.nodes, update_tag),
-            "aws:ec2:volumes",
-            update_tag,
-        )
-    if not store.stage_done("aws:ec2:snapshots", update_tag):
-        store.upsert(
-            compile_nodes(snapshots, SNAPSHOT_SCHEMA, update_tag),
-            compile_edges(snapshots, SNAPSHOT_SCHEMA, store.nodes, update_tag),
-            "aws:ec2:snapshots",
-            update_tag,
-        )
-    if not store.stage_done("aws:ec2:eips", update_tag):
-        store.upsert(
-            compile_nodes(eips, EIP_SCHEMA, update_tag),
-            compile_edges(eips, EIP_SCHEMA, store.nodes, update_tag),
-            "aws:ec2:eips",
-            update_tag,
-        )
+    load(store, "aws:ec2:volumes", update_tag, (volumes, VOLUME_SCHEMA))
+    load(store, "aws:ec2:snapshots", update_tag, (snapshots, SNAPSHOT_SCHEMA))
+    load(store, "aws:ec2:eips", update_tag, (eips, EIP_SCHEMA))

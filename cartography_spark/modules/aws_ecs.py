@@ -24,9 +24,8 @@ broadcast; the task->taskdef gate keys on unique arns (no skew).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from cartography_spark.core.loader import compile_edges, compile_nodes, live_view
+from cartography_spark.core.loader import load
 from cartography_spark.core.model import (
     LinkDirection,
     NodeSchema,
@@ -112,27 +111,13 @@ def sync_ecs(
     tasks: DataFrame,
     update_tag: int,
 ) -> None:
-    if store.stage_done("aws:ecs", update_tag):
-        return
-    containers = tasks.select("arn", "container_id", "image_digest")
-    node_frames = [
-        compile_nodes(clusters, ECS_CLUSTER_SCHEMA, update_tag),
-        compile_nodes(task_defs, ECS_TASK_DEF_SCHEMA, update_tag),
-        compile_nodes(services, ECS_SERVICE_SCHEMA, update_tag),
-        compile_nodes(tasks.drop("container_id", "image_digest"), ECS_TASK_SCHEMA, update_tag),
-        compile_nodes(containers, ECS_CONTAINER_SCHEMA, update_tag),
-    ]
-    nodes = node_frames[0]
-    for f in node_frames[1:]:
-        nodes = nodes.unionByName(f)
-    live = live_view(store, nodes)
-    edge_frames = [
-        compile_edges(task_defs, ECS_TASK_DEF_SCHEMA, store.nodes, update_tag),
-        compile_edges(services, ECS_SERVICE_SCHEMA, live, update_tag),
-        compile_edges(tasks, ECS_TASK_SCHEMA, live, update_tag),
-        compile_edges(containers, ECS_CONTAINER_SCHEMA, live, update_tag),
-    ]
-    edges = edge_frames[0]
-    for f in edge_frames[1:]:
-        edges = edges.unionByName(f)
-    store.upsert(nodes, edges, "aws:ecs", update_tag)
+    load(
+        store,
+        "aws:ecs",
+        update_tag,
+        (clusters, ECS_CLUSTER_SCHEMA),
+        (task_defs, ECS_TASK_DEF_SCHEMA),
+        (services, ECS_SERVICE_SCHEMA),
+        (tasks, ECS_TASK_SCHEMA),
+        (tasks.select("arn", "container_id", "image_digest"), ECS_CONTAINER_SCHEMA),
+    )

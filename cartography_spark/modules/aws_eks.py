@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from cartography_spark.core.loader import compile_edges, compile_nodes
+from cartography_spark.core.loader import load
 from cartography_spark.core.model import NodeSchema, PropertyRef
 from cartography_spark.core.store import GraphStore
 from cartography_spark.modules.aws_base import account_resource_rel
@@ -28,11 +28,4 @@ EKS_CLUSTER_SCHEMA = NodeSchema(
 
 
 def sync_eks(store: GraphStore, clusters: DataFrame, update_tag: int) -> None:
-    if store.stage_done("aws:eks", update_tag):
-        return
-    store.upsert(
-        compile_nodes(clusters, EKS_CLUSTER_SCHEMA, update_tag),
-        compile_edges(clusters, EKS_CLUSTER_SCHEMA, store.nodes, update_tag),
-        "aws:eks",
-        update_tag,
-    )
+    load(store, "aws:eks", update_tag, (clusters, EKS_CLUSTER_SCHEMA))

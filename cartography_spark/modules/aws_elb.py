@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cartography_spark.core.loader import compile_edges, compile_nodes
+from cartography_spark.core.loader import compile_edges, compile_nodes, load
 from cartography_spark.core.model import (
     LinkDirection,
     NodeSchema,
@@ -204,16 +204,13 @@ def sync_elb(
             )
         )
         store.upsert(nodes, edges, "aws:elb:lbs", update_tag)
-    if not store.stage_done("aws:elb:listeners", update_tag):
-        l1 = _listener_rows(elbs, "elb_id")
-        l2 = _listener_rows(elbv2s, "elbv2_id")
-        nodes = compile_nodes(l1, ELB_LISTENER_SCHEMA, update_tag).unionByName(
-            compile_nodes(l2, ELBV2_LISTENER_SCHEMA, update_tag)
-        )
-        edges = compile_edges(l1, ELB_LISTENER_SCHEMA, store.nodes, update_tag).unionByName(
-            compile_edges(l2, ELBV2_LISTENER_SCHEMA, store.nodes, update_tag)
-        )
-        store.upsert(nodes, edges, "aws:elb:listeners", update_tag)
+    load(
+        store,
+        "aws:elb:listeners",
+        update_tag,
+        (_listener_rows(elbs, "elb_id"), ELB_LISTENER_SCHEMA),
+        (_listener_rows(elbv2s, "elbv2_id"), ELBV2_LISTENER_SCHEMA),
+    )
     if not store.stage_done("aws:elb:targets", update_tag):
         e1 = compile_edges(
             _explode_targets(elbs, "elb_id"),

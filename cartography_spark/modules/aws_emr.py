@@ -9,8 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from cartography_spark.core.cleanup import cleanup_schema
-from cartography_spark.core.loader import compile_edges, compile_nodes
+from cartography_spark.core.loader import load
 from cartography_spark.core.model import NodeSchema, PropertyRef
 from cartography_spark.core.store import GraphStore
 from cartography_spark.modules.aws_base import account_resource_rel
@@ -32,13 +31,4 @@ EMR_CLUSTER_SCHEMA = NodeSchema(
 
 
 def sync_emr(store: GraphStore, clusters: DataFrame, update_tag: int) -> None:
-    stage = "aws:emr"
-    if store.stage_done(stage, update_tag):
-        return
-    nodes = compile_nodes(clusters, EMR_CLUSTER_SCHEMA, update_tag)
-    edges = compile_edges(clusters, EMR_CLUSTER_SCHEMA, store.nodes, update_tag)
-    store.upsert(nodes, edges, stage, update_tag)
-
-
-def cleanup_emr(store: GraphStore, update_tag: int, account_id: str) -> None:
-    cleanup_schema(store, EMR_CLUSTER_SCHEMA, update_tag, account_id)
+    load(store, "aws:emr", update_tag, (clusters, EMR_CLUSTER_SCHEMA))

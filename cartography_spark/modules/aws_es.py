@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cartography_spark.core.loader import compile_edges, compile_nodes, live_view
+from cartography_spark.core.loader import load
 from cartography_spark.core.model import (
     LinkDirection,
     NodeSchema,
@@ -76,14 +76,10 @@ def es_endpoint_records(domains: DataFrame) -> DataFrame:
 
 
 def sync_elasticsearch(store: GraphStore, domains: DataFrame, update_tag: int) -> None:
-    if store.stage_done("aws:es", update_tag):
-        return
-    recs = es_endpoint_records(domains)
-    nodes = compile_nodes(domains, ES_DOMAIN_SCHEMA, update_tag).unionByName(
-        compile_nodes(recs, ES_DNS_RECORD_SCHEMA, update_tag)
+    load(
+        store,
+        "aws:es",
+        update_tag,
+        (domains, ES_DOMAIN_SCHEMA),
+        (es_endpoint_records(domains), ES_DNS_RECORD_SCHEMA),
     )
-    live = live_view(store, nodes)
-    edges = compile_edges(domains, ES_DOMAIN_SCHEMA, store.nodes, update_tag).unionByName(
-        compile_edges(recs, ES_DNS_RECORD_SCHEMA, live, update_tag)
-    )
-    store.upsert(nodes, edges, "aws:es", update_tag)

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cartography_spark.core.loader import compile_edges, compile_nodes, edge_rows
+from cartography_spark.core.loader import compile_edges, compile_nodes, edge_rows, load
 from cartography_spark.core.model import (
     LinkDirection,
     NodeSchema,
@@ -126,16 +126,9 @@ def sync_principals(
     update_tag: int,
 ) -> None:
     """Load user/group/role nodes + RESOURCE edges in one commit each."""
-    for stage, df, schema in (
-        ("aws:iam:users", users, USER_SCHEMA),
-        ("aws:iam:groups", groups, GROUP_SCHEMA),
-        ("aws:iam:roles", roles.drop("trust_principals"), ROLE_SCHEMA),
-    ):
-        if store.stage_done(stage, update_tag):
-            continue
-        nodes = compile_nodes(df, schema, update_tag)
-        edges = compile_edges(df, schema, store.nodes, update_tag)
-        store.upsert(nodes, edges, stage, update_tag)
+    load(store, "aws:iam:users", update_tag, (users, USER_SCHEMA))
+    load(store, "aws:iam:groups", update_tag, (groups, GROUP_SCHEMA))
+    load(store, "aws:iam:roles", update_tag, (roles.drop("trust_principals"), ROLE_SCHEMA))
 
 
 def sync_role_trusts(store: GraphStore, roles: DataFrame, update_tag: int) -> None:

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from cartography_spark.core.loader import compile_edges, compile_nodes, live_view
+from cartography_spark.core.loader import compile_edges, compile_nodes, live_view, load
 from cartography_spark.core.model import (
     LinkDirection,
     NodeSchema,
@@ -141,27 +141,11 @@ def sync_sqs(store: GraphStore, queues: DataFrame, update_tag: int) -> None:
 def sync_kms(
     store: GraphStore, keys: DataFrame, aliases: DataFrame, update_tag: int
 ) -> None:
-    if store.stage_done("aws:kms", update_tag):
-        return
-    nodes = compile_nodes(keys, KMS_KEY_SCHEMA, update_tag).unionByName(
-        compile_nodes(aliases, KMS_ALIAS_SCHEMA, update_tag)
-    )
-    live = live_view(store, nodes)
-    edges = compile_edges(keys, KMS_KEY_SCHEMA, store.nodes, update_tag).unionByName(
-        compile_edges(aliases, KMS_ALIAS_SCHEMA, live, update_tag)
-    )
-    store.upsert(nodes, edges, "aws:kms", update_tag)
+    load(store, "aws:kms", update_tag, (keys, KMS_KEY_SCHEMA), (aliases, KMS_ALIAS_SCHEMA))
 
 
 def sync_dynamodb(store: GraphStore, tables: DataFrame, update_tag: int) -> None:
-    if store.stage_done("aws:dynamodb", update_tag):
-        return
-    store.upsert(
-        compile_nodes(tables, DYNAMODB_TABLE_SCHEMA, update_tag),
-        compile_edges(tables, DYNAMODB_TABLE_SCHEMA, store.nodes, update_tag),
-        "aws:dynamodb",
-        update_tag,
-    )
+    load(store, "aws:dynamodb", update_tag, (tables, DYNAMODB_TABLE_SCHEMA))
 
 
 def sync_apigateway(
@@ -171,20 +155,14 @@ def sync_apigateway(
     resources: DataFrame,
     update_tag: int,
 ) -> None:
-    if store.stage_done("aws:apigateway", update_tag):
-        return
-    nodes = (
-        compile_nodes(apis, APIGW_API_SCHEMA, update_tag)
-        .unionByName(compile_nodes(stages, APIGW_STAGE_SCHEMA, update_tag))
-        .unionByName(compile_nodes(resources, APIGW_RESOURCE_SCHEMA, update_tag))
+    load(
+        store,
+        "aws:apigateway",
+        update_tag,
+        (apis, APIGW_API_SCHEMA),
+        (stages, APIGW_STAGE_SCHEMA),
+        (resources, APIGW_RESOURCE_SCHEMA),
     )
-    live = live_view(store, nodes)
-    edges = (
-        compile_edges(apis, APIGW_API_SCHEMA, store.nodes, update_tag)
-        .unionByName(compile_edges(stages, APIGW_STAGE_SCHEMA, live, update_tag))
-        .unionByName(compile_edges(resources, APIGW_RESOURCE_SCHEMA, live, update_tag))
-    )
-    store.upsert(nodes, edges, "aws:apigateway", update_tag)
 
 
 # --- Redshift / ElastiCache / Secrets Manager ------------------------------
@@ -244,38 +222,19 @@ SECRET_SCHEMA = NodeSchema(
 
 
 def sync_redshift(store: GraphStore, clusters: DataFrame, update_tag: int) -> None:
-    if store.stage_done("aws:redshift", update_tag):
-        return
-    store.upsert(
-        compile_nodes(clusters, REDSHIFT_CLUSTER_SCHEMA, update_tag),
-        compile_edges(clusters, REDSHIFT_CLUSTER_SCHEMA, store.nodes, update_tag),
-        "aws:redshift",
-        update_tag,
-    )
+    load(store, "aws:redshift", update_tag, (clusters, REDSHIFT_CLUSTER_SCHEMA))
 
 
 def sync_elasticache(store: GraphStore, clusters: DataFrame, update_tag: int) -> None:
-    if store.stage_done("aws:elasticache", update_tag):
-        return
-    topics = clusters.where("topic_arn IS NOT NULL").select(
-        "topic_arn", "arn", "account_id"
+    topics = clusters.where("topic_arn IS NOT NULL").select("topic_arn", "arn", "account_id")
+    load(
+        store,
+        "aws:elasticache",
+        update_tag,
+        (clusters, ELASTICACHE_CLUSTER_SCHEMA),
+        (topics, ELASTICACHE_TOPIC_SCHEMA),
     )
-    nodes = compile_nodes(clusters, ELASTICACHE_CLUSTER_SCHEMA, update_tag).unionByName(
-        compile_nodes(topics, ELASTICACHE_TOPIC_SCHEMA, update_tag)
-    )
-    live = live_view(store, nodes)
-    edges = compile_edges(clusters, ELASTICACHE_CLUSTER_SCHEMA, store.nodes, update_tag).unionByName(
-        compile_edges(topics, ELASTICACHE_TOPIC_SCHEMA, live, update_tag)
-    )
-    store.upsert(nodes, edges, "aws:elasticache", update_tag)
 
 
 def sync_secretsmanager(store: GraphStore, secrets: DataFrame, update_tag: int) -> None:
-    if store.stage_done("aws:secretsmanager", update_tag):
-        return
-    store.upsert(
-        compile_nodes(secrets, SECRET_SCHEMA, update_tag),
-        compile_edges(secrets, SECRET_SCHEMA, store.nodes, update_tag),
-        "aws:secretsmanager",
-        update_tag,
-    )
+    load(store, "aws:secretsmanager", update_tag, (secrets, SECRET_SCHEMA))

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from cartography_spark.core.loader import compile_edges, compile_nodes
+from cartography_spark.core.loader import load
 from cartography_spark.core.model import NodeSchema, PropertyRef
 from cartography_spark.core.store import GraphStore
 from cartography_spark.modules.aws_base import account_resource_rel
@@ -41,17 +41,5 @@ ECR_IMAGE_SCHEMA = NodeSchema(
 def sync_lambda_ecr(
     store: GraphStore, lambdas: DataFrame, images: DataFrame, update_tag: int
 ) -> None:
-    if not store.stage_done("aws:lambda", update_tag):
-        store.upsert(
-            compile_nodes(lambdas, LAMBDA_SCHEMA, update_tag),
-            compile_edges(lambdas, LAMBDA_SCHEMA, store.nodes, update_tag),
-            "aws:lambda",
-            update_tag,
-        )
-    if not store.stage_done("aws:ecr", update_tag):
-        store.upsert(
-            compile_nodes(images, ECR_IMAGE_SCHEMA, update_tag),
-            compile_edges(images, ECR_IMAGE_SCHEMA, store.nodes, update_tag),
-            "aws:ecr",
-            update_tag,
-        )
+    load(store, "aws:lambda", update_tag, (lambdas, LAMBDA_SCHEMA))
+    load(store, "aws:ecr", update_tag, (images, ECR_IMAGE_SCHEMA))

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from cartography_spark.core.loader import compile_edges, compile_nodes
+from cartography_spark.core.loader import load
 from cartography_spark.core.model import NodeSchema, PropertyRef
 from cartography_spark.core.store import GraphStore
 from cartography_spark.modules.aws_base import account_resource_rel
@@ -44,11 +44,4 @@ RDS_INSTANCE_SCHEMA = NodeSchema(
 
 
 def sync_rds(store: GraphStore, instances: DataFrame, update_tag: int) -> None:
-    if store.stage_done("aws:rds", update_tag):
-        return
-    store.upsert(
-        compile_nodes(instances, RDS_INSTANCE_SCHEMA, update_tag),
-        compile_edges(instances, RDS_INSTANCE_SCHEMA, store.nodes, update_tag),
-        "aws:rds",
-        update_tag,
-    )
+    load(store, "aws:rds", update_tag, (instances, RDS_INSTANCE_SCHEMA))

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from cartography_spark.core.loader import compile_edges, compile_nodes
+from cartography_spark.core.loader import load
 from cartography_spark.core.model import (
     LinkDirection,
     NodeSchema,
@@ -56,17 +56,5 @@ S3_ACL_SCHEMA = NodeSchema(
 def sync_s3(
     store: GraphStore, buckets: DataFrame, acls: DataFrame, update_tag: int
 ) -> None:
-    if not store.stage_done("aws:s3", update_tag):
-        store.upsert(
-            compile_nodes(buckets, S3_BUCKET_SCHEMA, update_tag),
-            compile_edges(buckets, S3_BUCKET_SCHEMA, store.nodes, update_tag),
-            "aws:s3",
-            update_tag,
-        )
-    if not store.stage_done("aws:s3:acls", update_tag):
-        store.upsert(
-            compile_nodes(acls, S3_ACL_SCHEMA, update_tag),
-            compile_edges(acls, S3_ACL_SCHEMA, store.nodes, update_tag),
-            "aws:s3:acls",
-            update_tag,
-        )
+    load(store, "aws:s3", update_tag, (buckets, S3_BUCKET_SCHEMA))
+    load(store, "aws:s3:acls", update_tag, (acls, S3_ACL_SCHEMA))

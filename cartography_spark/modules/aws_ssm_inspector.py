@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from cartography_spark.core.loader import compile_edges, compile_nodes, live_view
+from cartography_spark.core.loader import load
 from cartography_spark.core.model import (
     LinkDirection,
     NodeSchema,
@@ -89,26 +89,8 @@ INSPECTOR_FINDING_SCHEMA = NodeSchema(
 def sync_ssm(
     store: GraphStore, info: DataFrame, patches: DataFrame, update_tag: int
 ) -> None:
-    if store.stage_done("aws:ssm", update_tag):
-        return
-    nodes = compile_nodes(info, SSM_INFO_SCHEMA, update_tag).unionByName(
-        compile_nodes(patches, SSM_PATCH_SCHEMA, update_tag)
-    )
-    live = live_view(store, nodes)
-    edges = compile_edges(info, SSM_INFO_SCHEMA, live, update_tag).unionByName(
-        compile_edges(patches, SSM_PATCH_SCHEMA, live, update_tag)
-    )
-    store.upsert(nodes, edges, "aws:ssm", update_tag)
+    load(store, "aws:ssm", update_tag, (info, SSM_INFO_SCHEMA), (patches, SSM_PATCH_SCHEMA))
 
 
 def sync_inspector(store: GraphStore, findings: DataFrame, update_tag: int) -> None:
-    if store.stage_done("aws:inspector", update_tag):
-        return
-    nodes = compile_nodes(findings, INSPECTOR_FINDING_SCHEMA, update_tag)
-    live = live_view(store, nodes)
-    store.upsert(
-        nodes,
-        compile_edges(findings, INSPECTOR_FINDING_SCHEMA, live, update_tag),
-        "aws:inspector",
-        update_tag,
-    )
+    load(store, "aws:inspector", update_tag, (findings, INSPECTOR_FINDING_SCHEMA))

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from cartography_spark.core.loader import compile_edges, compile_nodes, live_view
+from cartography_spark.core.loader import compile_edges, compile_nodes, live_view, load
 from cartography_spark.core.model import (
     LinkDirection,
     NodeSchema,
@@ -46,20 +46,8 @@ AZURE_VM_SCHEMA = NodeSchema(
 def sync_azure(
     store: GraphStore, subscriptions: DataFrame, vms: DataFrame, update_tag: int
 ) -> None:
-    if not store.stage_done("azure:subscriptions", update_tag):
-        store.upsert(
-            compile_nodes(subscriptions, AZURE_SUBSCRIPTION_SCHEMA, update_tag),
-            None,
-            "azure:subscriptions",
-            update_tag,
-        )
-    if not store.stage_done("azure:vms", update_tag):
-        store.upsert(
-            compile_nodes(vms, AZURE_VM_SCHEMA, update_tag),
-            compile_edges(vms, AZURE_VM_SCHEMA, store.nodes, update_tag),
-            "azure:vms",
-            update_tag,
-        )
+    load(store, "azure:subscriptions", update_tag, (subscriptions, AZURE_SUBSCRIPTION_SCHEMA))
+    load(store, "azure:vms", update_tag, (vms, AZURE_VM_SCHEMA))
 
 
 # --- storage + SQL families (reference storage.py, sql.py) -----------------
@@ -142,31 +130,17 @@ def sync_azure_storage_sql(
 ) -> None:
     """Storage account -> blob service -> container chain and SQL server ->
     database family (reference storage.py / sql.py sync order)."""
-    if store.stage_done("azure:storage_sql", update_tag):
-        return
     blob_services = blob_containers.select("blob_service_id", "account_id").distinct()
-    node_frames = [
-        compile_nodes(storage_accounts, AZURE_STORAGE_ACCOUNT_SCHEMA, update_tag),
-        compile_nodes(blob_services, AZURE_BLOB_SERVICE_SCHEMA, update_tag),
-        compile_nodes(blob_containers, AZURE_BLOB_CONTAINER_SCHEMA, update_tag),
-        compile_nodes(sql_servers, AZURE_SQL_SERVER_SCHEMA, update_tag),
-        compile_nodes(sql_databases, AZURE_SQL_DATABASE_SCHEMA, update_tag),
-    ]
-    nodes = node_frames[0]
-    for f in node_frames[1:]:
-        nodes = nodes.unionByName(f)
-    live = live_view(store, nodes)
-    edge_frames = [
-        compile_edges(storage_accounts, AZURE_STORAGE_ACCOUNT_SCHEMA, store.nodes, update_tag),
-        compile_edges(blob_services, AZURE_BLOB_SERVICE_SCHEMA, live, update_tag),
-        compile_edges(blob_containers, AZURE_BLOB_CONTAINER_SCHEMA, live, update_tag),
-        compile_edges(sql_servers, AZURE_SQL_SERVER_SCHEMA, store.nodes, update_tag),
-        compile_edges(sql_databases, AZURE_SQL_DATABASE_SCHEMA, live, update_tag),
-    ]
-    edges = edge_frames[0]
-    for f in edge_frames[1:]:
-        edges = edges.unionByName(f)
-    store.upsert(nodes, edges, "azure:storage_sql", update_tag)
+    load(
+        store,
+        "azure:storage_sql",
+        update_tag,
+        (storage_accounts, AZURE_STORAGE_ACCOUNT_SCHEMA),
+        (blob_services, AZURE_BLOB_SERVICE_SCHEMA),
+        (blob_containers, AZURE_BLOB_CONTAINER_SCHEMA),
+        (sql_servers, AZURE_SQL_SERVER_SCHEMA),
+        (sql_databases, AZURE_SQL_DATABASE_SCHEMA),
+    )
 
 
 # --- round-3 depth: CosmosDB ------------------------------------------------
@@ -277,16 +251,14 @@ def sync_cosmosdb(
     sql_databases → containers)."""
     from pyspark.sql import functions as F
 
-    if not store.stage_done("azure:cosmosdb:accounts", update_tag):
-        nodes = (
-            compile_nodes(accounts, COSMOS_ACCOUNT_SCHEMA, update_tag)
-            .unionByName(compile_nodes(accounts, COSMOS_WRITE_LOC_SCHEMA, update_tag))
-            .unionByName(compile_nodes(accounts, COSMOS_READ_LOC_SCHEMA, update_tag))
-        )
-        edges = compile_edges(
-            accounts, COSMOS_ACCOUNT_SCHEMA, live_view(store, nodes), update_tag
-        )
-        store.upsert(nodes, edges, "azure:cosmosdb:accounts", update_tag)
+    load(
+        store,
+        "azure:cosmosdb:accounts",
+        update_tag,
+        (accounts, COSMOS_ACCOUNT_SCHEMA),
+        (accounts, COSMOS_WRITE_LOC_SCHEMA),
+        (accounts, COSMOS_READ_LOC_SCHEMA),
+    )
     if not store.stage_done("azure:cosmosdb:databases", update_tag):
         sql = databases.where(F.col("db_kind") == "sql")
         mongo = databases.where(F.col("db_kind") == "mongo")

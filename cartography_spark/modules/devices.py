@@ -24,9 +24,8 @@ reference's cross-feed CVE dedupe behavior.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from cartography_spark.core.loader import compile_edges, compile_nodes, live_view
+from cartography_spark.core.loader import load
 from cartography_spark.core.model import (
     LinkDirection,
     NodeSchema,
@@ -148,34 +147,20 @@ def sync_devices(
     snipeit_assets: DataFrame,
     update_tag: int,
 ) -> None:
-    if store.stage_done("devices", update_tag):
-        return
     spark = hosts.sparkSession
-    cves = vulns.select("cve_id").distinct()
-    node_frames = [
-        compile_nodes(hosts, CROWDSTRIKE_HOST_SCHEMA, update_tag),
-        compile_nodes(vulns, SPOTLIGHT_VULN_SCHEMA, update_tag),
-        compile_nodes(cves, CVE_SCHEMA, update_tag),
-        compile_nodes(_single(spark, tenant_id="kandji-tenant"), KANDJI_TENANT_SCHEMA, update_tag),
-        compile_nodes(kandji, KANDJI_DEVICE_SCHEMA, update_tag),
-        compile_nodes(jamf, JAMF_GROUP_SCHEMA, update_tag),
-        compile_nodes(_single(spark, root_id="bigfix-root"), BIGFIX_ROOT_SCHEMA, update_tag),
-        compile_nodes(bigfix, BIGFIX_COMPUTER_SCHEMA, update_tag),
-        compile_nodes(_single(spark, tenant_id="snipeit-tenant"), SNIPEIT_TENANT_SCHEMA, update_tag),
-        compile_nodes(snipeit_users, SNIPEIT_USER_SCHEMA, update_tag),
-        compile_nodes(snipeit_assets, SNIPEIT_ASSET_SCHEMA, update_tag),
-    ]
-    nodes = node_frames[0]
-    for f in node_frames[1:]:
-        nodes = nodes.unionByName(f)
-    live = live_view(store, nodes)
-    edge_frames = [
-        compile_edges(vulns, SPOTLIGHT_VULN_SCHEMA, live, update_tag),
-        compile_edges(kandji, KANDJI_DEVICE_SCHEMA, live, update_tag),
-        compile_edges(bigfix, BIGFIX_COMPUTER_SCHEMA, live, update_tag),
-        compile_edges(snipeit_assets, SNIPEIT_ASSET_SCHEMA, live, update_tag),
-    ]
-    edges = edge_frames[0]
-    for f in edge_frames[1:]:
-        edges = edges.unionByName(f)
-    store.upsert(nodes, edges, "devices", update_tag)
+    load(
+        store,
+        "devices",
+        update_tag,
+        (hosts, CROWDSTRIKE_HOST_SCHEMA),
+        (vulns, SPOTLIGHT_VULN_SCHEMA),
+        (vulns.select("cve_id").distinct(), CVE_SCHEMA),
+        (_single(spark, tenant_id="kandji-tenant"), KANDJI_TENANT_SCHEMA),
+        (kandji, KANDJI_DEVICE_SCHEMA),
+        (jamf, JAMF_GROUP_SCHEMA),
+        (_single(spark, root_id="bigfix-root"), BIGFIX_ROOT_SCHEMA),
+        (bigfix, BIGFIX_COMPUTER_SCHEMA),
+        (_single(spark, tenant_id="snipeit-tenant"), SNIPEIT_TENANT_SCHEMA),
+        (snipeit_users, SNIPEIT_USER_SCHEMA),
+        (snipeit_assets, SNIPEIT_ASSET_SCHEMA),
+    )

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from cartography_spark.core.loader import compile_edges, compile_nodes, live_view
+from cartography_spark.core.loader import load
 from cartography_spark.core.model import (
     LinkDirection,
     NodeSchema,
@@ -58,15 +58,11 @@ def sync_digitalocean(
     droplets: DataFrame,
     update_tag: int,
 ) -> None:
-    if store.stage_done("digitalocean", update_tag):
-        return
-    nodes = (
-        compile_nodes(accounts, DO_ACCOUNT_SCHEMA, update_tag)
-        .unionByName(compile_nodes(projects, DO_PROJECT_SCHEMA, update_tag))
-        .unionByName(compile_nodes(droplets, DO_DROPLET_SCHEMA, update_tag))
+    load(
+        store,
+        "digitalocean",
+        update_tag,
+        (accounts, DO_ACCOUNT_SCHEMA),
+        (projects, DO_PROJECT_SCHEMA),
+        (droplets, DO_DROPLET_SCHEMA),
     )
-    live = live_view(store, nodes)
-    edges = compile_edges(projects, DO_PROJECT_SCHEMA, live, update_tag).unionByName(
-        compile_edges(droplets, DO_DROPLET_SCHEMA, live, update_tag)
-    )
-    store.upsert(nodes, edges, "digitalocean", update_tag)

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from cartography_spark.core.loader import compile_edges, compile_nodes
+from cartography_spark.core.loader import compile_edges, compile_nodes, load
 from cartography_spark.core.model import (
     LinkDirection,
     NodeSchema,
@@ -195,27 +195,10 @@ def sync_gcp(
 ) -> None:
     from pyspark.sql import functions as F
 
-    if not store.stage_done("gcp:projects", update_tag):
-        store.upsert(
-            compile_nodes(projects, GCP_PROJECT_SCHEMA, update_tag),
-            None,
-            "gcp:projects",
-            update_tag,
-        )
-    if not store.stage_done("gcp:instances", update_tag):
-        store.upsert(
-            compile_nodes(instances, GCP_INSTANCE_SCHEMA, update_tag),
-            compile_edges(instances, GCP_INSTANCE_SCHEMA, store.nodes, update_tag),
-            "gcp:instances",
-            update_tag,
-        )
-    if vpcs is not None and not store.stage_done("gcp:vpcs", update_tag):
-        store.upsert(
-            compile_nodes(vpcs, GCP_VPC_SCHEMA, update_tag),
-            compile_edges(vpcs, GCP_VPC_SCHEMA, store.nodes, update_tag),
-            "gcp:vpcs",
-            update_tag,
-        )
+    load(store, "gcp:projects", update_tag, (projects, GCP_PROJECT_SCHEMA))
+    load(store, "gcp:instances", update_tag, (instances, GCP_INSTANCE_SCHEMA))
+    if vpcs is not None:
+        load(store, "gcp:vpcs", update_tag, (vpcs, GCP_VPC_SCHEMA))
     if firewalls is not None and not store.stage_done("gcp:firewalls", update_tag):
         fw_nodes = compile_nodes(firewalls, GCP_FIREWALL_SCHEMA, update_tag)
         tag_nodes = compile_nodes(
@@ -276,13 +259,8 @@ def sync_gcp(
             "gcp:instance_net_edges",
             update_tag,
         )
-    if gke is not None and not store.stage_done("gcp:gke", update_tag):
-        store.upsert(
-            compile_nodes(gke, GKE_CLUSTER_SCHEMA, update_tag),
-            compile_edges(gke, GKE_CLUSTER_SCHEMA, store.nodes, update_tag),
-            "gcp:gke",
-            update_tag,
-        )
+    if gke is not None:
+        load(store, "gcp:gke", update_tag, (gke, GKE_CLUSTER_SCHEMA))
 
 
 # --- round-3 breadth: GCS buckets + Cloud DNS ------------------------------
@@ -347,24 +325,6 @@ def sync_gcp_storage_dns(
     The cross-provider record join (GCPRecordSet CNAME values landing in the
     AWS Route53 DNSRecord name space) runs as an analysis derivation —
     analysis/jobs.py gcp_aws_dns_links."""
-    if not store.stage_done("gcp:buckets", update_tag):
-        store.upsert(
-            compile_nodes(buckets, BUCKET_SCHEMA, update_tag),
-            compile_edges(buckets, BUCKET_SCHEMA, store.nodes, update_tag),
-            "gcp:buckets",
-            update_tag,
-        )
-    if not store.stage_done("gcp:dns_zones", update_tag):
-        store.upsert(
-            compile_nodes(dns_zones, DNS_ZONE_SCHEMA, update_tag),
-            compile_edges(dns_zones, DNS_ZONE_SCHEMA, store.nodes, update_tag),
-            "gcp:dns_zones",
-            update_tag,
-        )
-    if not store.stage_done("gcp:dns_records", update_tag):
-        store.upsert(
-            compile_nodes(dns_records, RECORD_SET_SCHEMA, update_tag),
-            compile_edges(dns_records, RECORD_SET_SCHEMA, store.nodes, update_tag),
-            "gcp:dns_records",
-            update_tag,
-        )
+    load(store, "gcp:buckets", update_tag, (buckets, BUCKET_SCHEMA))
+    load(store, "gcp:dns_zones", update_tag, (dns_zones, DNS_ZONE_SCHEMA))
+    load(store, "gcp:dns_records", update_tag, (dns_records, RECORD_SET_SCHEMA))

@@ -13,9 +13,8 @@ Parity:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from cartography_spark.core.loader import compile_edges, compile_nodes
+from cartography_spark.core.loader import compile_edges, load
 from cartography_spark.core.model import (
     LinkDirection,
     NodeSchema,
@@ -85,19 +84,12 @@ def sync_github(
     users: DataFrame,
     update_tag: int,
 ) -> None:
-    if not store.stage_done("github:repos", update_tag):
-        store.upsert(
-            compile_nodes(repos, REPO_SCHEMA, update_tag), None, "github:repos", update_tag
-        )
+    load(store, "github:repos", update_tag, (repos, REPO_SCHEMA))
+    load(store, "github:libs", update_tag, (requirements, LIBRARY_SCHEMA))
     if not store.stage_done("github:requires", update_tag):
-        libs = compile_nodes(requirements, LIBRARY_SCHEMA, update_tag)
-        store.upsert(libs, None, "github:libs", update_tag)
         edges = compile_edges(requirements, REQUIRES_SCHEMA, store.nodes, update_tag)
         store.upsert(None, edges, "github:requires", update_tag)
-    if not store.stage_done("github:users", update_tag):
-        nodes = compile_nodes(users, GITHUB_USER_SCHEMA, update_tag)
-        edges = compile_edges(users, GITHUB_USER_SCHEMA, store.nodes, update_tag)
-        store.upsert(nodes, edges, "github:users", update_tag)
+    load(store, "github:users", update_tag, (users, GITHUB_USER_SCHEMA))
 
 
 # --- round-3 breadth: organization + teams with per-permission repo rels ---
@@ -152,12 +144,5 @@ def sync_github_teams(
     """Org node first, then teams (multi-row per team — one per repo grant;
     the node dedupe window collapses them) with ADMIN/WRITE/READ edges
     (reference intel/github/teams.py sync)."""
-    if not store.stage_done("github:orgs", update_tag):
-        store.upsert(compile_nodes(orgs, ORG_SCHEMA, update_tag), None, "github:orgs", update_tag)
-    if not store.stage_done("github:teams", update_tag):
-        store.upsert(
-            compile_nodes(teams, TEAM_SCHEMA, update_tag),
-            compile_edges(teams, TEAM_SCHEMA, store.nodes, update_tag),
-            "github:teams",
-            update_tag,
-        )
+    load(store, "github:orgs", update_tag, (orgs, ORG_SCHEMA))
+    load(store, "github:teams", update_tag, (teams, TEAM_SCHEMA))

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cartography_spark.core.loader import compile_edges, compile_nodes, live_view
+from cartography_spark.core.loader import load
 from cartography_spark.core.model import (
     LinkDirection,
     NodeSchema,
@@ -106,14 +106,10 @@ def effective_memberships(
 def sync_gsuite(
     store: GraphStore, users: DataFrame, groups: DataFrame, update_tag: int
 ) -> None:
-    if store.stage_done("gsuite", update_tag):
-        return
-    u = _users_with_group(users)
-    nodes = compile_nodes(groups, GSUITE_GROUP_SCHEMA, update_tag).unionByName(
-        compile_nodes(u, GSUITE_USER_SCHEMA, update_tag)
+    load(
+        store,
+        "gsuite",
+        update_tag,
+        (groups, GSUITE_GROUP_SCHEMA),
+        (_users_with_group(users), GSUITE_USER_SCHEMA),
     )
-    live = live_view(store, nodes)
-    edges = compile_edges(groups, GSUITE_GROUP_SCHEMA, live, update_tag).unionByName(
-        compile_edges(u, GSUITE_USER_SCHEMA, live, update_tag)
-    )
-    store.upsert(nodes, edges, "gsuite", update_tag)

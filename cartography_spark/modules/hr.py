@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from cartography_spark.core.loader import compile_nodes
+from cartography_spark.core.loader import load
 from cartography_spark.core.model import NodeSchema, PropertyRef
 from cartography_spark.core.store import GraphStore
 
@@ -22,7 +22,4 @@ HUMAN_SCHEMA = NodeSchema(
 
 
 def sync_humans(store: GraphStore, humans: DataFrame, update_tag: int) -> None:
-    stage = "hr:humans"
-    if store.stage_done(stage, update_tag):
-        return
-    store.upsert(compile_nodes(humans, HUMAN_SCHEMA, update_tag), None, stage, update_tag)
+    load(store, "hr:humans", update_tag, (humans, HUMAN_SCHEMA))

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cartography_spark.core.loader import compile_edges, compile_nodes, edge_rows
+from cartography_spark.core.loader import compile_edges, compile_nodes, edge_rows, load
 from cartography_spark.core.model import (
     LinkDirection,
     NodeSchema,
@@ -82,20 +82,9 @@ def sync_okta(
     members: DataFrame,
     update_tag: int,
 ) -> None:
-    if not store.stage_done("okta:orgs", update_tag):
-        store.upsert(compile_nodes(orgs, ORG_SCHEMA, update_tag), None, "okta:orgs", update_tag)
-    for stage, df, schema in (
-        ("okta:groups", groups, GROUP_SCHEMA),
-        ("okta:users", users, USER_SCHEMA),
-    ):
-        if store.stage_done(stage, update_tag):
-            continue
-        store.upsert(
-            compile_nodes(df, schema, update_tag),
-            compile_edges(df, schema, store.nodes, update_tag),
-            stage,
-            update_tag,
-        )
+    load(store, "okta:orgs", update_tag, (orgs, ORG_SCHEMA))
+    load(store, "okta:groups", update_tag, (groups, GROUP_SCHEMA))
+    load(store, "okta:users", update_tag, (users, USER_SCHEMA))
     if not store.stage_done("okta:members", update_tag):
         store.upsert(
             None,
@@ -260,24 +249,6 @@ def sync_okta_breadth(
             compile_edges(app_users, APP_USER_SCHEMA, store.nodes, update_tag)
         )
         store.upsert(None, edges, "okta:app_links", update_tag)
-    if not store.stage_done("okta:factors", update_tag):
-        store.upsert(
-            compile_nodes(factors, FACTOR_SCHEMA, update_tag),
-            compile_edges(factors, FACTOR_SCHEMA, store.nodes, update_tag),
-            "okta:factors",
-            update_tag,
-        )
-    if not store.stage_done("okta:roles", update_tag):
-        store.upsert(
-            compile_nodes(admin_roles, ADMIN_ROLE_SCHEMA, update_tag),
-            compile_edges(admin_roles, ADMIN_ROLE_SCHEMA, store.nodes, update_tag),
-            "okta:roles",
-            update_tag,
-        )
-    if not store.stage_done("okta:origins", update_tag):
-        store.upsert(
-            compile_nodes(origins, TRUSTED_ORIGIN_SCHEMA, update_tag),
-            compile_edges(origins, TRUSTED_ORIGIN_SCHEMA, store.nodes, update_tag),
-            "okta:origins",
-            update_tag,
-        )
+    load(store, "okta:factors", update_tag, (factors, FACTOR_SCHEMA))
+    load(store, "okta:roles", update_tag, (admin_roles, ADMIN_ROLE_SCHEMA))
+    load(store, "okta:origins", update_tag, (origins, TRUSTED_ORIGIN_SCHEMA))

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from cartography_spark.core.loader import compile_edges, compile_nodes, live_view
+from cartography_spark.core.loader import load
 from cartography_spark.core.model import (
     LinkDirection,
     NodeSchema,
@@ -145,23 +145,16 @@ def sync_pagerduty(
     services: DataFrame,
     update_tag: int,
 ) -> None:
-    if store.stage_done("pagerduty", update_tag):
-        return
-    node_frames = [
-        compile_nodes(teams, PD_TEAM_SCHEMA, update_tag),
-        compile_nodes(eps, PD_EP_SCHEMA, update_tag),
-        compile_nodes(schedules, PD_SCHEDULE_SCHEMA, update_tag),
-        compile_nodes(users, PD_USER_SCHEMA, update_tag),
-        compile_nodes(services, PD_SERVICE_SCHEMA, update_tag),
-    ]
-    nodes = node_frames[0]
-    for f in node_frames[1:]:
-        nodes = nodes.unionByName(f)
-    live = live_view(store, nodes)
-    edges = compile_edges(users, PD_USER_SCHEMA, live, update_tag).unionByName(
-        compile_edges(services, PD_SERVICE_SCHEMA, live, update_tag)
+    load(
+        store,
+        "pagerduty",
+        update_tag,
+        (teams, PD_TEAM_SCHEMA),
+        (eps, PD_EP_SCHEMA),
+        (schedules, PD_SCHEDULE_SCHEMA),
+        (users, PD_USER_SCHEMA),
+        (services, PD_SERVICE_SCHEMA),
     )
-    store.upsert(nodes, edges, "pagerduty", update_tag)
 
 
 def sync_oci(
@@ -171,22 +164,12 @@ def sync_oci(
     users: DataFrame,
     update_tag: int,
 ) -> None:
-    if store.stage_done("oci", update_tag):
-        return
-    spark = compartments.sparkSession
-    node_frames = [
-        compile_nodes(_single(spark, tenancy_ocid="oci-tenancy-0"), OCI_TENANCY_SCHEMA, update_tag),
-        compile_nodes(compartments, OCI_COMPARTMENT_SCHEMA, update_tag),
-        compile_nodes(groups, OCI_GROUP_SCHEMA, update_tag),
-        compile_nodes(users, OCI_USER_SCHEMA, update_tag),
-    ]
-    nodes = node_frames[0]
-    for f in node_frames[1:]:
-        nodes = nodes.unionByName(f)
-    live = live_view(store, nodes)
-    edges = (
-        compile_edges(compartments, OCI_COMPARTMENT_SCHEMA, live, update_tag)
-        .unionByName(compile_edges(groups, OCI_GROUP_SCHEMA, live, update_tag))
-        .unionByName(compile_edges(users, OCI_USER_SCHEMA, live, update_tag))
+    load(
+        store,
+        "oci",
+        update_tag,
+        (_single(compartments.sparkSession, tenancy_ocid="oci-tenancy-0"), OCI_TENANCY_SCHEMA),
+        (compartments, OCI_COMPARTMENT_SCHEMA),
+        (groups, OCI_GROUP_SCHEMA),
+        (users, OCI_USER_SCHEMA),
     )
-    store.upsert(nodes, edges, "oci", update_tag)

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from cartography_spark.core.loader import compile_edges, compile_nodes, live_view
+from cartography_spark.core.loader import load
 from cartography_spark.core.model import (
     LinkDirection,
     NodeSchema,
@@ -125,35 +125,21 @@ def sync_saas(
     semgrep_findings: DataFrame,
     update_tag: int,
 ) -> None:
-    if store.stage_done("saas", update_tag):
-        return
     spark = duo_users.sparkSession
     # Semgrep findings may reference CVEs Crowdstrike has not seen — union
     # the id space so LINKED_TO always lands (MERGE-by-id collapses dupes).
     from cartography_spark.modules.devices import CVE_SCHEMA
 
-    sg_cves = semgrep_findings.select("cve_id").distinct()
-    node_frames = [
-        compile_nodes(_single(spark, api_host="api-host.duosecurity.com"), DUO_API_HOST_SCHEMA, update_tag),
-        compile_nodes(duo_users, DUO_USER_SCHEMA, update_tag),
-        compile_nodes(duo_phones, DUO_PHONE_SCHEMA, update_tag),
-        compile_nodes(_single(spark, tenant_id="lastpass-tenant"), LASTPASS_TENANT_SCHEMA, update_tag),
-        compile_nodes(lastpass_users, LASTPASS_USER_SCHEMA, update_tag),
-        compile_nodes(_single(spark, deployment_id="sg-deploy"), SEMGREP_DEPLOYMENT_SCHEMA, update_tag),
-        compile_nodes(semgrep_findings, SEMGREP_FINDING_SCHEMA, update_tag),
-        compile_nodes(sg_cves, CVE_SCHEMA, update_tag),
-    ]
-    nodes = node_frames[0]
-    for f in node_frames[1:]:
-        nodes = nodes.unionByName(f)
-    live = live_view(store, nodes)
-    edge_frames = [
-        compile_edges(duo_users, DUO_USER_SCHEMA, live, update_tag),
-        compile_edges(duo_phones, DUO_PHONE_SCHEMA, live, update_tag),
-        compile_edges(lastpass_users, LASTPASS_USER_SCHEMA, live, update_tag),
-        compile_edges(semgrep_findings, SEMGREP_FINDING_SCHEMA, live, update_tag),
-    ]
-    edges = edge_frames[0]
-    for f in edge_frames[1:]:
-        edges = edges.unionByName(f)
-    store.upsert(nodes, edges, "saas", update_tag)
+    load(
+        store,
+        "saas",
+        update_tag,
+        (_single(spark, api_host="api-host.duosecurity.com"), DUO_API_HOST_SCHEMA),
+        (duo_users, DUO_USER_SCHEMA),
+        (duo_phones, DUO_PHONE_SCHEMA),
+        (_single(spark, tenant_id="lastpass-tenant"), LASTPASS_TENANT_SCHEMA),
+        (lastpass_users, LASTPASS_USER_SCHEMA),
+        (_single(spark, deployment_id="sg-deploy"), SEMGREP_DEPLOYMENT_SCHEMA),
+        (semgrep_findings, SEMGREP_FINDING_SCHEMA),
+        (semgrep_findings.select("cve_id").distinct(), CVE_SCHEMA),
+    )

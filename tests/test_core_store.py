@@ -2,6 +2,7 @@
 querybuilder + cleanupbuilder unit tests (golden *output* rather than golden
 Cypher text)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from cartography_spark.core.cleanup import cleanup_schema
@@ -145,3 +146,63 @@ def test_kwarg_propertyref(spark, store):
     nodes = compile_nodes(df, schema, T1, {"Region": "us-east-1"})
     row = nodes.collect()[0]
     assert row.props["region"] == "us-east-1"
+
+
+def test_load_skips_checkpointed_stage_before_compiling(spark, store, monkeypatch):
+    """A stage already checkpointed under the tag returns before either
+    compiler runs and writes nothing (the ~0 s resume of a staged sync)."""
+    from cartography_spark.core import loader
+
+    sync_accounts(store, _accounts(spark), T1)
+    batch = _clusters(spark, [_c(1)])
+    loader.load(store, "emr", T1, (batch, EMR_CLUSTER_SCHEMA))
+    version = store._current_version()
+
+    def must_not_run(*args, **kwargs):
+        raise AssertionError("load did work for a checkpointed stage")
+
+    for name in ("compile_nodes", "compile_edges"):
+        monkeypatch.setattr(loader, name, must_not_run)
+    monkeypatch.setattr(store, "upsert", must_not_run)
+    loader.load(store, "emr", T1, (batch, EMR_CLUSTER_SCHEMA))
+    assert store._current_version() == version
+
+
+@pytest.mark.parametrize("buffered", [False, True])
+def test_load_links_pairs_within_one_stage(spark, store, buffered):
+    """A pair's rel can target another pair's label: both compile in one
+    stage, and the edge lands on a fresh store."""
+    from cartography_spark.core.loader import load
+    from cartography_spark.core.model import (
+        LinkDirection,
+        NodeSchema,
+        PropertyRef,
+        RelSchema,
+        TargetNodeMatcher,
+    )
+    from cartography_spark.core.store import BufferedSyncStore
+
+    parent = NodeSchema(label="Parent", id=PropertyRef("pid"))
+    child = NodeSchema(
+        label="Child",
+        id=PropertyRef("cid"),
+        other_rels=(
+            RelSchema(
+                target_label="Parent",
+                rel_label="CHILD_OF",
+                direction=LinkDirection.OUTWARD,
+                matcher=TargetNodeMatcher({"id": PropertyRef("pid")}),
+            ),
+        ),
+    )
+    st = BufferedSyncStore(store) if buffered else store
+    parents = spark.createDataFrame([("p1",), ("p2",)], ["pid"])
+    children = spark.createDataFrame([("c1", "p1"), ("c2", "p9")], ["cid", "pid"])
+    load(st, "family", T1, (parents, parent), (children, child))
+    if buffered:
+        st.flush()
+
+    assert check_nodes(store, "Child", ["id"]) == {("c1",), ("c2",)}
+    assert check_rels(store, "Child", "CHILD_OF", "Parent") == {("c1", "p1")}
+    assert store.stage_done("family", T1)
+    assert store.current_meta()["stages"]["family"]["labels"] == ["Child", "Parent"]

@@ -63,3 +63,34 @@ def test_oracle_check_imports_its_own_checkout(tmp_path):
         cwd=tmp_path, capture_output=True, text=True, check=True,
     ).stdout.strip()
     assert out == str(stub)
+
+
+def test_loc_counts_code_lines_only(tmp_path, capsys):
+    """Blank lines, ``#`` comments and module/class/function docstrings are
+    not code; everything else is, including a string that is not the first
+    statement of its body."""
+    from tools import loc
+
+    src = tmp_path / "m.py"
+    src.write_text(
+        '"""Module docstring\n'
+        'over two lines."""\n'
+        "\n"
+        "# a comment\n"
+        "import os\n"
+        "\n"
+        "\n"
+        "class C:\n"
+        '    """Class docstring."""\n'
+        "\n"
+        "    def f(self):\n"
+        '        """Function\n'
+        "        docstring.\n"
+        '        """\n'
+        "        # indented comment\n"
+        '        x = "not a docstring"\n'
+        "        return os.sep + x\n"
+    )
+    assert loc.count(str(src)) == 5
+    loc.main([str(tmp_path)])
+    assert capsys.readouterr().out.splitlines()[-1].split() == ["5", "total"]
