@@ -133,6 +133,7 @@ SNIPEIT_ASSET_SCHEMA = NodeSchema(
 
 
 def _single(spark, **cols):
+    """One-row frame for a fixed tenant or root node."""
     return spark.createDataFrame([cols])
 
 

@@ -25,6 +25,7 @@ from cartography_spark.core.model import (
     TargetNodeMatcher,
 )
 from cartography_spark.core.store import GraphStore
+from cartography_spark.modules.devices import _single
 
 PD_TEAM_SCHEMA = NodeSchema(
     label="PagerDutyTeam", id=PropertyRef("team_id"),
@@ -130,10 +131,6 @@ OCI_USER_SCHEMA = NodeSchema(
         ),
     ),
 )
-
-
-def _single(spark, **cols):
-    return spark.createDataFrame([cols])
 
 
 def sync_pagerduty(

@@ -29,6 +29,7 @@ from cartography_spark.core.model import (
     TargetNodeMatcher,
 )
 from cartography_spark.core.store import GraphStore
+from cartography_spark.modules.devices import _single
 
 DUO_API_HOST_SCHEMA = NodeSchema(label="DuoApiHost", id=PropertyRef("api_host"))
 
@@ -111,10 +112,6 @@ SEMGREP_FINDING_SCHEMA = NodeSchema(
         ),
     ),
 )
-
-
-def _single(spark, **cols):
-    return spark.createDataFrame([cols])
 
 
 def sync_saas(

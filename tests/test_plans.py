@@ -8,7 +8,8 @@ Covers the plan invariants called out in ARCHITECTURE.md §Scale posture:
   * ANN probes against the materialized index are PHYSICAL partition prunes
     (the bucket predicate reaches PartitionFilters, not a post-scan filter);
   * parquet scans carry pushed filters and pruned schemas;
-  * the documents pipeline contains no cartesian product.
+  * the documents pipeline contains no cartesian product;
+  * IAM policy evaluation runs no Python UDF and no window.
 """
 
 import pyspark.sql.functions as F
@@ -36,6 +37,26 @@ def test_edge_compile_broadcasts_dimension(spark):
     plan = _plan(edges)
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
+
+
+def test_permission_operators_are_native(spark):
+    """Policy evaluation compiles to native expressions: neither operator's
+    plan holds a Python UDF or a window (the plan only; no job runs)."""
+    from cartography_spark.modules.permissions import evaluate_permissions, sts_assumerole_pairs
+
+    policies, statements = fx.iam_policies(spark, SF), fx.iam_policy_statements(spark, SF)
+    roles = fx.iam_roles(spark, SF)
+    trusts = roles.select(
+        F.col("arn").alias("role_arn"), F.explode("trust_principals").alias("p")
+    ).select("role_arn", F.col("p.value").alias("trusted"))
+    principals = roles.select(F.col("arn").alias("principal_arn"), F.col("account_id").alias("acct"))
+    for df in (
+        evaluate_permissions(policies, statements, fx.s3_buckets(spark, SF), "s3:GetObject"),
+        sts_assumerole_pairs(trusts, principals, policies, statements),
+    ):
+        plan = _plan(df)
+        for op in ("ArrowEvalPython", "BatchEvalPython", "Window"):
+            assert op not in plan, op
 
 
 def test_ann_probe_is_partition_prune(spark, tmp_path):
