@@ -476,8 +476,10 @@ def _q_kg_mention_triples(spark, sf_dir):
 
 def _q_kg_exposure(spark, sf_dir):
     from cartography_spark.analysis.exposure import exposed_instances
+    from cartography_spark.sources.fixtures import exposure_topology
 
-    return exposed_instances(spark, sf_dir)
+    t = exposure_topology(spark, sf_dir)
+    return exposed_instances(t["instances"], t["rules"])
 
 
 def _q_kg_vpc_subnets(spark, sf_dir):
@@ -505,8 +507,10 @@ def _q_kg_eni_exposure(spark, sf_dir):
     from an open security group through an attached ENI
     (aws_ec2_asset_exposure.json statement 2)."""
     from cartography_spark.analysis.exposure import eni_exposed_instances
+    from cartography_spark.sources.fixtures import exposure_topology
 
-    return eni_exposed_instances(spark, sf_dir)
+    t = exposure_topology(spark, sf_dir)
+    return eni_exposed_instances(t["enis"], t["instances"], t["rules"])
 
 
 def _q_kg_elb_exposed(spark, sf_dir):
@@ -514,9 +518,11 @@ def _q_kg_elb_exposed(spark, sf_dir):
     port to 0.0.0.0/0 — classic via SOURCE_SECURITY_GROUP (st.4), v2 via
     MEMBER_OF_EC2_SECURITY_GROUP (st.3; NLBs have no SG and never match)."""
     from cartography_spark.analysis.exposure import exposed_elbs, exposed_elbv2s
+    from cartography_spark.sources.fixtures import exposure_topology
 
-    e1 = exposed_elbs(spark, sf_dir).withColumn("kind", F.lit("elb"))
-    e2 = exposed_elbv2s(spark, sf_dir).withColumn("kind", F.lit("elbv2"))
+    t = exposure_topology(spark, sf_dir)
+    e1 = exposed_elbs(t["elbs"], t["rules"]).withColumn("kind", F.lit("elb"))
+    e2 = exposed_elbv2s(t["elbv2s"], t["rules"]).withColumn("kind", F.lit("elbv2"))
     return e1.unionByName(e2).select("lb_id", "kind", "sg_id", "listener_port")
 
 
@@ -558,8 +564,9 @@ def _q_kg_exposure_types(spark, sf_dir):
     aws_ec2_asset_exposure dataflow (direct+ENI 'direct', exposed-ELB 'elb',
     exposed-ELBv2 'elbv2' appends, statements 2+5+6)."""
     from cartography_spark.analysis.exposure import exposure_types
+    from cartography_spark.sources.fixtures import exposure_topology
 
-    return exposure_types(spark, sf_dir)
+    return exposure_types(exposure_topology(spark, sf_dir))
 
 
 def _q_kg_asg_members(spark, sf_dir):
@@ -591,8 +598,9 @@ def _q_kg_asg_exposure(spark, sf_dir):
     """Statement 7 of aws_ec2_asset_exposure.json: ASGs accumulate their
     exposed members' distinct exposure-type sets."""
     from cartography_spark.analysis.exposure import asg_exposure_types
+    from cartography_spark.sources.fixtures import exposure_topology
 
-    return asg_exposure_types(spark, sf_dir)
+    return asg_exposure_types(exposure_topology(spark, sf_dir))
 
 
 def _q_kg_ebs_attachments(spark, sf_dir):

@@ -13,7 +13,13 @@ statements, in order, and their analog here:
   st.4 — same for classic LoadBalancer via SOURCE_SECURITY_GROUP
          → ``exposed_elbs``;
   st.5/6 — exposed LB -[:EXPOSE]-> instance appends 'elb' / 'elbv2'
-         → the target legs of ``exposure_types``.
+         → the target legs of ``exposure_types``;
+  st.7 — ASGs accumulate their members' types → ``asg_exposure_types``.
+
+The operators take frames, not inputs: ``mark_exposure`` feeds them
+projections of the stored graph (:func:`graph_topology`, the paths the
+reference job MATCHes), and the gated exposure queries feed them the same
+frames derived from the fixtures (``fixtures.exposure_topology``).
 
 The interval gate (listener.port BETWEEN perm.fromport AND perm.toport) is a
 non-equi range join — at scale the classic range-join problem: ports are
@@ -22,48 +28,80 @@ exact bounds apply, turning O(n*m) into bin-local comparisons (AQE handles
 residual skew).  List-property accumulation (A4: coalesce(x,[]) + elem)
 becomes a set-valued column rebuilt per run — the set-wise analog of the
 job's clearing statement (st.1 REMOVEs the attribute first).
-
-Fixture derivation (deterministic, oracle-reproducible):
-  * security groups from part (p_partkey%10==0): port range
-    [ (p_size%10)*100, +399 ], open to world iff p_partkey%4==0
-  * instances from supplier: member of sg-((s_suppkey*10) % n_parts rounded
-    down to a multiple of 10), listener port (s_suppkey%10)*100 + 50
-  * ENIs (odd suppliers) attach a SECOND sg: sg-((s_suppkey*20) % n_parts)
-  * classic ELBs (s%3==0, port +25) / ELBv2 (s%3==1, port +75), scheme
-    internet-facing iff s%2==0; NLBs (s%7==0) have no sg
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cartography_spark.sources.fixtures import read_table
+from cartography_spark.analysis.jobs import _mark
 
 PORT_BIN = 100
 
 
-def security_group_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rule rows in the exposure pass's shape (single source of truth for the
-    formulas is fixtures.ec2_sg_rules — the EC2 module loads the same rows)."""
-    from cartography_spark.sources.fixtures import ec2_sg_rules
+def graph_topology(store) -> dict[str, DataFrame]:
+    """The exposure operators' inputs as projections of the stored graph,
+    keyed and shaped like the fixture adapter ``exposure_topology``:
 
-    return ec2_sg_rules(spark, sf_dir).select("sg_id", "fromport", "toport", "cidr")
+      instances      EC2Instance -MEMBER_OF_EC2_SECURITY_GROUP-> sg (left:
+                     an instance without a group still has a port for the
+                     ENI leg);
+      rules          IpRange -MEMBER_OF_IP_RULE-> IpPermissionInbound
+                     -MEMBER_OF_EC2_SECURITY_GROUP-> sg (range id = cidr);
+      enis           EC2Instance -NETWORK_INTERFACE-> NetworkInterface
+                     -MEMBER_OF_EC2_SECURITY_GROUP-> sg;
+      elbs / elbv2s  listener ports via ELB_LISTENER / ELBV2_LISTENER, groups
+                     via SOURCE_SECURITY_GROUP / MEMBER_OF_EC2_SECURITY_GROUP;
+      *_targets      EXPOSE;  asg_members  MEMBER_AUTO_SCALE_GROUP."""
+
+    def rel(rel_label: str, src_label: str, src: str, dst: str) -> DataFrame:
+        return (
+            store.edges(rel_labels=[rel_label])
+            .where(F.col("src_label") == src_label)
+            .select(F.col("src_id").alias(src), F.col("dst_id").alias(dst))
+        )
+
+    def prop(label: str, id_col: str, *keys: str, typ: str = "string") -> DataFrame:
+        return store.nodes(labels=[label]).select(
+            F.col("id").alias(id_col),
+            *[F.element_at("props", k).cast(typ).alias(k) for k in keys],
+        )
+
+    def lbs(label: str, listener_rel: str, listener_label: str, sg_rel: str) -> DataFrame:
+        listeners = rel(listener_rel, label, "lb_id", "listener_id").join(
+            prop(listener_label, "listener_id", "port", typ="long"), "listener_id"
+        )
+        return (
+            prop(label, "lb_id", "scheme")
+            .join(listeners.select("lb_id", F.col("port").alias("listener_port")), "lb_id")
+            .join(rel(sg_rel, label, "lb_id", "sg_id"), "lb_id")
+        )
+
+    sg = "MEMBER_OF_EC2_SECURITY_GROUP"
+    rules = prop("IpPermissionInbound", "rule_id", "fromport", "toport", typ="long")
+    return {
+        "instances": prop("EC2Instance", "instance_id", "listener_port", typ="long").join(
+            rel(sg, "EC2Instance", "instance_id", "sg_id"), "instance_id", "left"
+        ),
+        "rules": rules.join(rel(sg, "IpPermissionInbound", "rule_id", "sg_id"), "rule_id")
+        .join(rel("MEMBER_OF_IP_RULE", "IpRange", "cidr", "rule_id"), "rule_id")
+        .drop("rule_id"),
+        "enis": rel("NETWORK_INTERFACE", "EC2Instance", "instance_id", "eni_id").join(
+            rel(sg, "NetworkInterface", "eni_id", "sg_id"), "eni_id"
+        ),
+        "elbs": lbs("LoadBalancer", "ELB_LISTENER", "ELBListener", "SOURCE_SECURITY_GROUP"),
+        "elbv2s": lbs("LoadBalancerV2", "ELBV2_LISTENER", "ELBV2Listener", sg),
+        "elb_targets": rel("EXPOSE", "LoadBalancer", "lb_id", "instance_id"),
+        "elbv2_targets": rel("EXPOSE", "LoadBalancerV2", "lb_id", "instance_id"),
+        "asg_members": rel("MEMBER_AUTO_SCALE_GROUP", "EC2Instance", "instance_id", "asg_arn"),
+    }
 
 
-def instances(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cartography_spark.sources.fixtures import ec2_instances
-
-    return ec2_instances(spark, sf_dir).select(
-        "instance_id", "sg_id", "listener_port", "account_id"
-    )
-
-
-def _open_rules_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _open_rules_binned(rules: DataFrame) -> DataFrame:
     """0.0.0.0/0 inbound rules exploded to their covered port bins.
     Columns: sg_id, fromport, toport, port_bin."""
-    rules = security_group_rules(spark, sf_dir).where(F.col("cidr") == "0.0.0.0/0")
-    return rules.select(
+    return rules.where(F.col("cidr") == "0.0.0.0/0").select(
         "sg_id",
         "fromport",
         "toport",
@@ -76,86 +114,66 @@ def _open_rules_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _covered(assets: DataFrame, rules_binned: DataFrame, port_col: str) -> DataFrame:
+def _covered(assets: DataFrame, rules: DataFrame, port_col: str) -> DataFrame:
     """Bin-bucketed range semi-join: asset rows whose (sg_id, port) falls in
     an open rule's [fromport, toport].  Keeps every asset column."""
     binned = assets.withColumn("port_bin", (F.col(port_col) / PORT_BIN).cast("long"))
     return (
-        binned.join(rules_binned, ["sg_id", "port_bin"], "inner")
+        binned.join(_open_rules_binned(rules), ["sg_id", "port_bin"], "inner")
         .where((F.col(port_col) >= F.col("fromport")) & (F.col(port_col) <= F.col("toport")))
         .drop("port_bin", "fromport", "toport")
         .distinct()
     )
 
 
-def exposed_instances(spark: SparkSession, sf_dir: str) -> DataFrame:
+def exposed_instances(instances: DataFrame, rules: DataFrame) -> DataFrame:
     """Instances whose DIRECT security group opens their listener port to the
     world (st.2's 1-hop leg).  Output: instance_id, sg_id, listener_port."""
     return _covered(
-        instances(spark, sf_dir).select("instance_id", "sg_id", "listener_port"),
-        _open_rules_binned(spark, sf_dir),
-        "listener_port",
+        instances.select("instance_id", "sg_id", "listener_port"), rules, "listener_port"
     ).select("instance_id", "sg_id", "listener_port")
 
 
-def eni_exposed_instances(spark: SparkSession, sf_dir: str) -> DataFrame:
+def eni_exposed_instances(
+    enis: DataFrame, instances: DataFrame, rules: DataFrame
+) -> DataFrame:
     """Instances reachable from an open group THROUGH an attached network
     interface — the ``NETWORK_INTERFACE*..2`` hop of st.2.  The ENI's group
     is independent of the instance's direct membership, so this leg adds
     real reach.  Output: instance_id, eni_id, sg_id, listener_port."""
-    from cartography_spark.sources.fixtures import ec2_network_interfaces
-
-    enis = ec2_network_interfaces(spark, sf_dir).select("eni_id", "instance_id", "sg_id")
-    inst = instances(spark, sf_dir).select("instance_id", "listener_port")
     # ENI->instance is ~1:1 — a plain equi-join; listener_port rides along
-    joined = enis.join(inst, ["instance_id"], "inner")
-    return _covered(joined, _open_rules_binned(spark, sf_dir), "listener_port").select(
+    joined = enis.select("eni_id", "instance_id", "sg_id").join(
+        instances.select("instance_id", "listener_port"), ["instance_id"], "inner"
+    )
+    return _covered(joined, rules, "listener_port").select(
         "instance_id", "eni_id", "sg_id", "listener_port"
     )
 
 
-def exposed_elbs(spark: SparkSession, sf_dir: str) -> DataFrame:
+def exposed_elbs(elbs: DataFrame, rules: DataFrame) -> DataFrame:
     """Classic LoadBalancers marked exposed_internet (st.4): scheme
-    'internet-facing' AND the SOURCE_SECURITY_GROUP (matched by sg *name*)
-    has a 0.0.0.0/0 rule covering the listener port.
-    Output: lb_id, sg_id, listener_port."""
-    from cartography_spark.sources.fixtures import ec2_security_groups, elb_load_balancers
-
-    elbs = (
-        elb_load_balancers(spark, sf_dir)
-        .where(F.col("scheme") == "internet-facing")
-        .select(F.col("elb_id").alias("lb_id"), "sg_name", "listener_port")
-    )
-    # name -> sg_id through the SG dimension (broadcast: dimension-sized)
-    sgs = ec2_security_groups(spark, sf_dir).select(
-        F.col("name").alias("sg_name"), "sg_id"
-    )
-    withsg = elbs.join(F.broadcast(sgs), ["sg_name"], "inner").drop("sg_name")
-    return _covered(withsg, _open_rules_binned(spark, sf_dir), "listener_port").select(
-        "lb_id", "sg_id", "listener_port"
-    )
+    'internet-facing' AND the SOURCE_SECURITY_GROUP has a 0.0.0.0/0 rule
+    covering the listener port.  Output: lb_id, sg_id, listener_port."""
+    facing = elbs.where(F.col("scheme") == "internet-facing")
+    return _covered(
+        facing.select("lb_id", "listener_port", "sg_id"), rules, "listener_port"
+    ).select("lb_id", "sg_id", "listener_port")
 
 
-def exposed_elbv2s(spark: SparkSession, sf_dir: str) -> DataFrame:
+def exposed_elbv2s(elbv2s: DataFrame, rules: DataFrame) -> DataFrame:
     """LoadBalancerV2s marked exposed_internet (st.3): internet-facing AND a
     member security group (NLBs have none) opens the listener port.
     Output: lb_id, sg_id, listener_port."""
-    from cartography_spark.sources.fixtures import elbv2_load_balancers
-
-    v2 = (
-        elbv2_load_balancers(spark, sf_dir)
-        .where((F.col("scheme") == "internet-facing") & F.col("sg_id").isNotNull())
-        .select(F.col("elbv2_id").alias("lb_id"), "sg_id", "listener_port")
+    facing = elbv2s.where(
+        (F.col("scheme") == "internet-facing") & F.col("sg_id").isNotNull()
     )
-    return _covered(v2, _open_rules_binned(spark, sf_dir), "listener_port").select(
-        "lb_id", "sg_id", "listener_port"
-    )
+    return _covered(
+        facing.select("lb_id", "sg_id", "listener_port"), rules, "listener_port"
+    ).select("lb_id", "sg_id", "listener_port")
 
 
-def compute_legs(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = False
-) -> dict[str, DataFrame]:
-    """The four shared exposure legs, computed ONCE.
+def compute_legs(t: dict[str, DataFrame], checkpoint: bool = False) -> dict[str, DataFrame]:
+    """The four shared exposure legs over one topology ``t``, computed ONCE.
 
     ``mark_exposure`` (and anything else consuming several legs in one
     action) passes ``checkpoint=True``: each leg becomes a lazy
@@ -165,27 +183,33 @@ def compute_legs(
     kg_exposure).  Standalone single-consumer queries keep the default
     (pure lazy plans, no extra materialization jobs)."""
     legs = {
-        "instances": exposed_instances(spark, sf_dir),
-        "eni": eni_exposed_instances(spark, sf_dir),
-        "elbs": exposed_elbs(spark, sf_dir),
-        "elbv2s": exposed_elbv2s(spark, sf_dir),
+        "instances": exposed_instances(t["instances"], t["rules"]),
+        "eni": eni_exposed_instances(t["enis"], t["instances"], t["rules"]),
+        "elbs": exposed_elbs(t["elbs"], t["rules"]),
+        "elbv2s": exposed_elbv2s(t["elbv2s"], t["rules"]),
     }
     if checkpoint:
         legs = {k: v.localCheckpoint(eager=False) for k, v in legs.items()}
     return legs
 
 
+def _types(df: DataFrame, key: str) -> DataFrame:
+    """(key, etype) rows -> (key, exposure_types): comma-joined sorted
+    distinct types per key."""
+    return df.groupBy(key).agg(
+        F.array_join(F.array_sort(F.collect_set("etype")), ",").alias("exposure_types")
+    )
+
+
 def exposure_types(
-    spark: SparkSession, sf_dir: str, legs: dict[str, DataFrame] | None = None
+    t: dict[str, DataFrame], legs: dict[str, DataFrame] | None = None
 ) -> DataFrame:
     """Per-instance accumulated exposed_internet_type list (st.2+5+6):
     'direct' (direct OR ENI reach), 'elb' (targeted by an exposed classic
     ELB), 'elbv2' (targeted by an exposed v2).  Output: instance_id,
     exposure_types (comma-joined sorted distinct)."""
-    from cartography_spark.sources.fixtures import elb_load_balancers, elbv2_load_balancers
-
     if legs is None:
-        legs = compute_legs(spark, sf_dir)
+        legs = compute_legs(t)
     direct = (
         legs["instances"]
         .select("instance_id")
@@ -193,49 +217,21 @@ def exposure_types(
         .withColumn("etype", F.lit("direct"))
     )
 
-    def _targets(lbs: DataFrame, id_col: str) -> DataFrame:
-        return lbs.select(
-            F.col(id_col).alias("lb_id"),
-            F.explode(F.array("target_instance_1", "target_instance_2")).alias(
-                "instance_id"
-            ),
+    def targeted(family: str) -> DataFrame:
+        return (
+            t[f"{family}_targets"]
+            .join(F.broadcast(legs[f"{family}s"].select("lb_id")), ["lb_id"], "left_semi")
+            .select("instance_id")
+            .withColumn("etype", F.lit(family))
         )
 
-    elb_leg = (
-        _targets(elb_load_balancers(spark, sf_dir), "elb_id")
-        .join(
-            F.broadcast(legs["elbs"].select("lb_id")),
-            ["lb_id"],
-            "left_semi",
-        )
-        .select("instance_id")
-        .withColumn("etype", F.lit("elb"))
-    )
-    elbv2_leg = (
-        _targets(elbv2_load_balancers(spark, sf_dir), "elbv2_id")
-        .join(
-            F.broadcast(legs["elbv2s"].select("lb_id")),
-            ["lb_id"],
-            "left_semi",
-        )
-        .select("instance_id")
-        .withColumn("etype", F.lit("elbv2"))
-    )
-
-    return (
-        direct.unionByName(elb_leg)
-        .unionByName(elbv2_leg)
-        .groupBy("instance_id")
-        .agg(
-            F.array_join(F.array_sort(F.collect_set("etype")), ",").alias(
-                "exposure_types"
-            )
-        )
+    return _types(
+        direct.unionByName(targeted("elb")).unionByName(targeted("elbv2")), "instance_id"
     )
 
 
 def asg_exposure_types(
-    spark: SparkSession, sf_dir: str, inst_types: DataFrame | None = None
+    t: dict[str, DataFrame], inst_types: DataFrame | None = None
 ) -> DataFrame:
     """Statement 7: exposed instances propagate their distinct exposure
     types to their AutoScalingGroup through MEMBER_AUTO_SCALE_GROUP.
@@ -243,131 +239,51 @@ def asg_exposure_types(
     sync evaluates the exposure tree once, not once per consumer.
     Output: asg_arn, exposure_types (comma-joined sorted distinct union of
     member types)."""
-    from cartography_spark.sources.fixtures import ec2_asgs
-
-    members = ec2_asgs(spark, sf_dir).select(
-        "asg_arn",
-        F.explode(F.array("member_instance_1", "member_instance_2")).alias(
-            "instance_id"
-        ),
-    )
     if inst_types is None:
-        inst_types = exposure_types(spark, sf_dir)
+        inst_types = exposure_types(t)
     inst_types = inst_types.select(
         "instance_id", F.explode(F.split("exposure_types", ",")).alias("etype")
     )
-    return (
-        members.join(inst_types, ["instance_id"], "inner")
-        .groupBy("asg_arn")
-        .agg(
-            F.array_join(F.array_sort(F.collect_set("etype")), ",").alias(
-                "exposure_types"
-            )
+    return _types(t["asg_members"].join(inst_types, ["instance_id"], "inner"), "asg_arn")
+
+
+def mark_exposure(store, update_tag: int) -> None:
+    """Write the accumulated exposure marks onto the EC2Instance,
+    LoadBalancer, LoadBalancerV2 and AutoScalingGroup slices: every marked
+    node gets exposed_internet=true and its exposed_internet_type list.
+
+    The exposure tree is evaluated ONCE over the graph's topology: the four
+    legs are computed and lazily checkpointed by :func:`compute_legs`, the
+    per-instance type list once more on top, and every mark set reads from
+    those shared frames instead of re-deriving the tree."""
+    t = graph_topology(store)
+    legs = compute_legs(t, checkpoint=True)
+    inst_types = exposure_types(t, legs).localCheckpoint(eager=False)
+
+    def marks(df: DataFrame, id_col: str, types) -> DataFrame:
+        return df.select(
+            F.col(id_col).alias("id"),
+            F.create_map(
+                F.lit("exposed_internet"), F.lit("true"),
+                F.lit("exposed_internet_type"), F.to_json(F.split(types, ",")),
+            ).alias("marks"),
         )
-    )
 
+    def lb_marks(family: str) -> DataFrame:
+        # one mark per LB, however many (group, listener) pairs expose it
+        return marks(legs[f"{family}s"].select("lb_id").distinct(), "lb_id", F.lit(family))
 
-# Mark sets up to this many label-slice rows broadcast into the rewrite
-# joins; the mark set is data-dependent (a permissive estate can expose a
-# large fraction of all instances), so above the ceiling the hint is dropped
-# and AQE picks the strategy — same gate as GraphStore.BROADCAST_DELETE_MAX_IDS.
-BROADCAST_MARKS_MAX_IDS = 10_000_000
-
-
-def _set_type_list(
-    nodes: DataFrame, marks: DataFrame, broadcast_marks: bool = True
-) -> DataFrame:
-    """Rebuild exposed_internet / exposed_internet_type on a label slice from
-    a (id, exposure_types) mark set.  Unmarked nodes lose any stale mark —
-    the set-wise analog of the reference job's clearing statement (st.1).
-    ``broadcast_marks`` is gated by the caller on a size estimate (marks are
-    a subset of the label slice, so the slice's manifest row count bounds
-    them)."""
-    hint = F.broadcast if broadcast_marks else (lambda df: df)
-    marked = (
-        nodes.join(hint(marks), ["id"], "inner")
-        .withColumn(
-            "props",
-            F.map_concat(
-                # strip prior marks first — map_concat EXCEPTIONs on duplicate
-                # keys under ANSI policy (idempotent re-runs)
-                F.map_filter(
-                    F.coalesce("props", F.create_map()),
-                    lambda k, _: ~k.isin("exposed_internet", "exposed_internet_type"),
-                ),
-                F.create_map(
-                    F.lit("exposed_internet"),
-                    F.lit("true"),
-                    F.lit("exposed_internet_type"),
-                    F.to_json(F.split("exposure_types", ",")),
-                ),
-            ),
-        )
-        .drop("exposure_types")
-    )
-    rest = nodes.join(hint(marks), ["id"], "left_anti").withColumn(
-        "props",
-        F.when(
-            F.col("props").isNotNull(),
-            F.map_filter(
-                F.col("props"),
-                lambda k, _: ~k.isin("exposed_internet", "exposed_internet_type"),
-            ),
-        ),
-    )
-    return rest.unionByName(marked)
-
-
-def mark_exposure(store, spark: SparkSession, sf_dir: str, update_tag: int) -> None:
-    """Write the accumulated exposure marks onto EC2Instance, LoadBalancer
-    and LoadBalancerV2 label slices (commit_partial rewrites ONLY those
-    slices).  Instances get the full type list; load balancers get
-    exposed_internet=true (st.3/4 set only the boolean on LBs).
-
-    The exposure tree is evaluated ONCE: the four legs are computed and
-    lazily checkpointed by :func:`compute_legs`, the per-instance type list
-    once more on top, and every mark set (instances, both LB families, ASGs)
-    reads from those shared frames instead of re-deriving the tree."""
-    legs = compute_legs(spark, sf_dir, checkpoint=True)
-    inst_types = exposure_types(spark, sf_dir, legs).localCheckpoint(eager=False)
-
-    inst_marks = inst_types.select(F.col("instance_id").alias("id"), "exposure_types")
-    elb_marks = legs["elbs"].select(
-        F.col("lb_id").alias("id"), F.lit("elb").alias("exposure_types")
-    )
-    elbv2_marks = legs["elbv2s"].select(
-        F.col("lb_id").alias("id"), F.lit("elbv2").alias("exposure_types")
-    )
-    asg_marks = asg_exposure_types(spark, sf_dir, inst_types=inst_types).select(
-        F.col("asg_arn").alias("id"), "exposure_types"
-    )
-
-    def _bcast(label: str) -> bool:
-        # marks are bounded by the label slice, whose manifest row count is
-        # available without a count() job; unknown (never-committed) slices
-        # broadcast — they are empty or first-run small
-        n = store.label_rowcount(label)
-        return n is None or n <= BROADCAST_MARKS_MAX_IDS
-
-    out = _set_type_list(
-        store.nodes(labels=["EC2Instance"]), inst_marks, _bcast("EC2Instance")
-    ).unionByName(
-        _set_type_list(store.nodes(labels=["LoadBalancer"]), elb_marks, _bcast("LoadBalancer"))
-    ).unionByName(
-        _set_type_list(
-            store.nodes(labels=["LoadBalancerV2"]), elbv2_marks, _bcast("LoadBalancerV2")
-        )
-    ).unionByName(
-        # statement 7: ASGs accumulate their exposed members' type sets
-        _set_type_list(
-            store.nodes(labels=["AutoScalingGroup"]), asg_marks, _bcast("AutoScalingGroup")
-        )
-    )
-    store.commit_partial(
-        out,
-        None,
-        ["EC2Instance", "LoadBalancer", "LoadBalancerV2", "AutoScalingGroup"],
-        [],
+    _mark(
+        store,
         "analysis:aws_asset_exposure",
         update_tag,
+        ["exposed_internet", "exposed_internet_type"],
+        {
+            "EC2Instance": marks(inst_types, "instance_id", F.col("exposure_types")),
+            "LoadBalancer": lb_marks("elb"),
+            "LoadBalancerV2": lb_marks("elbv2"),
+            "AutoScalingGroup": marks(
+                asg_exposure_types(t, inst_types), "asg_arn", F.col("exposure_types")
+            ),
+        },
     )

@@ -9,7 +9,9 @@ reference jobs' clearing statements.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from functools import reduce
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cartography_spark.core.cleanup import delete_stale
@@ -35,45 +37,88 @@ ACL_ACTIONS = {
 }
 
 
-def _strip_keys(props, *keys):
-    """props map minus the given keys (NULL-safe; empty result stays a map
-    only if nonempty, matching the engine's props-null convention)."""
-    out = _strip_keys_keepempty(props, *keys)
-    return F.when(F.size(out) > 0, out).otherwise(F.lit(None))
+# Mark sets up to this many label-slice rows broadcast into the mark join;
+# a mark set is data-dependent (a permissive estate can expose a large
+# fraction of all instances), so above the ceiling the hint is dropped and
+# AQE picks the strategy — same gate as GraphStore.BROADCAST_DELETE_MAX_IDS.
+BROADCAST_MARKS_MAX_IDS = 10_000_000
 
 
-def _strip_keys_keepempty(props, *keys):
-    """Like _strip_keys but never NULL — the safe left arg for map_concat
-    (map_concat(NULL, m) is NULL, which would silently drop the mark)."""
-    return F.map_filter(
-        F.coalesce(props, F.create_map().cast("map<string,string>")),
-        lambda k, _: ~k.isin(*keys),
-    )
-
-
-def mark_foreign_accounts(
-    store: GraphStore, spark: SparkSession, sf_dir: str, update_tag: int
+def _mark(
+    store: GraphStore,
+    stage: str,
+    update_tag: int,
+    keys: list[str],
+    marks: dict[str, DataFrame],
 ) -> None:
-    """aws_foreign_accounts.json: accounts without ``inscope`` get
-    ``foreign=true``; inscope accounts lose any stale ``foreign`` mark.
-    One AWSAccount-slice rewrite (both reference statements in one pass)."""
-    accts = store.nodes(labels=["AWSAccount"])
-    inscope = F.element_at("props", "inscope").isNotNull()
-    marked = F.map_concat(
-        _strip_keys_keepempty(F.col("props"), "foreign"),
-        F.create_map(F.lit("foreign"), F.lit("true")),
+    """The clear-then-set pass of every mark-setting job (the reference
+    jobs' REMOVE-then-SET statement pairs).  ``marks`` maps a label to an
+    ``(id, marks map<string,string>)`` frame with one row per marked node;
+    every node of the label loses ``keys`` and gains its marks.  One left
+    join per label — the marks broadcast unless the slice's manifest row
+    count, which bounds them, is over BROADCAST_MARKS_MAX_IDS — and one
+    commit_partial of just those slices.  A node left with no props stores
+    NULL, never an empty map; a stage already done under ``update_tag``
+    returns first."""
+    if store.stage_done(stage, update_tag):
+        return
+    empty = F.create_map().cast("map<string,string>")
+    props = F.map_concat(
+        # strip first: map_concat raises on duplicate keys under ANSI policy
+        F.map_filter(F.coalesce("props", empty), lambda k, _: ~k.isin(*keys)),
+        F.coalesce("marks", empty),
     )
-    out = accts.withColumn(
-        "props", F.when(inscope, _strip_keys(F.col("props"), "foreign")).otherwise(marked)
-    )
+    out = []
+    for label, m in marks.items():
+        n = store.label_rowcount(label)
+        if n is None or n <= BROADCAST_MARKS_MAX_IDS:
+            m = F.broadcast(m)
+        out.append(
+            store.nodes(labels=[label])
+            .join(m, ["id"], "left")
+            .withColumn("props", F.when(F.size(props) > 0, props))
+            .drop("marks")
+        )
     store.commit_partial(
-        out, None, ["AWSAccount"], [], "analysis:aws_foreign_accounts", update_tag
+        reduce(DataFrame.unionByName, out), None, list(marks), [], stage, update_tag
     )
 
 
-def mark_s3_anonymous(
-    store: GraphStore, spark: SparkSession, sf_dir: str, update_tag: int
+def _mark_label(
+    store: GraphStore,
+    stage: str,
+    update_tag: int,
+    label: str,
+    positive,
+    key: str = "exposed_internet",
 ) -> None:
+    """The flag-job shape (foreign accounts, eks/gke/k8s/rds exposure, gke
+    basic-auth):
+    ``key=true`` on the label's nodes where ``positive`` (a Column over the
+    node row) holds, cleared everywhere else."""
+    marks = (
+        store.nodes(labels=[label])
+        .where(positive)
+        .select("id", F.create_map(F.lit(key), F.lit("true")).alias("marks"))
+    )
+    _mark(store, stage, update_tag, [key], {label: marks})
+
+
+def mark_foreign_accounts(store: GraphStore, update_tag: int) -> None:
+    """aws_foreign_accounts.json: accounts without ``inscope`` get
+    ``foreign=true``; inscope accounts lose any stale ``foreign`` mark
+    (both reference statements in one pass)."""
+    _mark_label(
+        store,
+        "analysis:aws_foreign_accounts",
+        update_tag,
+        "AWSAccount",
+        F.element_at("props", "inscope").isNull(),
+        key="foreign",
+    )
+
+
+def mark_s3_anonymous(store: GraphStore, update_tag: int) -> None:
     """aws_s3acl_analysis.json: buckets with a global-group ACL grant get
     anonymous_access=true + the granted action list; others lose stale marks.
 
@@ -103,27 +148,19 @@ def mark_s3_anonymous(
             ).alias("anon_actions")
         )
     )
-    buckets = store.nodes(labels=["S3Bucket"])
-    joined = buckets.join(
-        F.broadcast(global_grants),
-        buckets["id"] == global_grants["bucket_arn"],
-        "left",
+    marks = global_grants.select(
+        F.col("bucket_arn").alias("id"),
+        F.create_map(
+            F.lit("anonymous_access"), F.lit("true"),
+            F.lit("anonymous_actions"), F.col("anon_actions"),
+        ).alias("marks"),
     )
-    out = joined.withColumn(
-        "props",
-        F.when(
-            F.col("anon_actions").isNotNull(),
-            F.map_concat(
-                _strip_keys_keepempty(F.col("props"), "anonymous_access", "anonymous_actions"),
-                F.create_map(
-                    F.lit("anonymous_access"), F.lit("true"),
-                    F.lit("anonymous_actions"), F.col("anon_actions"),
-                ),
-            ),
-        ).otherwise(_strip_keys(F.col("props"), "anonymous_access", "anonymous_actions")),
-    ).drop("bucket_arn", "anon_actions")
-    store.commit_partial(
-        out, None, ["S3Bucket"], [], "analysis:aws_s3acl", update_tag
+    _mark(
+        store,
+        "analysis:aws_s3acl",
+        update_tag,
+        ["anonymous_access", "anonymous_actions"],
+        {"S3Bucket": marks},
     )
 
 
@@ -151,9 +188,7 @@ def _link(
     _cleanup_rel(store, rel_label, update_tag, stage)
 
 
-def ec2_iam_instanceprofiles(
-    store: GraphStore, spark: SparkSession, sf_dir: str, update_tag: int
-) -> None:
+def ec2_iam_instanceprofiles(store: GraphStore, update_tag: int) -> None:
     """aws_ec2_iaminstanceprofile.json: (EC2Instance)-[:STS_ASSUMEROLE_ALLOW]->
     (AWSRole) via the instance profile's trailing role name.
 
@@ -184,9 +219,7 @@ def ec2_iam_instanceprofiles(
     _link(store, stage, "STS_ASSUMEROLE_ALLOW", edges, update_tag)
 
 
-def link_humans(
-    store: GraphStore, spark: SparkSession, sf_dir: str, update_tag: int
-) -> None:
+def link_humans(store: GraphStore, update_tag: int) -> None:
     """gsuite_human_link.json analog on the Okta provider:
     (Human)-[:IDENTITY_OKTA]->(OktaUser) where human.email = okta.login,
     plus the stale-edge delete leg."""
@@ -202,9 +235,7 @@ def link_humans(
     _link(store, stage, "IDENTITY_OKTA", edges, update_tag)
 
 
-def keypair_analysis(
-    store: GraphStore, spark: SparkSession, sf_dir: str, update_tag: int
-) -> None:
+def keypair_analysis(store: GraphStore, update_tag: int) -> None:
     """aws_ec2_keypair_analysis.json: clear then recompute user_uploaded
     (47-char MD5-form fingerprint) and duplicate_keyfingerprint, plus
     MATCHING_FINGERPRINT edges between keypairs sharing a fingerprint.
@@ -222,27 +253,21 @@ def keypair_analysis(
         .groupBy("fp")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    marked = (
-        kps.withColumn("fp", fp)
+    marks = (
+        kps.select("id", fp.alias("fp"))
         .join(F.broadcast(counts), ["fp"], "left")
-        .withColumn(
-            "props",
-            F.map_concat(
-                _strip_keys_keepempty(
-                    F.col("props"), "user_uploaded", "duplicate_keyfingerprint"
+        .select(
+            "id",
+            F.map_filter(
+                F.create_map(
+                    F.lit("user_uploaded"),
+                    F.when(F.length("fp") == 47, F.lit("true")),
+                    F.lit("duplicate_keyfingerprint"),
+                    F.when(F.col("n") > 1, F.lit("true")),
                 ),
-                F.map_filter(
-                    F.create_map(
-                        F.lit("user_uploaded"),
-                        F.when(F.length("fp") == 47, F.lit("true")),
-                        F.lit("duplicate_keyfingerprint"),
-                        F.when(F.col("n") > 1, F.lit("true")),
-                    ),
-                    lambda _, v: v.isNotNull(),
-                ),
-            ),
+                lambda _, v: v.isNotNull(),
+            ).alias("marks"),
         )
-        .drop("fp", "n")
     )
     a = kps.select(F.col("id").alias("src_id"), fp.alias("fp"))
     b = kps.select(F.col("id").alias("dst_id"), fp.alias("fp"))
@@ -250,16 +275,17 @@ def keypair_analysis(
     edges = edge_rows(
         pairs, "src_id", "EC2KeyPair", "MATCHING_FINGERPRINT", "dst_id", "EC2KeyPair", update_tag
     )
-    if not store.stage_done(stage + ":marks", update_tag):
-        store.commit_partial(
-            marked, None, ["EC2KeyPair"], [], stage + ":marks", update_tag
-        )
+    _mark(
+        store,
+        stage + ":marks",
+        update_tag,
+        ["user_uploaded", "duplicate_keyfingerprint"],
+        {"EC2KeyPair": marks},
+    )
     _link(store, stage, "MATCHING_FINGERPRINT", edges, update_tag)
 
 
-def link_lambda_ecr_images(
-    store: GraphStore, spark: SparkSession, sf_dir: str, update_tag: int
-) -> None:
+def link_lambda_ecr_images(store: GraphStore, update_tag: int) -> None:
     """aws_lambda_ecr.json: (AWSLambda)-[:HAS]->(ECRImage) where
     image.digest = 'sha256:' + lambda.codesha256, plus the stale-HAS delete
     leg.  The digest equality is a plain equi-join — the reference's
@@ -279,98 +305,52 @@ def link_lambda_ecr_images(
     _link(store, stage, "HAS", edges, update_tag)
 
 
-def _mark_label(
-    store: GraphStore,
-    label: str,
-    mark_key: str,
-    positive,
-    stage: str,
-    update_tag: int,
-    extra: dict[str, str] | None = None,
-) -> None:
-    """Shared flag-job shape (eks/gke exposure, gke basic-auth): clear the
-    mark label-wide, set it where ``positive`` (a Column over the node row)
-    holds.  One label-slice rewrite."""
-    nodes = store.nodes(labels=[label])
-    marks = {mark_key: "true", **(extra or {})}
-    mark_map = F.create_map(*[c for k, v in marks.items() for c in (F.lit(k), F.lit(v))])
-    out = nodes.withColumn(
-        "props",
-        F.when(
-            positive,
-            F.map_concat(
-                _strip_keys_keepempty(F.col("props"), *marks.keys()), mark_map
-            ),
-        ).otherwise(_strip_keys(F.col("props"), *marks.keys())),
-    )
-    store.commit_partial(out, None, [label], [], stage, update_tag)
-
-
-def eks_exposure(
-    store: GraphStore, spark: SparkSession, sf_dir: str, update_tag: int
-) -> None:
+def eks_exposure(store: GraphStore, update_tag: int) -> None:
     """aws_eks_asset_exposure.json: EKSCluster.endpoint_public_access ->
     exposed_internet = true (cleared first)."""
-    stage = "analysis:aws_eks_exposure"
-    if store.stage_done(stage, update_tag):
-        return
     _mark_label(
         store,
-        "EKSCluster",
-        "exposed_internet",
-        F.element_at("props", "endpoint_public_access") == "true",
-        stage,
+        "analysis:aws_eks_exposure",
         update_tag,
+        "EKSCluster",
+        F.element_at("props", "endpoint_public_access") == "true",
     )
 
 
-def gke_exposure(
-    store: GraphStore, spark: SparkSession, sf_dir: str, update_tag: int
-) -> None:
+def gke_exposure(store: GraphStore, update_tag: int) -> None:
     """gcp_gke_asset_exposure.json: private_nodes = false OR
     private_endpoint_enabled = false OR master_authorized_networks = false
     -> exposed_internet = true."""
-    stage = "analysis:gcp_gke_exposure"
-    if store.stage_done(stage, update_tag):
-        return
     p = lambda k: F.element_at("props", k)  # noqa: E731
     _mark_label(
         store,
+        "analysis:gcp_gke_exposure",
+        update_tag,
         "GKECluster",
-        "exposed_internet",
         (p("private_nodes") == "false")
         | (p("private_endpoint_enabled") == "false")
         | (p("master_authorized_networks") == "false"),
-        stage,
-        update_tag,
     )
 
 
-def gke_basic_auth(
-    store: GraphStore, spark: SparkSession, sf_dir: str, update_tag: int
-) -> None:
+def gke_basic_auth(store: GraphStore, update_tag: int) -> None:
     """gcp_gke_basic_auth.json: masterauth username AND password both
     non-empty -> basic_auth = true."""
-    stage = "analysis:gcp_gke_basic_auth"
-    if store.stage_done(stage, update_tag):
-        return
     p = lambda k: F.element_at("props", k)  # noqa: E731
     _mark_label(
         store,
+        "analysis:gcp_gke_basic_auth",
+        update_tag,
         "GKECluster",
-        "basic_auth",
         p("masterauth_username").isNotNull()
         & (p("masterauth_username") != "")
         & p("masterauth_password").isNotNull()
         & (p("masterauth_password") != ""),
-        stage,
-        update_tag,
+        key="basic_auth",
     )
 
 
-def gcp_inet_exposure(
-    store: GraphStore, spark: SparkSession, sf_dir: str, update_tag: int
-) -> None:
+def gcp_inet_exposure(store: GraphStore, update_tag: int) -> None:
     """gcp_compute_asset_inet_exposure.json, set-wise:
 
       1. FIREWALL_INGRESS edges: INGRESS firewalls attach to instances via
@@ -484,78 +464,55 @@ def gcp_inet_exposure(
     exposed_ids = (
         pairs.where(survives).select(allows["inst_id"].alias("id")).distinct()
     )
-    inst = store.nodes(labels=["GCPInstance"])
-    has_ip = F.element_at("props", "public_ip").isNotNull()
-    marked = (
-        inst.join(F.broadcast(exposed_ids), ["id"], "left_semi")
-        .where(has_ip)
-        .withColumn(
-            "props",
-            F.map_concat(
-                _strip_keys_keepempty(
-                    F.col("props"), "exposed_internet", "exposed_internet_type"
-                ),
-                F.create_map(
-                    F.lit("exposed_internet"), F.lit("true"),
-                    F.lit("exposed_internet_type"), F.lit("direct"),
-                ),
-            ),
+    marks = (
+        store.nodes(labels=["GCPInstance"])
+        .where(F.element_at("props", "public_ip").isNotNull())
+        .join(F.broadcast(exposed_ids), ["id"], "left_semi")
+        .select(
+            "id",
+            F.create_map(
+                F.lit("exposed_internet"), F.lit("true"),
+                F.lit("exposed_internet_type"), F.lit("direct"),
+            ).alias("marks"),
         )
     )
-    rest = inst.join(
-        F.broadcast(marked.select("id")), ["id"], "left_anti"
-    ).withColumn(
-        "props",
-        _strip_keys(F.col("props"), "exposed_internet", "exposed_internet_type"),
+    _mark(
+        store,
+        stage,
+        update_tag,
+        ["exposed_internet", "exposed_internet_type"],
+        {"GCPInstance": marks},
     )
-    if not store.stage_done(stage, update_tag):
-        store.commit_partial(
-            rest.unionByName(marked), None, ["GCPInstance"], [], stage, update_tag
-        )
 
 
-def k8s_lb_exposure(
-    store: GraphStore, spark: SparkSession, sf_dir: str, update_tag: int
-) -> None:
+def k8s_lb_exposure(store: GraphStore, update_tag: int) -> None:
     """Engine-original k8s analog of the asset-exposure JSONs: LoadBalancer
     services (internet-facing ingress per reference services.py's
     load_balancer_ip/ingress fields) get exposed_internet = true."""
-    stage = "analysis:k8s_lb_exposure"
-    if store.stage_done(stage, update_tag):
-        return
     _mark_label(
         store,
-        "KubernetesService",
-        "exposed_internet",
-        F.element_at("props", "type") == "LoadBalancer",
-        stage,
+        "analysis:k8s_lb_exposure",
         update_tag,
+        "KubernetesService",
+        F.element_at("props", "type") == "LoadBalancer",
     )
 
 
-def rds_exposure(
-    store: GraphStore, spark: SparkSession, sf_dir: str, update_tag: int
-) -> None:
+def rds_exposure(store: GraphStore, update_tag: int) -> None:
     """Engine-original RDS analog: publicly accessible AND unencrypted
     instances get exposed_internet = true (the property pair reference
     rds.py loads)."""
-    stage = "analysis:aws_rds_exposure"
-    if store.stage_done(stage, update_tag):
-        return
     p = lambda k: F.element_at("props", k)  # noqa: E731
     _mark_label(
         store,
-        "RDSInstance",
-        "exposed_internet",
-        (p("publicly_accessible") == "true") & (p("storage_encrypted") == "false"),
-        stage,
+        "analysis:aws_rds_exposure",
         update_tag,
+        "RDSInstance",
+        (p("publicly_accessible") == "true") & (p("storage_encrypted") == "false"),
     )
 
 
-def link_container_images(
-    store: GraphStore, spark: SparkSession, sf_dir: str, update_tag: int
-) -> None:
+def link_container_images(store: GraphStore, update_tag: int) -> None:
     """Container -> ECRImage provenance edges (the k8s/ECS analog of
     aws_lambda_ecr.json): every KubernetesContainer / ECSContainer whose
     image digest exists in the ECRImage space gets a HAS_IMAGE edge, plus
@@ -581,9 +538,7 @@ def link_container_images(
     _link(store, stage, "HAS_IMAGE", edges, update_tag)
 
 
-def gcp_aws_dns_links(
-    store: GraphStore, spark: SparkSession, sf_dir: str, update_tag: int
-) -> None:
+def gcp_aws_dns_links(store: GraphStore, update_tag: int) -> None:
     """Cross-provider DNS resolution: a GCPRecordSet CNAME whose value is an
     AWS Route53 DNSRecord's name gets (GCPRecordSet)-[:DNS_POINTS_TO]->
     (AWSDNSRecord).  Engine-original composition of the reference's two

@@ -19,8 +19,11 @@ from cartography_spark.core.store import GraphStore
 
 @dataclass(frozen=True)
 class AnalysisJob:
+    """A named pass over the graph: ``run(store, update_tag)`` reads only
+    the store, never the extraction inputs."""
+
     name: str
-    run: Callable[[GraphStore, SparkSession, str, int], None]
+    run: Callable[[GraphStore, int], None]
 
 
 def default_jobs() -> list[AnalysisJob]:
@@ -76,12 +79,14 @@ def run_analysis_jobs(
     jobs: list[AnalysisJob] | None = None,
 ) -> list[str]:
     """Run registered analysis passes in order; each is stage-checkpointed
-    so a resumed sync skips completed jobs."""
+    so a resumed sync skips completed jobs.  The session and input-directory
+    arguments are accepted for existing positional callers and unused:
+    analysis is a function of the graph alone."""
     ran = []
     for job in jobs if jobs is not None else default_jobs():
         stage = f"analysis:{job.name}"
         if store.stage_done(stage, update_tag):
             continue
-        job.run(store, spark, sf_dir, update_tag)
+        job.run(store, update_tag)
         ran.append(job.name)
     return ran

@@ -236,11 +236,15 @@ def compile_nodes(
     # a unique-constrained key.
     if not dedupe:
         return LabeledFrame(out, [schema.label])
+    # A prop-less schema's duplicate rows are identical, so any one may win.
+    # Hashing its constant NULL props would also be constant-folded on the
+    # driver, where the concurrent node and edge writes of one commit, whose
+    # plans share this expression, race on one to_json evaluator.
+    order = "xxhash64(to_json(struct(props)))" if schema.properties else "id"
     return LabeledFrame(
         out.selectExpr(
             "*",
-            "row_number() OVER (PARTITION BY id ORDER BY"
-            " xxhash64(to_json(struct(props))) DESC) AS _rn",
+            f"row_number() OVER (PARTITION BY id ORDER BY {order} DESC) AS _rn",
         )
         .where("_rn = 1")
         .drop("_rn"),

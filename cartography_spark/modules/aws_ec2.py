@@ -10,15 +10,14 @@ Parity map (reference cartography/intel/aws/ec2/):
     data/jobs/analysis/aws_ec2_iaminstanceprofile.json
 
 The exposure analysis (analysis/exposure.py) walks exactly these node
-families; promoting them to first-class schemas is what lets the analysis
-registry run against the store instead of re-deriving fixtures.
+families in the store.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from cartography_spark.core.loader import compile_edges, compile_nodes, load
+from cartography_spark.core.loader import load
 from cartography_spark.core.model import (
     LinkDirection,
     NodeSchema,
@@ -123,22 +122,14 @@ def sync_ec2(
     update_tag: int,
 ) -> None:
     """SGs first (instances and rules attach to them), then instances, then
-    rule nodes + IpRange links — the reference's intra-module dependency
-    order (intel/aws/ec2/__init__.py)."""
+    rule nodes with their IpRange nodes and links in one stage — the
+    reference's intra-module dependency order (intel/aws/ec2/__init__.py)."""
     load(store, "aws:ec2:sgs", update_tag, (security_groups, EC2_SG_SCHEMA))
     load(store, "aws:ec2:instances", update_tag, (instances, EC2_INSTANCE_SCHEMA))
-    if not store.stage_done("aws:ec2:rules", update_tag):
-        rule_nodes = compile_nodes(rules, IP_RULE_SCHEMA, update_tag)
-        rule_edges = compile_edges(rules, IP_RULE_SCHEMA, store.nodes, update_tag)
-        range_nodes = compile_nodes(rules, IP_RANGE_SCHEMA, update_tag)
-        store.upsert(
-            rule_nodes.unionByName(range_nodes), rule_edges, "aws:ec2:rules", update_tag
-        )
-    if not store.stage_done("aws:ec2:ranges", update_tag):
-        # range->rule edges need the rule nodes committed first
-        store.upsert(
-            None,
-            compile_edges(rules, IP_RANGE_SCHEMA, store.nodes, update_tag),
-            "aws:ec2:ranges",
-            update_tag,
-        )
+    load(
+        store,
+        "aws:ec2:rules",
+        update_tag,
+        (rules, IP_RULE_SCHEMA),
+        (rules, IP_RANGE_SCHEMA),
+    )

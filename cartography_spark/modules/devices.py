@@ -24,6 +24,7 @@ reference's cross-feed CVE dedupe behavior.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from cartography_spark.core.loader import load
 from cartography_spark.core.model import (
@@ -133,8 +134,12 @@ SNIPEIT_ASSET_SCHEMA = NodeSchema(
 
 
 def _single(spark, **cols):
-    """One-row frame for a fixed tenant or root node."""
-    return spark.createDataFrame([cols])
+    """One-row frame for a fixed tenant or root node, built from literals on
+    the JVM in one split (a local Python row would plan as a Python RDD
+    scan)."""
+    return spark.range(1, numPartitions=1).select(
+        *[F.lit(v).alias(k) for k, v in cols.items()]
+    )
 
 
 def sync_devices(

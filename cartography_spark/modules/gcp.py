@@ -199,31 +199,13 @@ def sync_gcp(
     load(store, "gcp:instances", update_tag, (instances, GCP_INSTANCE_SCHEMA))
     if vpcs is not None:
         load(store, "gcp:vpcs", update_tag, (vpcs, GCP_VPC_SCHEMA))
-    if firewalls is not None and not store.stage_done("gcp:firewalls", update_tag):
-        fw_nodes = compile_nodes(firewalls, GCP_FIREWALL_SCHEMA, update_tag)
-        tag_nodes = compile_nodes(
-            firewalls.where(F.col("target_tag").isNotNull()),
-            GCP_TARGET_TAG_SCHEMA,
-            update_tag,
-        )
-        store.upsert(
-            fw_nodes.unionByName(tag_nodes),
-            compile_edges(firewalls, GCP_FIREWALL_SCHEMA, store.nodes, update_tag),
+    if firewalls is not None:
+        load(
+            store,
             "gcp:firewalls",
             update_tag,
-        )
-    if firewalls is not None and not store.stage_done("gcp:target_tags", update_tag):
-        # TARGET_TAG edges need the firewall nodes committed first
-        store.upsert(
-            None,
-            compile_edges(
-                firewalls.where(F.col("target_tag").isNotNull()),
-                GCP_TARGET_TAG_SCHEMA,
-                store.nodes,
-                update_tag,
-            ),
-            "gcp:target_tags",
-            update_tag,
+            (firewalls, GCP_FIREWALL_SCHEMA),
+            (firewalls.where(F.col("target_tag").isNotNull()), GCP_TARGET_TAG_SCHEMA),
         )
     if fw_rules is not None and not store.stage_done("gcp:fw_rules", update_tag):
         rule_nodes = compile_nodes(fw_rules, GCP_IP_RULE_SCHEMA, update_tag)
@@ -242,22 +224,13 @@ def sync_gcp(
         store.upsert(
             rule_nodes, allowed.unionByName(denied), "gcp:fw_rules", update_tag
         )
-    if instance_net is not None and not store.stage_done("gcp:instance_net", update_tag):
-        tag_nodes = compile_nodes(instance_net, GCP_NETWORK_TAG_SCHEMA, update_tag)
-        store.upsert(
-            compile_nodes(instance_net, GCP_INSTANCE_NET_SCHEMA, update_tag).unionByName(
-                tag_nodes
-            ),
-            None,
+    if instance_net is not None:
+        load(
+            store,
             "gcp:instance_net",
             update_tag,
-        )
-    if instance_net is not None and not store.stage_done("gcp:instance_net_edges", update_tag):
-        store.upsert(
-            None,
-            compile_edges(instance_net, GCP_INSTANCE_NET_SCHEMA, store.nodes, update_tag),
-            "gcp:instance_net_edges",
-            update_tag,
+            (instance_net, GCP_INSTANCE_NET_SCHEMA),
+            (instance_net, GCP_NETWORK_TAG_SCHEMA),
         )
     if gke is not None:
         load(store, "gcp:gke", update_tag, (gke, GKE_CLUSTER_SCHEMA))

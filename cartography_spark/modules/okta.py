@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cartography_spark.core.loader import compile_edges, compile_nodes, edge_rows, load
+from cartography_spark.core.loader import compile_edges, edge_rows, load
 from cartography_spark.core.model import (
     LinkDirection,
     NodeSchema,
@@ -235,20 +235,22 @@ def sync_okta_breadth(
     """Applications (+reply URIs, +group/user assignments), MFA factors,
     admin roles, trusted origins — the reference's remaining okta/ modules
     (applications.py, factors.py, roles.py, origins.py)."""
-    if not store.stage_done("okta:applications", update_tag):
-        nodes = compile_nodes(applications, APPLICATION_SCHEMA, update_tag).unionByName(
-            compile_nodes(applications, REPLY_URI_SCHEMA, update_tag)
-        )
-        edges = compile_edges(applications, APPLICATION_SCHEMA, store.nodes, update_tag)
-        store.upsert(nodes, edges, "okta:applications", update_tag)
+    load(
+        store,
+        "okta:applications",
+        update_tag,
+        (applications, APPLICATION_SCHEMA),
+        (applications, REPLY_URI_SCHEMA),
+    )
     if not store.stage_done("okta:app_links", update_tag):
-        # reply-uri + user->app edges need the app nodes committed/visible
-        edges = compile_edges(
-            applications, REPLY_URI_SCHEMA, store.nodes, update_tag
-        ).unionByName(
-            compile_edges(app_users, APP_USER_SCHEMA, store.nodes, update_tag)
+        # APP_USER_SCHEMA's label is OktaUser: a load would write user rows,
+        # so the user->app edges stay a hand-written upsert
+        store.upsert(
+            None,
+            compile_edges(app_users, APP_USER_SCHEMA, store.nodes, update_tag),
+            "okta:app_links",
+            update_tag,
         )
-        store.upsert(None, edges, "okta:app_links", update_tag)
     load(store, "okta:factors", update_tag, (factors, FACTOR_SCHEMA))
     load(store, "okta:roles", update_tag, (admin_roles, ADMIN_ROLE_SCHEMA))
     load(store, "okta:origins", update_tag, (origins, TRUSTED_ORIGIN_SCHEMA))

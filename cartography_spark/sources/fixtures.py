@@ -2385,6 +2385,47 @@ def ec2_asgs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @plan_memo
+def exposure_topology(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """The asset-exposure operators' inputs (analysis/exposure.py) straight
+    from the fixtures at variant t1 — what the gated exposure queries feed
+    them; a sync feeds the same operators projections of the stored graph.
+
+    Keys and columns: instances (instance_id, sg_id, listener_port); rules
+    (sg_id, fromport, toport, cidr); enis (eni_id, instance_id, sg_id);
+    elbs / elbv2s (lb_id, scheme, sg_id, listener_port; a classic ELB's
+    source group resolves by name); elb_targets / elbv2_targets (lb_id,
+    instance_id); asg_members (asg_arn, instance_id)."""
+    elbs = elb_load_balancers(spark, sf_dir)
+    elbv2s = elbv2_load_balancers(spark, sf_dir)
+    # name -> sg_id through the SG dimension (broadcast: dimension-sized)
+    sgs = ec2_security_groups(spark, sf_dir).select(F.col("name").alias("sg_name"), "sg_id")
+
+    def targets(lbs: DataFrame, id_col: str) -> DataFrame:
+        return lbs.select(
+            F.col(id_col).alias("lb_id"),
+            F.explode(F.array("target_instance_1", "target_instance_2")).alias("instance_id"),
+        )
+
+    return {
+        "instances": ec2_instances(spark, sf_dir).select("instance_id", "sg_id", "listener_port"),
+        "rules": ec2_sg_rules(spark, sf_dir).select("sg_id", "fromport", "toport", "cidr"),
+        "enis": ec2_network_interfaces(spark, sf_dir).select("eni_id", "instance_id", "sg_id"),
+        "elbs": elbs.select(F.col("elb_id").alias("lb_id"), "scheme", "sg_name", "listener_port")
+        .join(F.broadcast(sgs), ["sg_name"], "inner")
+        .drop("sg_name"),
+        "elbv2s": elbv2s.select(
+            F.col("elbv2_id").alias("lb_id"), "scheme", "sg_id", "listener_port"
+        ),
+        "elb_targets": targets(elbs, "elb_id"),
+        "elbv2_targets": targets(elbv2s, "elbv2_id"),
+        "asg_members": ec2_asgs(spark, sf_dir).select(
+            "asg_arn",
+            F.explode(F.array("member_instance_1", "member_instance_2")).alias("instance_id"),
+        ),
+    }
+
+
+@plan_memo
 def ebs_volumes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EBS volumes, one per supplier instance (reference
     models/aws/ec2/volumes.py: EBSVolume{id} with account RESOURCE and

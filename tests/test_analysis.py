@@ -1,5 +1,10 @@
 """Analysis passes: exposure range join, drift states, orphan cleanup."""
 
+import json
+import shutil
+import tempfile
+
+import pytest
 from pyspark.sql import functions as F
 
 from cartography_spark.analysis.drift import (
@@ -9,17 +14,74 @@ from cartography_spark.analysis.drift import (
     split_multi_value,
 )
 from cartography_spark.analysis.exposure import exposed_instances, mark_exposure
+from cartography_spark.core.store import BufferedSyncStore, GraphStore
+from cartography_spark.sources import fixtures as fx
 from tests.conftest import SF_DIR
 
 T1, T2 = 111111111, 222222222
+NODE_DDL = (
+    "id string, label string, props map<string,string>, extra_labels array<string>,"
+    " firstseen long, lastupdated long"
+)
+
+
+@pytest.fixture(scope="module")
+def synced_root(spark):
+    """One store holding the EC2 / network / ELB / ASG family at sf0.001 after
+    T1 — the graph the exposure pass walks.  Tests mark a private copy."""
+    from cartography_spark.modules.aws_base import sync_accounts
+    from cartography_spark.modules.aws_ec2 import sync_ec2
+    from cartography_spark.modules.aws_ec2_network import sync_asgs, sync_ec2_network
+    from cartography_spark.modules.aws_elb import sync_elb
+
+    root = tempfile.mkdtemp(prefix="graphstore_exposure_")
+    st = BufferedSyncStore(GraphStore(spark, root, write_partitions=2))
+    sync_accounts(st, fx.aws_accounts(spark, SF_DIR), T1)
+    sync_ec2(
+        st,
+        fx.ec2_instances(spark, SF_DIR),
+        fx.ec2_security_groups(spark, SF_DIR),
+        fx.ec2_sg_rules(spark, SF_DIR),
+        T1,
+    )
+    sync_ec2_network(
+        st,
+        fx.ec2_vpcs(spark, SF_DIR),
+        fx.ec2_subnets(spark, SF_DIR),
+        fx.ec2_network_interfaces(spark, SF_DIR),
+        T1,
+    )
+    sync_elb(st, fx.elb_load_balancers(spark, SF_DIR), fx.elbv2_load_balancers(spark, SF_DIR), T1)
+    sync_asgs(st, fx.ec2_asgs(spark, SF_DIR), T1)
+    st.flush()
+    yield root
+    shutil.rmtree(root, ignore_errors=True)
+
+
+@pytest.fixture()
+def synced(spark, synced_root, tmp_path):
+    """A private, writable copy of the module's synced store."""
+    root = str(tmp_path / "store")
+    shutil.copytree(synced_root, root)
+    return GraphStore(spark, root, write_partitions=2)
+
+
+def _types(store, label):
+    """{id: exposed_internet_type list} over the label's marked nodes."""
+    rows = (
+        store.nodes(labels=[label])
+        .where(F.element_at("props", "exposed_internet") == "true")
+        .select("id", F.element_at("props", "exposed_internet_type").alias("t"))
+        .collect()
+    )
+    return {r.id: json.loads(r.t) for r in rows}
 
 
 def test_exposure_range_join_matches_naive(spark):
     """The bin-bucketed range join must equal the naive theta-join."""
-    from cartography_spark.analysis.exposure import instances, security_group_rules
-
-    rules = security_group_rules(spark, SF_DIR).where(F.col("cidr") == "0.0.0.0/0")
-    inst = instances(spark, SF_DIR)
+    t = fx.exposure_topology(spark, SF_DIR)
+    rules = t["rules"].where(F.col("cidr") == "0.0.0.0/0")
+    inst = t["instances"]
     naive = (
         inst.join(rules, "sg_id")
         .where(
@@ -29,26 +91,18 @@ def test_exposure_range_join_matches_naive(spark):
         .select("instance_id", "sg_id", "listener_port")
         .distinct()
     )
-    binned = exposed_instances(spark, SF_DIR)
+    binned = exposed_instances(t["instances"], t["rules"])
     assert binned.exceptAll(naive).count() == 0
     assert naive.exceptAll(binned).count() == 0
     assert binned.count() > 0  # non-vacuous
 
 
-def test_mark_exposure_list_property(spark, store):
+def test_mark_exposure_list_property(spark, synced):
     """A4 list-property accumulation on the graph."""
-    inst = exposed_instances(spark, SF_DIR).limit(1).collect()
-    nodes = spark.createDataFrame(
-        [(inst[0].instance_id, "EC2Instance", None, None, None, T1)],
-        "id string, label string, props map<string,string>, extra_labels array<string>, firstseen long, lastupdated long",
-    )
-    from cartography_spark.core.loader import empty_edges
-
-    store.commit(nodes, empty_edges(spark), "seed", T1)
-    mark_exposure(store, spark, SF_DIR, T1)
-    row = store.nodes().where(F.col("id") == inst[0].instance_id).collect()[0]
-    import json
-
+    t = fx.exposure_topology(spark, SF_DIR)
+    inst = exposed_instances(t["instances"], t["rules"]).limit(1).collect()
+    mark_exposure(synced, T1)
+    row = synced.nodes().where(F.col("id") == inst[0].instance_id).collect()[0]
     types = json.loads(row.props["exposed_internet_type"])
     # a directly-exposed instance may ALSO be an exposed LB's target — the
     # accumulated list holds every applicable leg (st.2+5+6), sorted
@@ -57,7 +111,66 @@ def test_mark_exposure_list_property(spark, store):
     assert row.props["exposed_internet"] == "true"
 
 
-def test_mark_exposure_computes_each_leg_once(spark, store, monkeypatch):
+def test_mark_exposure_without_group_path_marks_nothing(spark, store):
+    """Exposure is a function of the graph: an instance the fixtures would
+    expose, stored alone with no security-group path, gets no mark."""
+    from cartography_spark.core.loader import empty_edges
+
+    t = fx.exposure_topology(spark, SF_DIR)
+    inst = exposed_instances(t["instances"], t["rules"]).limit(1).collect()[0]
+    nodes = spark.createDataFrame(
+        [(inst.instance_id, "EC2Instance", {"listener_port": str(inst.listener_port)}, None, None, T1)],
+        NODE_DDL,
+    )
+    store.commit(nodes, empty_edges(spark), "seed", T1)
+    mark_exposure(store, T1)
+    row = store.nodes().where(F.col("id") == inst.instance_id).collect()[0]
+    assert row.props == {"listener_port": str(inst.listener_port)}
+
+
+def test_asg_marks_follow_deleted_member(spark, synced):
+    """Statement 7 over the live graph: after an exposed member of a marked
+    ASG is deleted, a rerun marks each ASG with exactly the union of its
+    remaining members' types (computed here from the stored edges)."""
+    mark_exposure(synced, T1)
+    before = _types(synced, "AutoScalingGroup")
+    assert before  # 2 ASGs carry marks at sf0.001
+    # graph-derived marks equal the fixture-derived ones at T1
+    from cartography_spark.analysis.exposure import asg_exposure_types
+
+    want = {
+        r.asg_arn: r.exposure_types.split(",")
+        for r in asg_exposure_types(fx.exposure_topology(spark, SF_DIR)).collect()
+    }
+    assert before == want
+
+    def members():
+        # read per use: the delete below rewrites (and retires) this slice
+        rows = synced.edges(rel_labels=["MEMBER_AUTO_SCALE_GROUP"]).collect()
+        return [(r.dst_id, r.src_id) for r in rows]
+
+    exposed = _types(synced, "EC2Instance")
+    asg = sorted(before)[0]
+    victim = sorted(i for a, i in members() if a == asg and i in exposed)[0]
+    synced.delete(
+        spark.createDataFrame([("EC2Instance", victim)], "label string, id string"),
+        None,
+        "test:delete_member",
+        T2,
+    )
+    mark_exposure(synced, T2)
+
+    inst_types = _types(synced, "EC2Instance")
+    union: dict[str, set] = {}
+    for a, i in members():
+        union.setdefault(a, set()).update(inst_types.get(i, []))
+    want = {a: sorted(ts) for a, ts in union.items() if ts}
+    got = _types(synced, "AutoScalingGroup")
+    assert got == want
+    assert got != before  # the deletion moved the marks
+
+
+def test_mark_exposure_computes_each_leg_once(spark, synced, monkeypatch):
     """The exposure tree is one-shot per sync: each of the four legs (and the
     per-instance type aggregation) is derived exactly once inside
     mark_exposure, shared via lazy checkpoints — not re-derived per consumer
@@ -86,16 +199,46 @@ def test_mark_exposure_computes_each_leg_once(spark, store, monkeypatch):
     monkeypatch.setattr(exp, "exposed_elbv2s", counting("elbv2s"))
     monkeypatch.setattr(exp, "exposure_types", counting("types"))
 
+    mark_exposure(synced, T1)
+    assert calls == {"instances": 1, "eni": 1, "elbs": 1, "elbv2s": 1, "types": 1}, calls
+
+
+# (props before, marks, props after) per node of one label
+MARK_CASES = {
+    "null-props-marked": (None, {"k": "v"}, {"k": "v"}),
+    "unrelated-kept-mark-replaced": ({"o": "x", "k": "old"}, {"k": "new"}, {"o": "x", "k": "new"}),
+    "unrelated-kept-mark-cleared": ({"o": "x", "k": "old", "j": "1"}, None, {"o": "x"}),
+    "only-marks-cleared-to-null": ({"k": "old", "j": "1"}, None, None),
+    "null-props-unmarked": (None, None, None),
+    "second-key-only": ({"o": "x"}, {"j": "2"}, {"o": "x", "j": "2"}),
+}
+
+
+def test_mark_template_table(spark, store):
+    """The one clear-then-set template every mark-setting job runs, over one
+    label: marks land on NULL props, unrelated keys survive, a node left
+    with no props stores NULL (not {}), and a rerun under the same tag is a
+    no-op."""
+    from cartography_spark.analysis.jobs import _mark
     from cartography_spark.core.loader import empty_edges
 
-    inst = exposed_instances(spark, SF_DIR).limit(1).collect()
     nodes = spark.createDataFrame(
-        [(inst[0].instance_id, "EC2Instance", None, None, None, T1)],
-        "id string, label string, props map<string,string>, extra_labels array<string>, firstseen long, lastupdated long",
+        [(n, "Thing", before, None, None, T1) for n, (before, _, _) in MARK_CASES.items()],
+        NODE_DDL,
     )
     store.commit(nodes, empty_edges(spark), "seed", T1)
-    mark_exposure(store, spark, SF_DIR, T1)
-    assert calls == {"instances": 1, "eni": 1, "elbs": 1, "elbv2s": 1, "types": 1}, calls
+    marks = spark.createDataFrame(
+        [(n, m) for n, (_, m, _) in MARK_CASES.items() if m is not None],
+        "id string, marks map<string,string>",
+    )
+    _mark(store, "analysis:probe", T1, ["k", "j"], {"Thing": marks})
+    got = {r.id: r.props for r in store.nodes(labels=["Thing"]).collect()}
+    assert got == {n: after for n, (_, _, after) in MARK_CASES.items()}
+
+    version = store.current_meta()["version"]
+    _mark(store, "analysis:probe", T1, ["k", "j"], {"Thing": marks})
+    assert store.current_meta()["version"] == version
+    assert {r.id: r.props for r in store.nodes(labels=["Thing"]).collect()} == got
 
 
 def test_drift_states_roundtrip(spark, tmp_path):
@@ -240,7 +383,7 @@ def test_new_analysis_jobs_match_fixture_dataflow(spark, store):
         gke_basic_auth,
         gcp_inet_exposure,
     ):
-        job(store, spark, SF_DIR, T1)
+        job(store, T1)
 
     E, N = store.edges, store.nodes
 
@@ -319,7 +462,7 @@ def test_gcp_inet_exposure_nonempty_at_sf001(spark, store):
         firewalls=fx.gcp_firewalls(spark, SF01),
         fw_rules=fx.gcp_fw_rules(spark, SF01),
     )
-    gcp_inet_exposure(store, spark, SF01, T1)
+    gcp_inet_exposure(store, T1)
     got = {
         r.id
         for r in store.nodes(labels=["GCPInstance"])
@@ -355,8 +498,8 @@ def test_k8s_and_rds_exposure_marks(spark, store):
         fx.k8s_secrets(spark, SF),
         T1,
     )
-    k8s_lb_exposure(store, spark, SF, T1)
-    rds_exposure(store, spark, SF, T1)
+    k8s_lb_exposure(store, T1)
+    rds_exposure(store, T1)
 
     svc = store.nodes().where(F.col("label") == "KubernetesService")
     marked = {
@@ -414,7 +557,7 @@ def test_container_image_links(spark, store):
         fx.ecs_tasks(spark, SF),
         T1,
     )
-    link_container_images(store, spark, SF, T1)
+    link_container_images(store, T1)
 
     k8s = check_rels(store, "KubernetesContainer", "HAS_IMAGE", "ECRImage")
     ecs = check_rels(store, "ECSContainer", "HAS_IMAGE", "ECRImage")

@@ -720,6 +720,7 @@ def test_exposure_elb_legs_match_naive(spark):
         exposure_types,
     )
 
+    t = fx.exposure_topology(spark, SF)
     rules = (
         fx.ec2_sg_rules(spark, SF)
         .where(F.col("cidr") == "0.0.0.0/0")
@@ -739,7 +740,7 @@ def test_exposure_elb_legs_match_naive(spark):
         .select(F.col("elb_id").alias("lb_id"), "sg_id", "listener_port")
         .distinct()
     )
-    got_elb = exposed_elbs(spark, SF)
+    got_elb = exposed_elbs(t["elbs"], t["rules"])
     assert got_elb.exceptAll(naive_elb).count() == 0
     assert naive_elb.exceptAll(got_elb).count() == 0
     assert got_elb.count() > 0
@@ -756,16 +757,16 @@ def test_exposure_elb_legs_match_naive(spark):
         .select(F.col("elbv2_id").alias("lb_id"), "sg_id", "listener_port")
         .distinct()
     )
-    got_v2 = exposed_elbv2s(spark, SF)
+    got_v2 = exposed_elbv2s(t["elbv2s"], t["rules"])
     assert got_v2.exceptAll(naive_v2).count() == 0
     assert naive_v2.exceptAll(got_v2).count() == 0
 
     # ENI leg non-vacuous and disjoint sg space from the direct leg
-    eni = eni_exposed_instances(spark, SF)
+    eni = eni_exposed_instances(t["enis"], t["instances"], t["rules"])
     assert eni.count() > 0
 
     # every exposed-LB target instance carries the matching list entry
-    types = {r.instance_id: r.exposure_types.split(",") for r in exposure_types(spark, SF).collect()}
+    types = {r.instance_id: r.exposure_types.split(",") for r in exposure_types(t).collect()}
     elb_targets = (
         fx.elb_load_balancers(spark, SF)
         .join(got_elb.select(F.col("lb_id").alias("elb_id")), "elb_id", "left_semi")
@@ -862,7 +863,7 @@ def test_github_teams_and_gcp_breadth(spark, store):
         fx.dns_nameservers(spark, SF),
         T1,
     )
-    gcp_aws_dns_links(store, spark, SF, T1)
+    gcp_aws_dns_links(store, T1)
     x = check_rels(store, "GCPRecordSet", "DNS_POINTS_TO", "AWSDNSRecord")
     assert len(x) > 0
     for src, dst in x:

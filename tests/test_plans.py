@@ -118,3 +118,14 @@ def test_docs_pipeline_no_cartesian(spark):
     plan = _plan(mention_triples(spark, SF))
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
+
+
+def test_single_row_frame_plans_on_jvm(spark):
+    """A fixed tenant/root row is a literal projection over a one-split
+    range — no Python RDD scan, which costs a Python worker per partition."""
+    from cartography_spark.modules.devices import _single
+
+    df = _single(spark, tenant_id="kandji-tenant")
+    assert "ExistingRDD" not in _plan(df)
+    assert df.rdd.getNumPartitions() == 1
+    assert [r.asDict() for r in df.collect()] == [{"tenant_id": "kandji-tenant"}]

@@ -39,7 +39,7 @@ def test_analysis_registry_checkpoints(spark, store):
 
     calls = []
 
-    def job(st, sp, sf, tag):
+    def job(st, tag):
         calls.append(tag)
         # commit so the stage checkpoint records
         st.commit(st.nodes(), st.edges(), "analysis:probe", tag)

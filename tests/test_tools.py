@@ -94,3 +94,29 @@ def test_loc_counts_code_lines_only(tmp_path, capsys):
     assert loc.count(str(src)) == 5
     loc.main([str(tmp_path)])
     assert capsys.readouterr().out.splitlines()[-1].split() == ["5", "total"]
+
+
+def test_analysis_imports_no_extraction_inputs():
+    """Analysis is a function of the graph: no module under
+    ``cartography_spark/analysis/`` imports ``cartography_spark.sources``
+    (checked on the source text; nothing is imported or run)."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(TOOLS).parent / "cartography_spark" / "analysis"
+    banned = "cartography_spark.sources"
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                base = "cartography_spark.analysis".split(".")
+                mod = ".".join(base[: len(base) - node.level + 1] if node.level else [])
+                mod = ".".join(p for p in (mod, node.module or "") if p)
+                names = [mod] + [f"{mod}.{a.name}" for a in node.names]
+            else:
+                continue
+            if any(n == banned or n.startswith(banned + ".") for n in names):
+                found.append(f"{path.name}:{node.lineno}")
+    assert pkg.is_dir() and not found, found
